@@ -545,27 +545,6 @@ def q_duplicate_spans(spark, sf_dir):
     return duplicate_spans(d, n=6).join(decontaminate(d, bmk, n=8), "doc_id")
 
 
-def q_lang_id(spark, sf_dir):
-    """Stopword-marker language ID with deterministic tie-break."""
-    from frontier_engine.textops import lang_id
-
-    return lang_id(_t(spark, sf_dir, "documents"))
-
-
-def q_quality_score(spark, sf_dir):
-    """C4/Gopher-style quality features."""
-    from frontier_engine.textops import quality_score
-
-    return quality_score(_t(spark, sf_dir, "documents"))
-
-
-def q_token_counts(spark, sf_dir):
-    """Whitespace + regex-BPE-ish token counting."""
-    from frontier_engine.textops import token_counts
-
-    return token_counts(_t(spark, sf_dir, "documents"))
-
-
 def q_text_metrics(spark, sf_dir):
     """CONSOLIDATED correctness row covering SIX text-analysis operators
     (lang_id + quality_score + token_counts + doc_fingerprint + the r4
@@ -637,21 +616,6 @@ def q_sessionize(spark, sf_dir):
     b = q_events_sessionize(spark, sf_dir).withColumn("mode", F.lit("batch"))
     s = q_stream_sessionize(spark, sf_dir).withColumn("mode", F.lit("stream"))
     return b.unionByName(s)
-
-
-def q_ann_brute_topk(spark, sf_dir):
-    """Brute-force cosine top-10 vs the vec_id=0 query vector (exact ANN
-    baseline). Double arithmetic, rounded to 6."""
-    from frontier_engine.similarity import cosine, _as_double
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") == 0).select(
-        _as_double(F.col("embedding")).alias("qvec")
-    )
-    scored = e.crossJoin(F.broadcast(q)).select(
-        "vec_id", F.round(cosine(_as_double(F.col("embedding")), F.col("qvec")), 6).alias("cos")
-    )
-    return scored.orderBy(F.desc("cos"), F.col("vec_id")).limit(10)
 
 
 def q_price_sweep(spark, sf_dir):
@@ -829,14 +793,6 @@ def q_simhash_pairs(spark, sf_dir):
     ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
-def q_doc_fingerprint(spark, sf_dir):
-    """Order-sensitive chained-block fingerprint per doc (md5 chain — the
-    SQL-recomputable twin of textops.doc_fingerprint)."""
-    from frontier_engine.textops import doc_fingerprint_md5
-
-    return doc_fingerprint_md5(_t(spark, sf_dir, "documents"))
-
-
 def q_url_canonicalize(spark, sf_dir):
     """CONSOLIDATED URL-normalization row (r5): two op-tagged parts over
     (op, url, out_url, n_hops, resolved).
@@ -936,20 +892,6 @@ def q_seen_bloom(spark, sf_dir):
     return unseen.select("url")
 
 
-def q_lsh_ann(spark, sf_dir):
-    """Approximate ANN: multi-probe random-hyperplane LSH top-10, checked
-    against the exact brute-force top-10 on a corpus with genuine near
-    neighbors — ten SQL-derivable planted vectors 0.95·v0 + 0.05·vi
-    (cos ≈ 0.9986 to the query; a random corpus's own 'top-10' sit at
-    cos ≈ 0.2 where bucketed ANN is the wrong tool by design). The same
-    mixtures are rebuilt by the oracle, so LSH recall of the true top-10
-    is verified end-to-end."""
-    from frontier_engine.similarity import lsh_topk
-
-    uni, _mix, qv = _ann_universe(spark, sf_dir)
-    return lsh_topk(uni, qv, k=10, probe_hamming=2)
-
-
 def _ann_universe(spark, sf_dir):
     """Corpus + ten planted near neighbors of v0 (0.95·v0 + 0.05·vi) —
     the SQL-derivable evaluation set shared by lsh_ann / ivf_ann.
@@ -973,17 +915,6 @@ def _ann_universe(spark, sf_dir):
     )
     uni = e.select("vec_id", _as_double(F.col("embedding")).alias("embedding"), "label").unionByName(mixtures)
     return _spread(uni, "vec_id"), mixtures, qv
-
-
-def q_ivf_ann(spark, sf_dir):
-    """IVF-Flat ANN (coarse k-means quantizer, n_probe of n_lists
-    scanned — the partition-pruned scale path): top-10 over the
-    planted-neighbor corpus must equal exact brute force (same oracle
-    as lsh_ann)."""
-    from frontier_engine.similarity import ivf_topk
-
-    uni, _mix, qv = _ann_universe(spark, sf_dir)
-    return ivf_topk(uni, qv, k=10, n_lists=16, n_probe=4)
 
 
 def q_ivf_topk_join(spark, sf_dir):

@@ -15,21 +15,42 @@ Round r:
 Frontier state is merge-on-read (VERDICT round-1 item #6 — never rewrite
 the frontier per round):
 
-* ``frontier_base`` — full rows, written at round 0 and at compactions;
-* ``frontier_delta/snap-r`` — ONLY round r's newly discovered rows;
-* ``status_log/snap-r`` — ONLY round r's (url_hash, new_status) facts
+* ``frontier_base`` — full rows, written at the first commit and at folds;
+* ``frontier_delta/snap-n`` — ONLY that commit's newly discovered rows;
+* ``status_log/snap-n`` — ONLY that commit's (url_hash, new_status) facts
   (pending→fetched|missing; a url enters the log at most once ever);
 * pending view = (base ∪ deltas) ⋈ status_log (left; log side is
   O(fetched-so-far) and folds into the base when it outgrows
   ``cfg.frontier_compact_ratio`` — Iceberg MERGE's copy-on-write,
   amortized).
 
-Per-round commit bytes therefore scale with the BATCH, not the frontier;
-the exact-seen table lives in seen_store (bucketed base + deltas) with
-the same property. The loop is resumable: state lives in the snapshot
-store, never in driver memory (the reference's scalability wall,
-airbnb.py:48,51). Checkpointing every round also truncates DataFrame
-lineage, which is what makes a long crawl's plans stay bounded.
+The seen-set shard blobs are a second merge-on-read chain
+(:class:`_ShardState`, folded at ``COMPACT_CHAIN`` deltas) and the exact
+seen table lives in seen_store (bucketed base + deltas), so per-round
+commit bytes scale with the BATCH, not the frontier.
+
+One state machine, two drivers. :class:`_CrawlState` owns the state
+(frontier chain, shard chain, seen store, discovered_seq offset) and the
+only steps that touch it:
+
+* ``load(manifest)`` — adopt a published snapshot (both resumes);
+* ``ingest(cands, r)`` — seen-filter round r's discoveries, assign their
+  sequence numbers, append them to the seen store;
+* ``schedule()`` — rank the pending view into the next batch;
+* ``commit(snap, meta, new_rows, shards_dirty, status)`` — the commit
+  policy: the first commit writes the frontier base; later ones write
+  deltas + status facts, or fold a chain into a fresh base once its
+  trigger fires; then advance both chains, stamp the ``frontier`` /
+  ``shards`` / ``seen_exact`` state and ``seq_offset`` into the
+  manifest meta and publish.
+
+:func:`run_crawl` is a loop of ingest → schedule → fetch/parse/outputs →
+commit; ``streaming.run_crawl_stream`` calls the same steps from its
+``foreachBatch``, splitting each round into an ingest commit and a
+round-boundary (status) commit. The loop is resumable: state lives in
+the snapshot store, never in driver memory (the reference's scalability
+wall, airbnb.py:48,51). Checkpointing every round also truncates
+DataFrame lineage, which is what makes a long crawl's plans stay bounded.
 """
 
 from __future__ import annotations
@@ -115,19 +136,20 @@ class _FrontierState:
             list(meta["status_paths"]), int(meta["base_rows"]), int(meta["status_rows"]),
         )
 
-    def view(self) -> DataFrame:
-        """Current frontier: rows ∪ deltas with the status log applied.
-        The log holds ≤1 row per url_hash (a url is fetched at most once
+    def view(self, status: DataFrame | None = None) -> DataFrame:
+        """Current frontier: rows ∪ deltas with the status log applied,
+        then *status* (a commit's not-yet-written facts) if given. The
+        log holds ≤1 row per url_hash (a url is fetched at most once
         ever), so a left join + coalesce is the exact MERGE semantics."""
         fr = self.spark.read.parquet(*(self.base_paths + self.delta_paths))
-        if not self.status_paths:
-            return fr
-        slog = self.spark.read.parquet(*self.status_paths)
-        return (
-            fr.join(slog, "url_hash", "left")
-            .withColumn("status", F.coalesce("new_status", "status"))
-            .drop("new_status")
-        )
+        logs = [self.spark.read.parquet(*self.status_paths)] if self.status_paths else []
+        for slog in logs + ([status] if status is not None else []):
+            fr = (
+                fr.join(slog, "url_hash", "left")
+                .withColumn("status", F.coalesce("new_status", "status"))
+                .drop("new_status")
+            )
+        return fr
 
     def should_compact(self, ratio: float) -> bool:
         total = self.base_rows or 1
@@ -163,6 +185,15 @@ class _ShardState:
 
     def should_compact(self) -> bool:
         return len(self.delta_paths) >= self.COMPACT_CHAIN
+
+    def advance(self, path: str, folded: bool) -> None:
+        """Record a written shard dir: a fold (or the first write) is the
+        new base, anything else the newest delta. A replayed write lands
+        on its own path again and is not chained twice."""
+        if folded or self.base_path is None:
+            self.base_path, self.delta_paths = path, []
+        elif path != self.base_path and path not in self.delta_paths:
+            self.delta_paths.append(path)
 
 
 def _ingest_candidates(
@@ -245,6 +276,164 @@ def _ingest_candidates(
     )
 
 
+class _CrawlState:
+    """The crawl's durable state — merge-on-read frontier, shard chain,
+    exact-seen store and the discovered_seq offset — and the steps both
+    drivers run on it: ``ingest`` → ``schedule`` → ``commit``."""
+
+    def __init__(self, spark: SparkSession, store: SnapshotStore, pages: DataFrame,
+                 cfg: EngineConfig):
+        self.spark, self.store, self.cfg = spark, store, cfg
+        self.rules = rules_from_pages(pages, cfg).cache()
+        self.rules.count()
+        self.seen_root = os.path.join(store.root, "seen_exact_store")
+        self.seen = SeenExactStore(
+            spark, self.seen_root, n_buckets=cfg.seen_exact_buckets,
+            compact_ratio=cfg.seen_compact_ratio,
+        )
+        self.fstate: _FrontierState | None = None  # set by the first commit
+        self.sstate = _ShardState(spark, None, [])
+        self.shards = S.empty_shards(spark)
+        self.seq = 0
+
+    def load(self, man: dict) -> dict:
+        """Adopt the state a published manifest records; returns its meta."""
+        meta = man["meta"]
+        self.seen = SeenExactStore.from_meta(self.spark, self.seen_root, meta["seen_exact"])
+        self.seen.compact_ratio = self.cfg.seen_compact_ratio
+        self.fstate = _FrontierState.from_meta(self.spark, meta["frontier"])
+        self.sstate = _ShardState.from_meta(
+            self.spark, meta.get("shards", {}),
+            legacy_path=man["tables"].get("seen_shards", {}).get("path"),
+        )
+        self.shards = self.sstate.view()
+        self.seq = int(meta["seq_offset"])
+        return meta
+
+    def ingest(self, cands: DataFrame, rnd: int) -> tuple[DataFrame, DataFrame, DataFrame,
+                                                          DataFrame]:
+        """Ingest round *rnd*'s discoveries: seen-filter them, assign their
+        discovered_seq and record them in the exact-seen store. Returns
+        (new_rows, blocked, shards_dirty, cache_handle); the caller passes
+        the first three to ``commit`` and unpersists the handle after."""
+        pending, blocked, shards_dirty, unseen, n_new, cache_handle = _ingest_candidates(
+            cands, self.shards, self.seen.parts(), self.rules, self.cfg, self.seq
+        )
+        self.seen.append(unseen, rnd, n_new=n_new)
+        self.seq += n_new
+        return pending.unionByName(blocked), blocked, shards_dirty, cache_handle
+
+    def schedule(self) -> tuple[DataFrame, int]:
+        """Rank the pending frontier into the next batch (cached; already
+        released when it is empty)."""
+        pending = self.fstate.view().where(F.col("status") == "pending")
+        delay_dim = self.rules.select("host", "crawl_delay_s", "max_concurrency")
+        batch = rank_batch(
+            pending.join(F.broadcast(delay_dim), "host", "left"), self.cfg
+        ).drop("crawl_delay_s", "max_concurrency").cache()
+        n_batch = batch.count()
+        if n_batch == 0:
+            batch.unpersist()
+        return batch, n_batch
+
+    def commit(self, snap_id: int, meta: dict, new_rows: DataFrame | None = None,
+               shards_dirty: DataFrame | None = None,
+               status: DataFrame | None = None) -> dict:
+        """Commit *new_rows* (frontier rows), *shards_dirty* (dirty shard
+        blobs) and *status* (url_hash → new_status facts) as snapshot
+        *snap_id*, folding each chain into a fresh base once its trigger
+        fires; then advance the states, stamp them into the manifest
+        meta and publish. The first commit writes the frontier base."""
+        tables = {}
+        if self.fstate is None:
+            tables["frontier_base"] = new_rows
+        elif new_rows is not None or status is not None:
+            if self.fstate.should_compact(self.cfg.frontier_compact_ratio):
+                # fold log + deltas into a fresh base (bounded, amortized
+                # rewrite); THIS commit's status facts fold in too
+                base = self.fstate.view(status)
+                tables["frontier_base"] = base if new_rows is None else base.unionByName(new_rows)
+            else:
+                if new_rows is not None:
+                    tables["frontier_delta"] = new_rows
+                if status is not None:
+                    tables["status_log"] = status
+        # dirty shards only (round-3): untouched blobs ride the manifest;
+        # the chain folds with the not-yet-written dirty frame as newest
+        sfold = shards_dirty is not None and self.sstate.should_compact()
+        if sfold:
+            tables["seen_shards"] = S.resolve_shards(
+                self.spark, self.sstate.base_path, self.sstate.delta_paths,
+                extra_df=shards_dirty,
+            )
+        elif shards_dirty is not None:
+            tables["seen_shards"] = shards_dirty
+        entry = self.store.commit(
+            snap_id, tables, meta=dict(meta, seq_offset=self.seq), finalize=False
+        )
+        written = entry["tables"]
+        if "frontier_base" in written:
+            binfo = written["frontier_base"]
+            self.fstate = _FrontierState(self.spark, [binfo["path"]], [], [],
+                                         base_rows=binfo["rows"], status_rows=0)
+        if "frontier_delta" in written:
+            self.fstate.delta_paths.append(written["frontier_delta"]["path"])
+            self.fstate.base_rows += int(written["frontier_delta"]["rows"])
+        if "status_log" in written:
+            self.fstate.status_paths.append(written["status_log"]["path"])
+            self.fstate.status_rows += int(written["status_log"]["rows"])
+        if "seen_shards" in written:
+            self.sstate.advance(written["seen_shards"]["path"], sfold)
+        entry["meta"]["frontier"] = self.fstate.to_meta()
+        entry["meta"]["shards"] = self.sstate.to_meta()
+        entry["meta"]["seen_exact"] = self.seen.to_meta()
+        self.store.publish(entry)
+        if "seen_shards" in written:
+            self.shards = self.sstate.view()
+        return entry
+
+
+def _seed_candidates(seeds: DataFrame) -> DataFrame:
+    return seeds.select(
+        F.col("url"),
+        F.lit("").alias("parent_url"),
+        F.lit(0).alias("depth"),
+        F.lit(0.0).alias("listing_score"),
+    )
+
+
+def _fetch_and_parse(batch: DataFrame, pages: DataFrame, args: P.CrawlArgs,
+                     cfg: EngineConfig):
+    """Fetch and parse a round's batch. Returns (fetched, missing,
+    parse_round, status): ``fetched`` and the parse intermediates are
+    persisted for the caller to release; ``status`` is the round's
+    status transitions — a per-batch FACT table, not a frontier rewrite."""
+    fetched, missing = fetch_batch(batch, pages)
+    fetched = fetched.cache()
+    # one tokenization per page: rows and candidates project from the
+    # persisted per-type extraction intermediates (parse.parse_round)
+    pround = P.parse_round(fetched, args, cfg)
+    status = (
+        fetched.select("url_hash").withColumn("new_status", F.lit("fetched"))
+        .unionByName(missing.select("url_hash").withColumn("new_status", F.lit("missing")))
+    )
+    return fetched, missing, pround, status
+
+
+def _read_outputs(spark: SparkSession, out_dir: str) -> dict[str, DataFrame | None]:
+    outputs = {}
+    for name in OUTPUT_TABLES:
+        path = os.path.join(out_dir, name)
+        try:
+            # a table whose every round was empty leaves a file-less
+            # partitioned dir (nothing to infer a schema from) — treat
+            # like a missing table
+            outputs[name] = spark.read.parquet(path) if os.path.exists(path) else None
+        except Exception:
+            outputs[name] = None
+    return outputs
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -271,180 +460,57 @@ def run_crawl(
     snapshot_dir = snapshot_dir or tempfile.mkdtemp(prefix="frontier-snap-")
     store = SnapshotStore(snapshot_dir)
     out_dir = os.path.join(snapshot_dir, "outputs")
-    seen_root = os.path.join(snapshot_dir, "seen_exact_store")
-
-    rules = rules_from_pages(pages, cfg).cache()
-    rules.count()
+    state = _CrawlState(spark, store, pages, cfg)
 
     if resume:
         if resume_snap is not None:
             store.rollback(resume_snap)
-        snap_id, tables = store.load_latest(spark)
+        snap_id = store.latest_id()
         if snap_id is None:
             raise ValueError("resume=True but snapshot store is empty")
-        meta = store.manifest(snap_id)["meta"]
-        sstate = _ShardState.from_meta(
-            spark, meta.get("shards", {}),
-            legacy_path=store.manifest(snap_id)["tables"]["seen_shards"]["path"],
-        )
-        shards = sstate.view()
-        seen_store = SeenExactStore.from_meta(spark, seen_root, meta["seen_exact"])
-        seen_store.compact_ratio = cfg.seen_compact_ratio
-        fstate = _FrontierState.from_meta(spark, meta["frontier"])
-        seq_offset = int(meta["seq_offset"])
-        start_round = int(meta["round"]) + 1
+        start_round = int(state.load(store.manifest(snap_id))["round"]) + 1
     else:
         if seeds is None:
             raise ValueError("seeds required for a fresh crawl")
-        seen_store = SeenExactStore(
-            spark, seen_root, n_buckets=cfg.seen_exact_buckets,
-            compact_ratio=cfg.seen_compact_ratio,
-        )
-        seed_cands = seeds.select(
-            F.col("url"),
-            F.lit("").alias("parent_url"),
-            F.lit(0).alias("depth"),
-            F.lit(0.0).alias("listing_score"),
-        )
-        pending, blocked, new_shards, unseen, n_new, cache_handle = _ingest_candidates(
-            seed_cands, S.empty_shards(spark), [], rules, cfg, 0
-        )
-        seen_store.append(unseen, 0, n_new=n_new)
-        seq_offset = n_new
-        start_round = 1
-        entry = store.commit(
-            0,
-            {"frontier_base": pending.unionByName(blocked), "seen_shards": new_shards},
-            meta={"round": 0, "seq_offset": seq_offset},
-            finalize=False,
-        )
-        fstate = _FrontierState(
-            spark, [entry["tables"]["frontier_base"]["path"]], [], [],
-            base_rows=entry["tables"]["frontier_base"]["rows"], status_rows=0,
-        )
-        sstate = _ShardState(spark, entry["tables"]["seen_shards"]["path"], [])
-        entry["meta"]["frontier"] = fstate.to_meta()
-        entry["meta"]["seen_exact"] = seen_store.to_meta()
-        entry["meta"]["shards"] = sstate.to_meta()
-        store.publish(entry)
+        new_rows, _, shards_dirty, cache_handle = state.ingest(_seed_candidates(seeds), 0)
+        state.commit(0, {"round": 0}, new_rows=new_rows, shards_dirty=shards_dirty)
         cache_handle.unpersist()
-        shards = sstate.view()
+        start_round = 1
 
     rounds_done = start_round - 1
     for rnd in range(start_round, max_rounds + 1):
-        pending = fstate.view().where(F.col("status") == "pending")
-        delay_dim = rules.select("host", "crawl_delay_s", "max_concurrency")
-        ranked = rank_batch(
-            pending.join(F.broadcast(delay_dim), "host", "left"), cfg
-        ).drop("crawl_delay_s", "max_concurrency")
-        batch = ranked.cache()
-        n_batch = batch.count()
+        batch, n_batch = state.schedule()
         if n_batch == 0:
-            batch.unpersist()  # don't leak the cached frame on the exit path
             break
         rounds_done = rnd
 
         append_output(out_dir, "batches", batch.select("host", "url", "rank"), rnd)
+        fetched, missing, pround, status = _fetch_and_parse(batch, pages, args, cfg)
+        new_rows, new_blocked, shards_dirty, cache_handle = state.ingest(pround.candidates, rnd)
 
-        fetched, missing = fetch_batch(batch, pages)
-        fetched = fetched.cache()
-
-        # one tokenization per page: rows and candidates project from the
-        # persisted per-type extraction intermediates (parse.parse_round)
-        pround = P.parse_round(fetched, args, cfg)
-        parts = pround.parts
-        candidates = pround.candidates
-
-        new_pending, new_blocked, shards_dirty, unseen, n_new, cache_handle = _ingest_candidates(
-            candidates, shards, seen_store.parts(), rules, cfg, seq_offset
-        )
-        new_rows = new_pending.unionByName(new_blocked)
-        seq_offset += n_new
-
-        # status transitions for this round's batch — a per-batch FACT
-        # table, not a frontier rewrite
-        status_updates = (
-            fetched.select("url_hash").withColumn("new_status", F.lit("fetched"))
-            .unionByName(missing.select("url_hash").withColumn("new_status", F.lit("missing")))
-        )
-
-        for name, df in parts.items():
+        for name, df in pround.parts.items():
             append_output(out_dir, name, df, rnd)
         append_output(
             out_dir, "metrics",
             round_metrics(rnd, batch, fetched, missing, new_blocked, new_rows).drop("round"),
             rnd,
         )
+        state.commit(rnd, {"round": rnd}, new_rows=new_rows, shards_dirty=shards_dirty,
+                     status=status)
 
-        # ---- atomic delta commit -----------------------------------------
-        seen_store.append(unseen, rnd, n_new=n_new)
-        # dirty shards only (round-3): untouched blobs ride the manifest
-        scompact = sstate.should_compact()
-        shard_commit = (
-            S.resolve_shards(spark, sstate.base_path, sstate.delta_paths,
-                             extra_df=shards_dirty)
-            if scompact
-            else shards_dirty
-        )
-        tables = {"frontier_delta": new_rows, "status_log": status_updates,
-                  "seen_shards": shard_commit}
-        compact = fstate.should_compact(cfg.frontier_compact_ratio)
-        if compact:
-            # fold log+deltas into a fresh base (bounded, amortized
-            # rewrite); THIS round's status facts fold in too
-            base = (
-                fstate.view()
-                .join(status_updates, "url_hash", "left")
-                .withColumn("status", F.coalesce("new_status", "status"))
-                .drop("new_status")
-                .unionByName(new_rows)
-            )
-            tables = {"frontier_base": base, "seen_shards": shard_commit}
-        entry = store.commit(
-            rnd, tables, meta={"round": rnd, "seq_offset": seq_offset}, finalize=False
-        )
-        if compact:
-            binfo = entry["tables"]["frontier_base"]
-            fstate = _FrontierState(spark, [binfo["path"]], [], [],
-                                    base_rows=binfo["rows"], status_rows=0)
-        else:
-            fstate.delta_paths.append(entry["tables"]["frontier_delta"]["path"])
-            fstate.status_paths.append(entry["tables"]["status_log"]["path"])
-            fstate.base_rows += int(entry["tables"]["frontier_delta"]["rows"])
-            fstate.status_rows += int(entry["tables"]["status_log"]["rows"])
-        if scompact:
-            sstate = _ShardState(spark, entry["tables"]["seen_shards"]["path"], [])
-        else:
-            sstate.delta_paths.append(entry["tables"]["seen_shards"]["path"])
-        entry["meta"]["frontier"] = fstate.to_meta()
-        entry["meta"]["seen_exact"] = seen_store.to_meta()
-        entry["meta"]["shards"] = sstate.to_meta()
-        store.publish(entry)
-
-        shards = sstate.view()
         batch.unpersist()
         pround.unpersist()
         fetched.unpersist()
         cache_handle.unpersist()  # the ACTUAL persisted frame (not the derived unseen)
 
-    rules.unpersist()
-    outputs = {}
-    for name in OUTPUT_TABLES:
-        path = os.path.join(out_dir, name)
-        try:
-            # a table whose every round was empty leaves a file-less
-            # partitioned dir (nothing to infer a schema from) — treat
-            # like a missing table
-            outputs[name] = spark.read.parquet(path) if os.path.exists(path) else None
-        except Exception:
-            outputs[name] = None
+    state.rules.unpersist()
     return CrawlResult(
         rounds=rounds_done,
         store=store,
-        frontier=fstate.view(),
-        seen_exact=seen_store.as_df(),
-        seen_shards=shards,
-        outputs=outputs,
+        frontier=state.fstate.view(),
+        seen_exact=state.seen.as_df(),
+        seen_shards=state.shards,
+        outputs=_read_outputs(spark, out_dir),
     )
 
 

@@ -562,17 +562,6 @@ def _page_row(spec: WorldSpec, url: str, html: str, lang: str = "en") -> dict:
     }
 
 
-def n_review_pages(spec: WorldSpec, lid: str) -> int:
-    """Review pages that exist for a listing: first page always (the
-    reference always fetches offset 0, PdpReviews.py:17), plus one per
-    additional `limit`-sized batch (PdpReviews.py:20-23)."""
-    n_total = _h(spec.seed, "nrev", lid) % (spec.max_reviews + 1)
-    extra = max(0, -(-max(n_total - spec.reviews_limit, 0) // spec.reviews_limit))
-    if n_total > spec.reviews_limit:
-        extra = (n_total - 1) // spec.reviews_limit
-    return 1 + extra
-
-
 def generate_world(spec: WorldSpec = WorldSpec()) -> dict[str, pd.DataFrame]:
     """Build the full world. Returns dict of pandas DataFrames:
     ``pages``, ``seeds``, ``robots`` (+ ``missing`` — urls deliberately

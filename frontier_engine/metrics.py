@@ -9,7 +9,7 @@ adaptive-delay feedback (politeness ST4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -25,10 +25,6 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("new_candidates", T.LongType()),
     ]
 )
-
-
-def empty_metrics(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], METRICS_SCHEMA)
 
 
 def _per_host(df: DataFrame, name: str, extra=None) -> DataFrame:

@@ -421,11 +421,6 @@ def reviews_request_of(url: Column) -> Column:
     return F.from_json(raw, REVIEWS_VARIABLES_SCHEMA)["request"]
 
 
-def pdp_request_of(url: Column) -> Column:
-    raw = F.url_decode(F.parse_url(url, F.lit("QUERY"), F.lit("variables")))
-    return F.from_json(raw, PDP_VARIABLES_SCHEMA)["request"]
-
-
 # crawl-argument carrier — EngineConfig is politeness/pipeline config; the
 # search arguments live here (airbnb.py:29-60 constructor args)
 from dataclasses import dataclass  # noqa: E402

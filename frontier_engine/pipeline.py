@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, StringType
+from pyspark.sql.types import BooleanType
 
 from frontier_engine.config import EngineConfig
 
@@ -35,11 +35,6 @@ def ascii_repr(s: str) -> str:
     if s is None:
         return None
     return str(s.encode("ASCII", "replace"))
-
-
-@pandas_udf(StringType())
-def ascii_repr_udf(s: pd.Series) -> pd.Series:
-    return s.map(ascii_repr, na_action="ignore")
 
 
 def _regex_search_udf(pattern: str):

@@ -61,10 +61,11 @@ def norm_py(vals: list[float]) -> float:
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Dimensionality probe: length of the first vector (one tiny job);
-    None on an empty frame — callers then keep the HOF fallback path."""
-    first = df.select(vec_col).limit(1).collect()
-    if not first or first[0][0] is None:
+    """Dimensionality probe: length of the first non-null vector (one
+    tiny job); None when no row has a vector — callers then keep the HOF
+    fallback path. A null vector in the first row must not hide the rest."""
+    first = df.select(vec_col).where(F.col(vec_col).isNotNull()).limit(1).collect()
+    if not first:
         return None
     return len(first[0][0])
 

@@ -158,20 +158,6 @@ def write_xlsx(
         z.writestr("xl/worksheets/sheet1.xml", sheet)
 
 
-def merge_upsert(existing: DataFrame | None, batch: DataFrame, scrape_ts: str) -> DataFrame:
-    """S7/J5: MERGE batch INTO existing ON id (update wins), stamping
-    datetime_scrape and the coordinates geopoint struct. *scrape_ts* is an
-    explicit ISO timestamp — deterministic inputs only, no wall clock."""
-    enriched = batch.withColumn(
-        "coordinates",
-        F.struct(F.col("longitude").alias("lon"), F.col("latitude").alias("lat")),
-    ).withColumn("datetime_scrape", F.lit(scrape_ts).cast("timestamp"))
-    if existing is None:
-        return enriched
-    keep = existing.join(enriched.select("id"), "id", "left_anti")
-    return keep.unionByName(enriched, allowMissingColumns=True)
-
-
 # ---------------------------------------------------------------------------
 # CDX-style archive index (late r4): sorted SURT-keyed URL index with a
 # partition-boundary manifest for pruned point lookups — the Common

@@ -5,19 +5,24 @@ primary form is the iterative round driver (crawler.py — each round one
 DataFrame job, snapshot-committed). This module provides the streaming
 alternative for deployments that want micro-batch semantics end-to-end:
 
-* :func:`stream_pages` — a ``readStream`` over a pages directory (new
-  page files arrive as the fetch tier lands WARC conversions) with
-  ``foreachBatch`` running the SAME parse stage per micro-batch and
-  appending outputs — exactly the ST1 "each scheduling round is a
-  DataFrame job" discipline, with checkpointing delegated to the
-  streaming engine.
+* :func:`run_crawl_stream` — the full crawl as a self-feeding candidate
+  stream. Its ``foreachBatch`` runs the crawl state machine of
+  ``crawler._CrawlState`` (ingest → schedule → commit, the same fetch/
+  parse step and output sinks), so its commit, fold and manifest rules
+  are the batch driver's by construction; this file adds only the
+  stream's own rules (two-phase manifests, replay skip, metrics stash,
+  candidate-file feedback).
+* :func:`frontier_ingest_stream` — streaming seen-set ingest over the
+  crawl's shard chain (``crawler._ShardState``).
+* :func:`stream_pages` — a ``readStream`` over a pages directory with
+  ``foreachBatch`` running the shared parse stage per micro-batch.
 * :func:`windowed_fetch_metrics` — event-time tumbling windows with a
   watermark over the fetch-metrics stream (late fetch completions are
   the reference's retry stragglers, ST3); feeds the ST4 adaptive-delay
   loop.
-
-Kept deliberately thin: all logic is shared with the batch path — this
-file only adapts sources/sinks, so streaming and batch can never drift.
+* stateful operators (:func:`sessionize_stateful`,
+  :func:`dedup_stateful`) and continuous document ingestion
+  (:func:`document_ingest_stream`).
 """
 
 from __future__ import annotations
@@ -299,6 +304,7 @@ def frontier_ingest_stream(
 
     from frontier_engine import seen as S
     from frontier_engine.canon import with_canon_columns
+    from frontier_engine.crawler import _ShardState
     from frontier_engine.seen_store import SeenExactStore
 
     schema = "url string"
@@ -323,17 +329,12 @@ def frontier_ingest_stream(
     else:
         store = SeenExactStore(spark, seen_root, n_buckets=cfg.seen_exact_buckets)
         chain = []
-    state = {"chain": list(chain)}
+    # the crawl's shard chain: chain[0] is the base, the rest its deltas
+    sstate = _ShardState(spark, chain[0] if chain else None, chain[1:])
     shards_root = os.path.join(root, "shards")
-    COMPACT_CHAIN = 8
-
-    def _view():
-        if not state["chain"]:
-            return S.empty_shards(spark)
-        return S.resolve_shards(spark, state["chain"][0], state["chain"][1:])
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        shards = _view()
+        shards = sstate.view()
         cands = with_canon_columns(batch_df).dropDuplicates(["canon_url"])
         unseen = S.filter_unseen(
             cands, shards, store.parts(), cfg.n_seen_shards,
@@ -347,10 +348,9 @@ def frontier_ingest_stream(
         )
         if n:
             store.append(unseen, f"s{batch_id}", n_new=n)
-            # dirty-shard delta per micro-batch (round-3 commit-bytes
-            # fix, same LSM discipline as the batch crawler); fold the
-            # chain into a fresh base when it grows past COMPACT_CHAIN
-            fold = len(state["chain"]) >= COMPACT_CHAIN
+            # dirty-shard delta per micro-batch, folded into a fresh base
+            # on the crawl's trigger (_ShardState.should_compact)
+            fold = sstate.should_compact()
             merged = S.update_shards(
                 unseen, shards, cfg.n_seen_shards,
                 cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
@@ -358,13 +358,11 @@ def frontier_ingest_stream(
             )
             spath = os.path.join(shards_root, f"b{batch_id}")
             merged.write.mode("overwrite").parquet(spath)
-            if fold:
-                state["chain"] = [spath]
-            elif spath not in state["chain"]:  # replayed batch: same path
-                state["chain"] = state["chain"] + [spath]
+            sstate.advance(spath, fold)
             tmp = meta_path + ".tmp"
             with open(tmp, "w") as f:
-                json.dump({"seen": store.to_meta(), "shard_paths": state["chain"]}, f)
+                json.dump({"seen": store.to_meta(),
+                           "shard_paths": [sstate.base_path, *sstate.delta_paths]}, f)
             os.replace(tmp, meta_path)
         unseen.unpersist()
 
@@ -386,62 +384,40 @@ def run_crawl_stream(
     max_rounds: int = 50,
     resume: bool = False,
 ):
-    """The FULL crawl through the Structured-Streaming face (round-3):
-    each scheduling round is one micro-batch of a self-feeding candidate
-    stream, and the result must equal ``crawler.run_crawl`` exactly
-    (same batches in the same rounds, same parsed outputs, same seen
-    set — pinned by the e2e parity test).
+    """The FULL crawl through the Structured-Streaming face: each
+    scheduling round is one micro-batch of a self-feeding candidate
+    stream, and the result equals ``crawler.run_crawl`` exactly (same
+    batches in the same rounds, same outputs, same seen set — pinned by
+    the e2e parity test). Ingest, ranking, fetch/parse, commits and
+    folds are ``crawler._CrawlState``'s; only the stream's own rules
+    live here:
 
-    Shape: a ``readStream`` file source watches a candidates directory;
-    the seed list is the first file. ``foreachBatch`` runs ONE round
-    with the SAME building blocks as the batch driver (_ingest_candidates
-    → rank_batch → fetch_batch → parse_* → snapshot commit) and drops
-    the round's newly discovered candidates back into the watched
-    directory as a single parquet file — the feedback edge. The driver
-    loop re-triggers ``availableNow`` passes until a round schedules
-    nothing (frontier exhausted): no new file ⇒ the stream has drained.
+    * **Feedback edge.** A ``readStream`` file source watches a
+      candidates directory; the seed list is the first file. Each round
+      drops its discoveries back as one parquet file — EMPTY files too,
+      since a round with no discoveries must not stop the crawl while
+      pending URLs remain. The driver re-triggers ``availableNow``
+      passes until a round schedules nothing.
+    * **Two-phase commits.** A micro-batch ingests the previous round's
+      discoveries (``phase: ingest``), then runs the next round and
+      commits its status facts (``phase: round_done``). An empty
+      schedule commits a table-less ``round_done`` done marker so a
+      resume never rolls back the final discoveries.
+    * **Replay** (``resume=True``, same *snapshot_dir*): an ``ingest``
+      manifest (crash mid-batch) rolls back to its parent round
+      boundary, so the replayed batch re-ingests against pre-batch
+      state; a batch whose round fully committed (``last_batch_id`` ≥
+      batch id) is skipped.
+    * **Metrics stash.** A round's metrics row needs its fetch-side
+      counts (known when it runs) and its ingest-side counts (known at
+      the NEXT micro-batch). The round stashes the first half
+      (``metrics_stash/round-N``) and the next ingest publishes the row
+      via ``combine_metrics`` — batch-identical, the final round's row
+      included.
 
-    An EMPTY candidate file is still written after every non-empty
-    batch, because a round with zero discoveries must not stop the
-    crawl while pending URLs remain (politeness budgets spread a host's
-    backlog over many rounds). Exactly-once over candidate files is the
-    streaming engine's checkpoint contract; engine state (seen store,
-    shard blobs, frontier) rides the same snapshot manifests as the
-    batch path.
-
-    ``resume=True`` continues an interrupted stream from the same
-    *snapshot_dir*: the file-source checkpoint replays any micro-batch
-    whose offsets were not committed, and engine state reloads from the
-    snapshot manifests. Replay is made exact by two rules: (a) a
-    manifest whose ``phase`` is ``ingest`` (crash mid-batch, between the
-    ingest commit and the round's status commit) is rolled back to its
-    parent round boundary, so the replayed batch re-ingests against
-    pre-batch state (deterministic seq assignment ⇒ identical result);
-    (b) a replayed batch whose round fully committed
-    (``last_batch_id`` ≥ batch id — crash after publish but before the
-    checkpoint commit) is skipped outright, since its effects are
-    already durable. Verified by the resume == straight-through parity
-    test.
-
-    Metrics parity (ADVICE r3 fix): a round's metrics row needs both its
-    fetch-side counts (known when the round runs) and its ingest-side
-    counts (known only when its discoveries are ingested — the NEXT
-    micro-batch here). The round phase stashes the fetch-side half
-    (``metrics_stash/round-N``); the next ingest completes and publishes
-    the row via the same ``combine_metrics`` the batch driver uses, so
-    the metrics table is batch-identical — including the final round,
-    whose row lands on the done path's ingest. Pinned by the parity test.
-
-    Boundary note for ROUND-CAPPED runs: the batch driver ingests a
-    round's discoveries within that round, while the streaming face
-    ingests them in the NEXT micro-batch — so a `max_rounds`-capped
-    stream stops with the final round's discoveries still in its
-    candidate file (one ingest behind the batch driver's state), and
-    that final round's metrics row still stashed (it completes at the
-    resume's first ingest). The outputs/batches are identical either
-    way; a ``resume`` ingests the pending file and re-converges, and a
-    run-to-exhaustion is exactly equal (parity-tested, metrics
-    included).
+    A ``max_rounds``-capped stream stops one ingest behind the batch
+    driver: the final round's discoveries wait in their candidate file
+    and its metrics row in the stash, both completed by a ``resume``.
 
     Returns a dict: outputs (name → DataFrame), rounds, seen_exact,
     frontier.
@@ -451,17 +427,10 @@ def run_crawl_stream(
     import shutil
     import tempfile
 
-    from frontier_engine import seen as S
-    from frontier_engine.crawler import (
-        OUTPUT_TABLES, _FrontierState, _ShardState, _ingest_candidates, append_output,
-    )
-    from frontier_engine.fetch import fetch_batch
+    from frontier_engine import crawler as C
     from frontier_engine.metrics import (
         combine_metrics, fetch_side_metrics, ingest_side_metrics,
     )
-    from frontier_engine.robots import rules_from_pages
-    from frontier_engine.schedule import rank_batch
-    from frontier_engine.seen_store import SeenExactStore
     from frontier_engine.snapshots import SnapshotStore
 
     snapshot_dir = snapshot_dir or tempfile.mkdtemp(prefix="frontier-stream-")
@@ -471,12 +440,7 @@ def run_crawl_stream(
     mstash_dir = os.path.join(snapshot_dir, "metrics_stash")
     os.makedirs(cands_dir, exist_ok=True)
     store = SnapshotStore(snapshot_dir)
-    seen_store = SeenExactStore(
-        spark, os.path.join(snapshot_dir, "seen_exact_store"),
-        n_buckets=cfg.seen_exact_buckets, compact_ratio=cfg.seen_compact_ratio,
-    )
-    rules = rules_from_pages(pages, cfg).cache()
-    rules.count()
+    state = C._CrawlState(spark, store, pages, cfg)
 
     def _drop_cand_file(df: DataFrame, tag: str) -> None:
         tmp = os.path.join(snapshot_dir, f"cand-tmp-{tag}")
@@ -485,10 +449,7 @@ def run_crawl_stream(
         shutil.move(part, os.path.join(cands_dir, f"{tag}.parquet"))
         shutil.rmtree(tmp, ignore_errors=True)
 
-    st = {
-        "round": 0, "seq": 0, "snap": 0, "done": False, "last_batch": -1,
-        "shards": S.empty_shards(spark), "sstate": None, "fstate": None,
-    }
+    st = {"round": 0, "snap": 0, "done": False, "last_batch": -1}
     if resume:
         sid = store.latest_id()
         man = store.manifest(sid) if sid is not None else None
@@ -500,27 +461,15 @@ def run_crawl_stream(
             store.rollback(sid)
             man = store.manifest(sid)
         if man and man["meta"].get("phase") != "ingest":
-            meta = man["meta"]
-            seen_store = SeenExactStore.from_meta(
-                spark, os.path.join(snapshot_dir, "seen_exact_store"), meta["seen_exact"]
-            )
-            seen_store.compact_ratio = cfg.seen_compact_ratio
-            fstate = _FrontierState.from_meta(spark, meta["frontier"])
-            sstate = _ShardState.from_meta(spark, meta["shards"])
+            meta = state.load(man)
             st.update(
-                round=int(meta["round"]), seq=int(meta["seq_offset"]),
-                snap=int(man["snapshot_id"]),
+                round=int(meta["round"]), snap=int(man["snapshot_id"]),
                 last_batch=int(meta.get("last_batch_id", -1)),
-                sstate=sstate, fstate=fstate, shards=sstate.view(),
             )
     else:
         if seeds is None:
             raise ValueError("seeds required for a fresh streaming crawl")
-        seed_cands = seeds.select(
-            F.col("url"), F.lit("").alias("parent_url"),
-            F.lit(0).alias("depth"), F.lit(0.0).alias("listing_score"),
-        )
-        _drop_cand_file(seed_cands, "seed")
+        _drop_cand_file(C._seed_candidates(seeds), "seed")
 
     def _next_snap() -> int:
         st["snap"] += 1
@@ -532,69 +481,11 @@ def run_crawl_stream(
         if batch_id <= st["last_batch"]:
             return  # replayed batch whose round already fully committed
         rnd = st["round"]  # commits for state as of THIS ingest
-        pending_new, blocked_new, shards_dirty, unseen, n_new, cache_handle = (
-            _ingest_candidates(
-                batch_df, st["shards"], seen_store.parts(), rules, cfg, st["seq"]
-            )
+        new_rows, blocked_new, shards_dirty, cache_handle = state.ingest(batch_df, rnd)
+        state.commit(
+            _next_snap(), {"round": rnd, "phase": "ingest", "last_batch_id": st["last_batch"]},
+            new_rows=new_rows, shards_dirty=shards_dirty,
         )
-        seen_store.append(unseen, rnd, n_new=n_new)
-        st["seq"] += n_new
-        new_rows = pending_new.unionByName(blocked_new)
-
-        sstate, fstate = st["sstate"], st["fstate"]
-        imeta = {"round": rnd, "seq_offset": st["seq"], "phase": "ingest",
-                 "last_batch_id": st["last_batch"]}
-        if sstate is None:  # seed micro-batch: establish the state bases
-            entry = store.commit(
-                _next_snap(), {"frontier_base": new_rows, "seen_shards": shards_dirty},
-                meta=imeta, finalize=False,
-            )
-            fstate = _FrontierState(
-                spark, [entry["tables"]["frontier_base"]["path"]], [], [],
-                base_rows=entry["tables"]["frontier_base"]["rows"], status_rows=0,
-            )
-            sstate = _ShardState(spark, entry["tables"]["seen_shards"]["path"], [])
-        else:
-            # Same amortized-fold discipline as run_crawl (ADVICE r3: the
-            # streaming face previously never compacted — unbounded
-            # manifest chains on a long crawl). Shards: fold the delta
-            # chain at COMPACT_CHAIN, the not-yet-written dirty frame
-            # riding along as the newest version. Frontier: fold log +
-            # deltas into a fresh base past the ratio.
-            scompact = sstate.should_compact()
-            shard_commit = (
-                S.resolve_shards(spark, sstate.base_path, sstate.delta_paths,
-                                 extra_df=shards_dirty)
-                if scompact
-                else shards_dirty
-            )
-            fcompact = fstate.should_compact(cfg.frontier_compact_ratio)
-            if fcompact:
-                # view() applies the status log, so the folded base
-                # carries every fetched/missing status and the chains
-                # reset — identical to the batch driver's fold (minus
-                # this round's not-yet-known statuses, which commit at
-                # the round boundary below)
-                base = fstate.view().unionByName(new_rows)
-                tables = {"frontier_base": base, "seen_shards": shard_commit}
-            else:
-                tables = {"frontier_delta": new_rows, "seen_shards": shard_commit}
-            entry = store.commit(_next_snap(), tables, meta=imeta, finalize=False)
-            if fcompact:
-                binfo = entry["tables"]["frontier_base"]
-                fstate = _FrontierState(spark, [binfo["path"]], [], [],
-                                        base_rows=binfo["rows"], status_rows=0)
-            else:
-                fstate.delta_paths.append(entry["tables"]["frontier_delta"]["path"])
-                fstate.base_rows += int(entry["tables"]["frontier_delta"]["rows"])
-            if scompact:
-                sstate = _ShardState(spark, entry["tables"]["seen_shards"]["path"], [])
-            else:
-                sstate.delta_paths.append(entry["tables"]["seen_shards"]["path"])
-        entry["meta"]["frontier"] = fstate.to_meta()
-        entry["meta"]["shards"] = sstate.to_meta()
-        entry["meta"]["seen_exact"] = seen_store.to_meta()
-        store.publish(entry)
 
         # Complete the PREVIOUS round's metrics row: its fetch-side half
         # was stashed when that round ran; its ingest-side half is THIS
@@ -605,7 +496,7 @@ def run_crawl_stream(
         # unpersists — blocked_new/new_rows still read the cached ingest.
         stash_path = os.path.join(mstash_dir, f"round-{rnd}")
         if rnd > 0 and os.path.exists(stash_path):
-            append_output(
+            C.append_output(
                 out_dir, "metrics",
                 combine_metrics(
                     rnd, spark.read.parquet(stash_path),
@@ -614,32 +505,16 @@ def run_crawl_stream(
                 rnd,
             )
         cache_handle.unpersist()
-        st["sstate"], st["fstate"] = sstate, fstate
-        st["shards"] = sstate.view()
 
         # ---- rank + fetch + parse = round rnd+1 (run_crawl numbering)
         rnd += 1
-        pending = fstate.view().where(F.col("status") == "pending")
-        delay_dim = rules.select("host", "crawl_delay_s", "max_concurrency")
-        batch = rank_batch(
-            pending.join(F.broadcast(delay_dim), "host", "left"), cfg
-        ).drop("crawl_delay_s", "max_concurrency").cache()
-        n_batch = batch.count()
+        batch, n_batch = state.schedule()
         if n_batch == 0:
-            batch.unpersist()
             st["done"] = True
             # done marker: promotes the final ingest to a round boundary
             # so a resume never rolls back the crawl's last discoveries
-            dentry = store.commit(
-                _next_snap(), {},
-                meta={"round": st["round"], "seq_offset": st["seq"],
-                      "phase": "round_done", "last_batch_id": batch_id},
-                finalize=False,
-            )
-            dentry["meta"]["frontier"] = fstate.to_meta()
-            dentry["meta"]["shards"] = sstate.to_meta()
-            dentry["meta"]["seen_exact"] = seen_store.to_meta()
-            store.publish(dentry)
+            state.commit(_next_snap(), {"round": st["round"], "phase": "round_done",
+                                        "last_batch_id": batch_id})
             st["last_batch"] = batch_id
             # final round's metrics row (written at this ingest) is durable
             shutil.rmtree(
@@ -647,23 +522,10 @@ def run_crawl_stream(
             )
             return
         st["round"] = rnd
-        append_output(out_dir, "batches", batch.select("host", "url", "rank"), rnd)
-
-        fetched, missing = fetch_batch(batch, pages)
-        fetched = fetched.cache()
-        # one tokenization per page, same as run_crawl (parse.parse_round)
-        pround = P.parse_round(fetched, args, cfg)
-        parts = pround.parts
-        candidates = pround.candidates
-
-        status_updates = (
-            fetched.select("url_hash").withColumn("new_status", F.lit("fetched"))
-            .unionByName(
-                missing.select("url_hash").withColumn("new_status", F.lit("missing"))
-            )
-        )
-        for name, df in parts.items():
-            append_output(out_dir, name, df, rnd)
+        C.append_output(out_dir, "batches", batch.select("host", "url", "rank"), rnd)
+        fetched, missing, pround, status = C._fetch_and_parse(batch, pages, args, cfg)
+        for name, df in pround.parts.items():
+            C.append_output(out_dir, name, df, rnd)
         # Stash this round's fetch-side metrics half; the row completes at
         # the NEXT micro-batch's ingest, when this round's discoveries are
         # actually ingested (run_crawl parity — see combine_metrics above).
@@ -677,40 +539,14 @@ def run_crawl_stream(
         # replays the batch (ingest-phase rollback) and regenerates the
         # identical file; the reverse order could mark the round done
         # with its feedback file never written — a stalled crawl.
-        _drop_cand_file(candidates, f"round-{rnd}")
+        _drop_cand_file(pround.candidates, f"round-{rnd}")
 
-        # Round-boundary commit; the status log is the growth edge here,
-        # so the frontier fold also triggers at this commit point when the
-        # log outgrows the base (same predicate as the batch driver).
-        fcompact = fstate.should_compact(cfg.frontier_compact_ratio)
-        if fcompact:
-            base = (
-                fstate.view()
-                .join(status_updates, "url_hash", "left")
-                .withColumn("status", F.coalesce("new_status", "status"))
-                .drop("new_status")
-            )
-            stables = {"frontier_base": base}
-        else:
-            stables = {"status_log": status_updates}
-        sentry = store.commit(
-            _next_snap(), stables,
-            meta={"round": rnd, "seq_offset": st["seq"], "phase": "round_done",
-                  "last_batch_id": batch_id},
-            finalize=False,
+        # round-boundary commit: the status log is the growth edge here,
+        # so the frontier fold can also trigger at this commit point
+        state.commit(
+            _next_snap(), {"round": rnd, "phase": "round_done", "last_batch_id": batch_id},
+            status=status,
         )
-        if fcompact:
-            binfo = sentry["tables"]["frontier_base"]
-            fstate = _FrontierState(spark, [binfo["path"]], [], [],
-                                    base_rows=binfo["rows"], status_rows=0)
-            st["fstate"] = fstate
-        else:
-            fstate.status_paths.append(sentry["tables"]["status_log"]["path"])
-            fstate.status_rows += int(sentry["tables"]["status_log"]["rows"])
-        sentry["meta"]["frontier"] = fstate.to_meta()
-        sentry["meta"]["shards"] = sstate.to_meta()
-        sentry["meta"]["seen_exact"] = seen_store.to_meta()
-        store.publish(sentry)
         st["last_batch"] = batch_id
         # the previous round's stash was consumed at this batch's ingest
         # and its durable metrics row is published — safe to drop now
@@ -736,19 +572,12 @@ def run_crawl_stream(
         if st["round"] == before and not st["done"]:
             break  # no progress and not explicitly finished — drained
 
-    rules.unpersist()
-    outputs = {}
-    for name in OUTPUT_TABLES:
-        path = os.path.join(out_dir, name)
-        try:
-            outputs[name] = spark.read.parquet(path) if os.path.exists(path) else None
-        except Exception:
-            outputs[name] = None
+    state.rules.unpersist()
     return {
-        "outputs": outputs,
+        "outputs": C._read_outputs(spark, out_dir),
         "rounds": st["round"],
-        "seen_exact": seen_store.as_df(),
-        "frontier": st["fstate"].view() if st["fstate"] else None,
+        "seen_exact": state.seen.as_df(),
+        "frontier": state.fstate.view() if state.fstate else None,
     }
 
 

@@ -91,10 +91,6 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     return F.get(F.transform(F.array(words), grams_of), 0)
 
 
-def char_set(col: Column) -> Column:
-    return F.array_distinct(F.split(normalized_text(col), ""))
-
-
 def shingle_hash_rows(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
@@ -497,14 +493,6 @@ def _count_occurrences(text: Column, needle: str) -> Column:
     """Occurrences of *needle* via the length-difference trick — identical
     arithmetic is expressible in ANSI SQL for the DuckDB oracle."""
     return (F.length(text) - F.length(F.replace(text, F.lit(needle), F.lit("")))) / len(needle)
-
-
-def lang_scores(text_col: Column) -> dict[str, Column]:
-    padded = F.concat(F.lit(" "), normalized_text(text_col), F.lit(" "))
-    return {
-        lang: sum((_count_occurrences(padded, m) for m in markers), F.lit(0.0)).cast("double")
-        for lang, markers in LANG_MARKERS.items()
-    }
 
 
 def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -269,3 +269,15 @@ def test_semantic_dedup_join_never_self_joins_corpus(emb, spark, tmp_path):
     # returned frame is built from the BATCH assignment, and a
     # corpus×corpus shape would scan the parquet twice
     assert sum("parquet" in s for s in scans) == 1, scans
+
+
+def test_embedding_near_dup_pairs_leading_null_vector(spark):
+    """A null embedding in the first row must not switch dedup off for
+    the whole frame: the planted duplicate pair is still found."""
+    rng = np.random.default_rng(11)
+    vecs = rng.normal(size=(20, 8))
+    vecs[7] = vecs[3] * 1.5
+    rows = [(0, None)] + [(i, vecs[i].tolist()) for i in range(1, 20)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {(r.id_a, r.id_b) for r in S.embedding_near_dup_pairs(df, threshold=0.95).collect()}
+    assert (3, 7) in got
