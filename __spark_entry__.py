@@ -463,7 +463,8 @@ def q_ttl_recrawl(spark, sf_dir):
     log — url_hash = event_id % 5000, host = url_hash % 20, last fetch =
     max event ts per url (µs). A url is due when last_fetch + ttl(host) <
     now; even-numbered hosts carry a broadcast per-host TTL override.
-    Mechanism (tombstones + cuckoo delete) is pinned by tests/test_recrawl."""
+    Mechanism (store tombstones; bloom shards keep stale positives) is
+    pinned by tests/test_recrawl."""
     from frontier_engine.recrawl import due_for_recrawl
 
     e = _t(spark, sf_dir, "events")

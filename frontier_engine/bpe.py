@@ -80,8 +80,7 @@ def _merge_pat(left: str, right: str) -> tuple[str, str]:
 # per-job fixed cost dwarfed the pair counting; locally it is a dict
 # sweep over the framed type strings — same argmax, same replace
 # semantics, byte-identical merges (twin-tested). Framed types average
-# well under 200 B, so the gate bounds the collect at ~100 MB — the same
-# bounded-driver-transfer class as BROADCAST_BITS_MAX_BYTES.
+# well under 200 B, so the gate bounds the collect at ~100 MB.
 LOCAL_TRAIN_MAX_TYPES = 500_000
 
 

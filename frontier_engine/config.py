@@ -74,12 +74,6 @@ class EngineConfig:
     n_seen_shards: int = 64
     bloom_bits_per_shard: int = 1 << 20  # tests/local; 10^10-scale: ~1e8 bits/shard
     bloom_num_hashes: int = 7
-    # membership structure backing the seen set: "bloom" (default) or
-    # "cuckoo" (the north star's fallback; supports DELETE → TTL recrawl)
-    seen_filter_kind: str = "bloom"
-    # cuckoo sizing: buckets/shard × 4 slots ≈ capacity at ~95% load
-    # (tests/local; 10^10-scale: ~4e6 buckets/shard at 1024 shards)
-    cuckoo_buckets_per_shard: int = 1 << 16
     # exact-confirm table bucketing (seen_store; 10^10-scale: 4096 buckets)
     seen_exact_buckets: int = 64
     seen_compact_ratio: float = 0.25  # deltas/base ratio that triggers a fold

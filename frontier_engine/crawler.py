@@ -157,7 +157,7 @@ class _FrontierState:
 
 
 class _ShardState:
-    """Merge-on-read LSM over the bloom/cuckoo shard blobs (round-3
+    """Merge-on-read LSM over the bloom shard blobs (round-3
     commit-bytes fix): per-round commits write ONLY the dirty shards;
     untouched blobs carry forward by manifest reference. Folded into a
     fresh base when the delta chain grows past ``COMPACT_CHAIN`` (same
@@ -237,26 +237,15 @@ def _ingest_candidates(
             deduped, cfg.trap_cap, order_cols=["depth", "parent_url"],
             url_col="canon_url",  # sorted-params form → stabler family keys
         )
-    # per-shard sizing unit: bloom = bits, cuckoo = buckets (×4 slots)
-    cuckoo = cfg.seen_filter_kind == "cuckoo"
-    n_units = cfg.cuckoo_buckets_per_shard if cuckoo else cfg.bloom_bits_per_shard
     unseen = S.filter_unseen(
-        deduped, shards, seen_parts, cfg.n_seen_shards, n_units,
-        cfg.bloom_num_hashes, filter_kind=cfg.seen_filter_kind,
+        deduped, shards, seen_parts, cfg.n_seen_shards, cfg.bloom_bits_per_shard,
+        cfg.bloom_num_hashes,
     )
     unseen, n_unseen, cache_handle = assign_discovered_seq_counted(unseen, seq_offset)
-
-    if cuckoo:
-        from frontier_engine.cuckoo import update_cuckoo_shards
-
-        new_shards = update_cuckoo_shards(
-            unseen, shards, cfg.n_seen_shards, n_units, dirty_only=True
-        )
-    else:
-        new_shards = S.update_shards(
-            unseen, shards, cfg.n_seen_shards, n_units, cfg.bloom_num_hashes,
-            dirty_only=True,
-        )
+    new_shards = S.update_shards(
+        unseen, shards, cfg.n_seen_shards, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
+        dirty_only=True,
+    )
 
     allowed, blocked = split_allowed(unseen, rules, cfg)
     mk = lambda df, status: df.select(

@@ -11,23 +11,18 @@ Two halves, both scale-shaped:
   ``last_fetch_ts + ttl(host) < now``. Per-host TTL overrides ride a
   small dimension broadcast; the log scan prunes columns + pushes the
   timestamp filter. No shuffle beyond the (optional) broadcast join.
-* **mechanism** (`expire_urls`) — tombstone the due keys in the exact
-  store (O(expired) delta write, folded at compaction —
-  seen_store.SeenExactStore.expire) and DELETE their fingerprints from
-  the cuckoo shards (cuckoo.delete_cuckoo_shards). With bloom shards the
-  filter keeps reporting stale positives (blooms can't delete) — the
-  tombstoned exact confirm still yields the right answer, at the cost of
-  confirm-join traffic; the cuckoo path prunes correctly again, which is
-  WHY the north star names cuckoo as the fallback structure.
+* **mechanism** (`seen_store.SeenExactStore.expire`) — tombstone the due
+  keys in the exact store (O(expired) delta write, folded at
+  compaction). The bloom shards cannot delete, so they keep reporting
+  expired keys as stale positives; the tombstoned exact confirm drops
+  them from the dup set, so ``seen.filter_unseen`` stays exact and only
+  pays confirm-join traffic for them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from frontier_engine.config import EngineConfig
-from frontier_engine.seen_store import SeenExactStore
 
 
 def due_for_recrawl(
@@ -57,21 +52,3 @@ def due_for_recrawl(
         .select("url_hash", "host", "last_fetch_ts", "ttl_s")
     )
 
-
-def expire_urls(
-    expired: DataFrame,
-    seen_store: SeenExactStore,
-    shards: DataFrame,
-    cfg: EngineConfig,
-    snap_id: int | str,
-) -> DataFrame:
-    """Expire *expired* (url_hash …) from the seen set; returns the new
-    shards DataFrame (changed only on the cuckoo path)."""
-    seen_store.expire(expired, snap_id)
-    if cfg.seen_filter_kind == "cuckoo":
-        from frontier_engine.cuckoo import delete_cuckoo_shards
-
-        return delete_cuckoo_shards(
-            expired, shards, cfg.n_seen_shards, cfg.cuckoo_buckets_per_shard
-        )
-    return shards

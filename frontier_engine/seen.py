@@ -22,6 +22,12 @@ wall (SURVEY §4 X14). The engine's replacement is EXACT at any scale:
 Bit indexing uses Kirsch-Mitzenmacher double hashing from the single
 64-bit ``xxhash64(canon_url)`` the frontier already carries — no extra
 hashing pass.
+
+Bloom shards are the only membership structure and the cogrouped probe
+the only probe path. A shard filled past its sizing loses precision, not
+correctness: more positives reach the confirm, which stays exact. Expiry
+(TTL re-crawl) tombstones ``seen_exact`` rows, so a deleting filter
+(cuckoo) would only save confirm traffic for expired keys.
 """
 
 from __future__ import annotations
@@ -62,47 +68,22 @@ def shard_id_col(url_hash, n_shards: int):
     return F.pmod(url_hash, F.lit(n_shards)).cast("int")
 
 
-def bloom_check(
-    candidates: DataFrame,
-    shards: DataFrame,
-    n_shards: int,
-    n_bits: int,
-    k: int,
-) -> DataFrame:
-    """Return *candidates* + boolean ``maybe_seen``.
-
-    Cogrouped per shard: the shard's bit blob and its candidate rows land
-    in the same task; membership is a vectorized numpy test. Missing shard
-    → definitely unseen.
-    """
-    cand = candidates.withColumn("shard_id", shard_id_col(F.col("url_hash"), n_shards))
-    out_schema = T.StructType(
-        cand.schema.fields + [T.StructField("maybe_seen", T.BooleanType())]
-    )
-
-    def check(key, cdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
-        if cdf.empty:
-            return cdf.assign(maybe_seen=pd.Series([], dtype=bool))
-        if sdf.empty or sdf["bits"].iloc[0] is None:
-            return cdf.assign(maybe_seen=False)
-        bits = np.frombuffer(sdf["bits"].iloc[0], dtype=np.uint8)
-        pos = _bit_positions(cdf["url_hash"].to_numpy(np.int64), n_bits, k)
-        byte_idx = (pos >> 3).astype(np.int64)
-        mask = (1 << (pos & 7)).astype(np.uint8)
-        hit = ((bits[byte_idx] & mask) == mask).all(axis=1)
-        return cdf.assign(maybe_seen=hit)
-
-    return cand.groupBy("shard_id").cogroup(shards.groupBy("shard_id")).applyInPandas(
-        check, out_schema
-    )
+def _bloom_hits(bits_blob, hashes: np.ndarray, n_bits: int, k: int) -> np.ndarray:
+    """Boolean mask over *hashes*: all k bits set in one shard's blob."""
+    bits = np.frombuffer(bits_blob, dtype=np.uint8)
+    pos = _bit_positions(hashes, n_bits, k)
+    mask = (1 << (pos & 7)).astype(np.uint8)
+    return ((bits[(pos >> 3).astype(np.int64)] & mask) == mask).all(axis=1)
 
 
 def bloom_positive_hashes(
     hashes: DataFrame, shards: DataFrame, n_shards: int, n_bits: int, k: int
 ) -> DataFrame:
-    """url_hash rows that the bloom reports as maybe-seen. Only the 8-byte
-    hash column crosses the Arrow boundary — candidate payloads never
-    leave the JVM."""
+    """url_hash rows that the bloom reports as maybe-seen. Cogrouped per
+    shard: each shard's bit blob meets exactly the probe rows that could
+    hit it, and only the 8-byte hash column crosses the Arrow boundary —
+    candidate payloads never leave the JVM. A missing shard means
+    definitely unseen."""
     keyed = hashes.select("url_hash").withColumn(
         "shard_id", shard_id_col(F.col("url_hash"), n_shards)
     )
@@ -110,70 +91,10 @@ def bloom_positive_hashes(
     def check(key, cdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
         if cdf.empty or sdf.empty or sdf["bits"].iloc[0] is None:
             return pd.DataFrame({"url_hash": pd.Series([], dtype="int64")})
-        bits = np.frombuffer(sdf["bits"].iloc[0], dtype=np.uint8)
-        pos = _bit_positions(cdf["url_hash"].to_numpy(np.int64), n_bits, k)
-        byte_idx = (pos >> 3).astype(np.int64)
-        mask = (1 << (pos & 7)).astype(np.uint8)
-        hit = ((bits[byte_idx] & mask) == mask).all(axis=1)
-        return pd.DataFrame({"url_hash": cdf["url_hash"].to_numpy(np.int64)[hit]})
+        h = cdf["url_hash"].to_numpy(np.int64)
+        return pd.DataFrame({"url_hash": h[_bloom_hits(sdf["bits"].iloc[0], h, n_bits, k)]})
 
     return keyed.groupBy("shard_id").cogroup(shards.groupBy("shard_id")).applyInPandas(
-        check, T.StructType([T.StructField("url_hash", T.LongType())])
-    )
-
-
-# broadcast the bloom bits only while they are SMALL: every
-# filter_unseen call rebuilds the broadcast (O(bits) Arrow collect to
-# the driver + O(bits) broadcast back out), while the cogrouped path
-# pays one shuffle of the 8-byte probe hashes plus one pass over the
-# blobs. r6, measured on the bench workload: at 64 MB of bits / 1M
-# probes the cogroup probe runs ~2x faster end to end (0.6-0.9 s vs
-# 1.2-3.3 s incl. the rebuild); at 512 KB of bits the broadcast wins
-# (0.3-0.4 s vs 0.4-1.0 s). 8 MB sits a safe margin below the measured
-# crossover, and the 10^10 design point (~12.5 GB of bits) was always
-# cogroup territory.
-BROADCAST_BITS_MAX_BYTES = 8 * 1024 * 1024
-
-
-def bloom_positive_hashes_broadcast(
-    candidates: DataFrame, shards: DataFrame, n_shards: int, n_bits: int, k: int
-) -> DataFrame:
-    """Broadcast-mode bloom check: shard blobs ride a broadcast variable;
-    candidates are tested partition-locally in mapInPandas over ONLY the
-    hash column — zero shuffle, scales with input partitions.
-
-    The blobs broadcast as ONE concatenated byte array (shard s occupies
-    bytes [s·n_bits/8, (s+1)·n_bits/8)), so membership for a whole Arrow
-    batch is a single vectorized gather — no per-shard mask loop, whose
-    O(n_shards × batch) row-scans dominated the dedupe stage's Python
-    time at 64 shards (round-3 scaling-gate fix). A shard missing from
-    *shards* stays all-zeros ⇒ definitely-unseen, same semantics."""
-    spark = candidates.sparkSession
-    shard_bytes = n_bits // 8
-    big = np.zeros(n_shards * shard_bytes, dtype=np.uint8)
-    # r6 perf: Arrow transfer for the blobs — .collect() rows moved the
-    # multi-MB bit arrays through py4j's pickled-row path (measured ~10x
-    # slower for a 64 MB shard set; guide §6 "Arrow for driver transfers")
-    blobs = shards.toPandas()
-    for sid, blob in zip(blobs["shard_id"], blobs["bits"]):
-        if blob is not None:
-            big[sid * shard_bytes:(sid + 1) * shard_bytes] = np.frombuffer(
-                blob, dtype=np.uint8
-            )
-    bc = spark.sparkContext.broadcast(big)
-
-    def check(batches):
-        bits = bc.value
-        for pdf in batches:
-            h = pdf["url_hash"].to_numpy(np.int64)
-            sid = (h % n_shards).astype(np.int64)  # numpy % matches Spark pmod
-            pos = _bit_positions(h, n_bits, k)
-            byte_idx = sid[:, None] * shard_bytes + (pos >> 3).astype(np.int64)
-            mask = (1 << (pos & 7)).astype(np.uint8)
-            hit = ((bits[byte_idx] & mask) == mask).all(axis=1)
-            yield pdf[["url_hash"]][hit]
-
-    return candidates.select("url_hash").mapInPandas(
         check, T.StructType([T.StructField("url_hash", T.LongType())])
     )
 
@@ -185,16 +106,15 @@ def filter_unseen(
     n_shards: int,
     n_bits: int,
     k: int,
-    filter_kind: str = "bloom",
 ) -> DataFrame:
     """EXACT unseen subset of *candidates* (columns preserved).
 
-    Bloom positives (true dups + FPR·new) are confirmed against
-    seen_exact with a semi-join; candidates are then anti-joined against
-    the confirmed-dup hash set (X1: dedupe strictly before fetch). The
-    bloom check broadcasts the bit blobs when they fit
-    (BROADCAST_BITS_MAX_BYTES) — no shuffle — else runs the cogrouped
-    shard path.
+    Bloom positives (true dups + FPR·new, from the cogrouped
+    ``bloom_positive_hashes``) are confirmed against seen_exact with a
+    semi-join; candidates are then anti-joined against the confirmed-dup
+    hash set (X1: dedupe strictly before fetch). Shards filled past their
+    sizing only raise the positive rate — the confirm keeps the answer
+    exact.
 
     *seen_exact* may be a list of table parts (seen_store.SeenExactStore:
     a bucketBy(url_hash) base + small per-round deltas). Each part gets
@@ -206,23 +126,7 @@ def filter_unseen(
     parts = seen_exact if isinstance(seen_exact, list) else [seen_exact]
     if not parts:
         return candidates
-    if filter_kind == "cuckoo":
-        # north-star fallback structure (supports TTL deletes); for the
-        # cuckoo path *n_bits* is the per-shard BUCKET count (×4 slots ×
-        # 16-bit fingerprints); same exactness discipline either way
-        from frontier_engine.cuckoo import (
-            cuckoo_positive_hashes,
-            cuckoo_positive_hashes_broadcast,
-        )
-
-        if n_shards * n_bits * 8 <= BROADCAST_BITS_MAX_BYTES:
-            positives = cuckoo_positive_hashes_broadcast(candidates, shards, n_shards, n_bits)
-        else:
-            positives = cuckoo_positive_hashes(candidates, shards, n_shards, n_bits)
-    elif n_shards * (n_bits // 8) <= BROADCAST_BITS_MAX_BYTES:
-        positives = bloom_positive_hashes_broadcast(candidates, shards, n_shards, n_bits, k)
-    else:
-        positives = bloom_positive_hashes(candidates, shards, n_shards, n_bits, k)
+    positives = bloom_positive_hashes(candidates, shards, n_shards, n_bits, k)
     # bloom+confirm only against the BIG part (the bucketed base — its
     # semi-join moves just the positives); the remaining parts are
     # O(recent-rounds) deltas, cheap to anti-join directly (AQE broadcasts

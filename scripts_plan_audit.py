@@ -51,7 +51,7 @@ def main():
     n_ex = p.count("Exchange")
     print(f"AUDIT exchanges={n_ex} (expect 1: probe side only — base never moves)")
 
-    print("=" * 20, "2. full filter_unseen over the store (bloom broadcast + 2 semi joins)")
+    print("=" * 20, "2. full filter_unseen over the store (cogrouped bloom probe + 2 semi joins)")
     unseen = S.filter_unseen(cand, shards, store.parts(), 16, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes)
     p = plan(unseen)
     print(p[:5000])

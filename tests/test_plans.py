@@ -64,7 +64,7 @@ def test_rank_batch_has_no_single_partition_exchange(cand):
 
 def test_frontier_ingest_has_no_python_nodes_outside_seen_check(spark, cand):
     """Canon + dedupe window + rank are pure JVM; the only Python surface
-    in the schedule path is the bloom/cuckoo membership kernel."""
+    in the schedule path is the bloom membership kernel."""
     p = _plan(cand)
     for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
         assert node not in p, (node, p)

@@ -1,18 +1,17 @@
-"""TTL re-crawl: expired urls become schedulable again under BOTH filter
-kinds; tombstones survive compaction and re-adds; cuckoo shards actually
-forget (bloom shards keep stale positives but stay semantically exact)."""
+"""TTL re-crawl: expired urls become schedulable again; tombstones
+survive compaction and re-adds; bloom shards keep stale positives for
+expired keys but filter_unseen stays exact through the tombstoned
+confirm."""
 
-import pyspark.sql.functions as F
-import pytest
 from pyspark.sql import types as T
 
 from frontier_engine import seen as S
 from frontier_engine.config import EngineConfig
-from frontier_engine.recrawl import due_for_recrawl, expire_urls
+from frontier_engine.recrawl import due_for_recrawl
 from frontier_engine.seen_store import SeenExactStore
 
 N_SHARDS = 4
-CUCKOO_NB = 1 << 10
+CFG = EngineConfig(n_seen_shards=N_SHARDS, bloom_bits_per_shard=1 << 14)
 
 CAND_SCHEMA = T.StructType(
     [
@@ -28,111 +27,77 @@ def _cands(spark, hashes):
     )
 
 
-@pytest.fixture()
-def cfgs():
-    return {
-        "bloom": EngineConfig(
-            n_seen_shards=N_SHARDS, bloom_bits_per_shard=1 << 14, seen_filter_kind="bloom"
-        ),
-        "cuckoo": EngineConfig(
-            n_seen_shards=N_SHARDS, cuckoo_buckets_per_shard=CUCKOO_NB,
-            seen_filter_kind="cuckoo",
-        ),
-    }
-
-
-def _filter_unseen(cands, shards, store, cfg):
-    n_units = (
-        cfg.cuckoo_buckets_per_shard
-        if cfg.seen_filter_kind == "cuckoo"
-        else cfg.bloom_bits_per_shard
-    )
+def _filter_unseen(cands, shards, store):
     return S.filter_unseen(
-        cands, shards, store.parts(), cfg.n_seen_shards, n_units,
-        cfg.bloom_num_hashes, filter_kind=cfg.seen_filter_kind,
+        cands, shards, store.parts(), CFG.n_seen_shards, CFG.bloom_bits_per_shard,
+        CFG.bloom_num_hashes,
     )
 
 
-def _update_shards(new, shards, cfg):
-    if cfg.seen_filter_kind == "cuckoo":
-        from frontier_engine.cuckoo import update_cuckoo_shards
-
-        return update_cuckoo_shards(new, shards, cfg.n_seen_shards, cfg.cuckoo_buckets_per_shard)
+def _update_shards(new, shards):
     return S.update_shards(
-        new, shards, cfg.n_seen_shards, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes
+        new, shards, CFG.n_seen_shards, CFG.bloom_bits_per_shard, CFG.bloom_num_hashes
     )
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_expire_makes_url_unseen_again(spark, tmp_path, cfgs, kind):
-    cfg = cfgs[kind]
-    store = SeenExactStore(spark, str(tmp_path / f"seen-{kind}"), n_buckets=4)
+def test_expire_makes_url_unseen_again(spark, tmp_path):
+    store = SeenExactStore(spark, str(tmp_path / "seen"), n_buckets=4)
     seen_keys = list(range(1, 101))
     cands = _cands(spark, seen_keys)
-    shards = _update_shards(cands, S.empty_shards(spark), cfg).cache()
+    shards = _update_shards(cands, S.empty_shards(spark)).cache()
     shards.count()
     store.append(cands, 0)
 
     # all seen → nothing passes
-    assert _filter_unseen(_cands(spark, seen_keys), shards, store, cfg).count() == 0
+    assert _filter_unseen(_cands(spark, seen_keys), shards, store).count() == 0
 
-    expired = _cands(spark, [3, 7, 11]).select("url_hash")
-    shards = expire_urls(expired, store, shards, cfg, snap_id=1).cache()
-    shards.count()
+    store.expire(_cands(spark, [3, 7, 11]).select("url_hash"), snap_id=1)
 
-    back = _filter_unseen(_cands(spark, seen_keys), shards, store, cfg)
+    back = _filter_unseen(_cands(spark, seen_keys), shards, store)
     assert {r.url_hash for r in back.collect()} == {3, 7, 11}
 
-    # cuckoo shards really forgot; bloom shards still report stale
-    # positives (pruning only — semantics came from the tombstoned store)
-    if kind == "cuckoo":
-        from frontier_engine.cuckoo import cuckoo_positive_hashes_broadcast
-
-        pos = cuckoo_positive_hashes_broadcast(
-            _cands(spark, [3, 7, 11]), shards, N_SHARDS, CUCKOO_NB
-        )
-        assert pos.count() == 0
+    # bloom shards still report the expired keys as (stale) positives —
+    # pruning only; the semantics came from the tombstoned store
+    pos = S.bloom_positive_hashes(
+        _cands(spark, [3, 7, 11]), shards, N_SHARDS, CFG.bloom_bits_per_shard,
+        CFG.bloom_num_hashes,
+    )
+    assert {r.url_hash for r in pos.collect()} == {3, 7, 11}
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_readd_after_expire_is_seen_again(spark, tmp_path, cfgs, kind):
-    cfg = cfgs[kind]
-    store = SeenExactStore(spark, str(tmp_path / f"seen2-{kind}"), n_buckets=4)
+def test_readd_after_expire_is_seen_again(spark, tmp_path):
+    store = SeenExactStore(spark, str(tmp_path / "seen2"), n_buckets=4)
     cands = _cands(spark, range(1, 51))
-    shards = _update_shards(cands, S.empty_shards(spark), cfg).cache()
+    shards = _update_shards(cands, S.empty_shards(spark)).cache()
     shards.count()
     store.append(cands, 0)
 
-    shards = expire_urls(
-        _cands(spark, [5]).select("url_hash"), store, shards, cfg, snap_id=1
-    ).cache()
-    shards.count()
+    store.expire(_cands(spark, [5]).select("url_hash"), snap_id=1)
     # re-crawl: 5 passes the unseen filter, gets re-added
-    readd = _filter_unseen(_cands(spark, [5]), shards, store, cfg)
+    readd = _filter_unseen(_cands(spark, [5]), shards, store)
     assert readd.count() == 1
-    shards = _update_shards(readd, shards, cfg).cache()
+    shards = _update_shards(readd, shards).cache()
     shards.count()
     store.append(readd, 2)
 
     # now 5 is seen again (tombstone consolidated away on append)
-    assert _filter_unseen(_cands(spark, [5]), shards, store, cfg).count() == 0
+    assert _filter_unseen(_cands(spark, [5]), shards, store).count() == 0
     # and survives a compaction
     store.compact(3)
-    assert _filter_unseen(_cands(spark, [5]), shards, store, cfg).count() == 0
+    assert _filter_unseen(_cands(spark, [5]), shards, store).count() == 0
     assert store.tomb_paths == []
 
 
-def test_expire_survives_compaction(spark, tmp_path, cfgs):
-    cfg = cfgs["bloom"]
+def test_expire_survives_compaction(spark, tmp_path):
     store = SeenExactStore(spark, str(tmp_path / "seen3"), n_buckets=4)
     cands = _cands(spark, range(1, 41))
-    shards = _update_shards(cands, S.empty_shards(spark), cfg).cache()
+    shards = _update_shards(cands, S.empty_shards(spark)).cache()
     shards.count()
     store.append(cands, 0)
-    expire_urls(_cands(spark, [9]).select("url_hash"), store, shards, cfg, snap_id=1)
+    store.expire(_cands(spark, [9]).select("url_hash"), snap_id=1)
     store.compact(2)
     assert store.tomb_paths == []
-    back = _filter_unseen(_cands(spark, [9]), shards, store, cfg)
+    back = _filter_unseen(_cands(spark, [9]), shards, store)
     assert back.count() == 1  # physically gone from the compacted base
 
 
@@ -153,23 +118,19 @@ def test_due_for_recrawl_policy(spark):
     assert got == {(1, 5000), (3, 500)}
 
 
-def test_readd_then_compact_has_no_duplicate_rows(spark, tmp_path, cfgs):
+def test_readd_then_compact_has_no_duplicate_rows(spark, tmp_path):
     """ADVICE r2: a re-seen key's dropped tombstone re-exposes its
     ORIGINAL base row next to the fresh delta row; compact must not bake
     the duplicate into the bucketed base (inflating base_rows, seen_exact
     outputs, and compaction-trigger accounting forever)."""
-    cfg = cfgs["bloom"]
     store = SeenExactStore(spark, str(tmp_path / "seen4"), n_buckets=4)
     cands = _cands(spark, range(1, 31))
-    shards = _update_shards(cands, S.empty_shards(spark), cfg).cache()
+    shards = _update_shards(cands, S.empty_shards(spark)).cache()
     shards.count()
     store.append(cands, 0)  # promotes to bucketed base
 
-    shards = expire_urls(
-        _cands(spark, [5, 9]).select("url_hash"), store, shards, cfg, snap_id=1
-    ).cache()
-    shards.count()
-    readd = _filter_unseen(_cands(spark, [5, 9]), shards, store, cfg)
+    store.expire(_cands(spark, [5, 9]).select("url_hash"), snap_id=1)
+    readd = _filter_unseen(_cands(spark, [5, 9]), shards, store)
     store.append(readd, 2)  # drops the tombstones -> base rows re-exposed
 
     store.compact(3)

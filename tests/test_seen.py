@@ -35,10 +35,8 @@ def test_no_false_negatives_and_exactness(spark):
     got = sorted(r.url_hash for r in unseen.collect())
     assert got == sorted(others), "exact semantics: all others new, no inserted leak through"
 
-    checked = S.bloom_check(probe, shards, N_SHARDS, N_BITS, K)
-    fn = checked.where(~F.col("maybe_seen")).join(
-        _cand_df(spark, inserted).select("url_hash"), "url_hash", "inner"
-    )
+    positives = S.bloom_positive_hashes(probe, shards, N_SHARDS, N_BITS, K)
+    fn = _cand_df(spark, inserted).select("url_hash").join(positives, "url_hash", "left_anti")
     assert fn.count() == 0, "bloom must never report an inserted key as unseen"
 
 
@@ -107,3 +105,40 @@ def test_resolve_shards_latest_version_wins(spark, tmp_path):
     b0.write.parquet(p0); d1.write.parquet(p1); d2.write.parquet(p2)
     out = {r.shard_id: bytes(r.bits) for r in S.resolve_shards(spark, p0, [p1, p2]).collect()}
     assert out == {0: b"new0", 1: b"new1", 2: b"new2"}
+
+
+def test_growth_past_sizing_stays_exact(spark, tmp_path):
+    """The seen set must grow past its sizing without failing: 4 shards ×
+    2^10 bits hold ~400 keys at 10 bits/key. Push ≥ 40× that through the
+    crawler's dirty-shard LSM (update_shards(dirty_only) + resolve_shards)
+    over several rounds; the saturated bloom only loses precision, and
+    filter_unseen over inserted ∪ fresh keys still equals the anti-join."""
+    n_shards, n_bits, k = 4, 1 << 10, 7
+    rounds, per_round = 4, 4_500  # 18,000 keys ≈ 45× nominal capacity
+    keys = spark.range(rounds * per_round + 3_000).select(
+        F.col("id"),
+        F.xxhash64(F.concat(F.lit("u://"), F.col("id").cast("string"))).alias("url_hash"),
+        F.concat(F.lit("u://"), F.col("id").cast("string")).alias("canon_url"),
+    )
+    inserted = keys.where(F.col("id") < rounds * per_round)
+
+    base, deltas = None, []
+    for r in range(rounds):
+        shards = S.resolve_shards(spark, base, deltas)
+        new = inserted.where((F.col("id") / per_round).cast("int") == r)
+        dirty = S.update_shards(new, shards, n_shards, n_bits, k, dirty_only=True)
+        path = str(tmp_path / f"shards-{r}")
+        dirty.write.parquet(path)
+        if base is None:
+            base = path
+        else:
+            deltas.append(path)
+    shards = S.resolve_shards(spark, base, deltas)
+    assert shards.count() == n_shards
+
+    exact = inserted.select("url_hash", "canon_url")
+    unseen = S.filter_unseen(keys, shards, exact, n_shards, n_bits, k)
+    want = keys.join(exact.select("url_hash"), "url_hash", "left_anti")
+    got = sorted(r.id for r in unseen.select("id").collect())
+    assert got == sorted(r.id for r in want.select("id").collect())
+    assert got == list(range(rounds * per_round, rounds * per_round + 3_000))
