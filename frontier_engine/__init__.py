@@ -7,9 +7,10 @@ Scrapy 2.6 crawler) as declarative Spark DataFrame jobs:
 * frontier scheduling (priority queue + LIFO/DFO ordering, per-host
   politeness budgets, robots.txt filtering) — ``schedule.py``,
   ``politeness.py``, ``robots.py``
-* URL-seen dedup at 10^10-URL design scale (partitioned bloom shards
-  probed by cogroup, with an exact confirmation table; TTL re-crawl
-  expiry by tombstones) — ``seen.py``, ``seen_store.py``, ``recrawl.py``
+* URL-seen dedup at 10^10-URL design scale (an exact bucketed store
+  whose base carries partitioned bloom shards as its index, probed by
+  cogroup; TTL re-crawl expiry by tombstones) — ``seen.py``,
+  ``seen_store.py``, ``recrawl.py``
 * stored-page "fetch" as a join against a Common-Crawl-style pages table —
   ``fetch.py``
 * vectorized parse/extraction of the reference's search / PDP / reviews

@@ -124,12 +124,15 @@ def connected_components(
     edges never appear; callers left-join and ``coalesce`` to their own
     id (as :func:`near_dup_clusters` does).
 
-    The returned labeling is eagerly ``localCheckpoint``ed (its lineage
-    runs through per-round checkpoints that are released before
-    returning); it is one row per node IN the edge list — for dedup
+    The labeling is one row per node IN the edge list — for dedup
     workloads that is the duplicate rows only, a small fraction of the
-    corpus. Callers holding it across a long job may ``unpersist()`` it
-    once consumed.
+    corpus. Edge sets up to ``LOCAL_CC_MAX_EDGES`` are labeled
+    driver-side by union-find and returned as a local DataFrame built
+    from the driver's rows (no lineage, nothing persisted). Larger ones
+    run the star-contraction rounds and return an eagerly
+    ``localCheckpoint``ed labeling (the per-round checkpoints are
+    released before returning); callers holding that one across a long
+    job may ``unpersist()`` it once consumed.
 
     ``max_rounds`` bounds the large+small-star alternation; the
     algorithm needs O(log n) rounds, so 24 covers any graph that fits

@@ -7,7 +7,11 @@ Defaults mirror ``/root/reference/deepbnb/settings.py.dist``:
 * ``minimum_photos = 2``  (settings.py.dist:142)
 * ``property_type_blacklist``  (settings.py.dist:159)
 * ``robots_obey = True``  (settings.py.dist:45)
-* AutoThrottle start 5 s / max 60 s  (settings.py.dist:163-169)
+
+The reference's AutoThrottle (start 5 s / max 60 s,
+settings.py.dist:163-169) has no field here: its clamp lives in
+``streaming.windowed_fetch_metrics``, which derives each host's next
+delay from windowed fetch latencies.
 
 ``strict_parity`` keeps the reference's observable quirks (the F4
 weekly-discount bug comparing against the *monthly* threshold,
@@ -21,12 +25,9 @@ from dataclasses import dataclass, field
 
 @dataclass(frozen=True)
 class EngineConfig:
-    # politeness (settings.py.dist:57-59,163-169)
+    # politeness (settings.py.dist:57-59)
     download_delay_s: float = 10.0
     concurrent_per_host: int = 10
-    autothrottle_enabled: bool = True
-    autothrottle_start_delay_s: float = 5.0
-    autothrottle_max_delay_s: float = 60.0
     round_seconds: float = 100.0  # wall-clock budget one scheduling round models
     robots_obey: bool = True
     # crawler identity for robots UA-group selection (settings.py.dist:42's
@@ -64,9 +65,6 @@ class EngineConfig:
 
     # search (airbnb.py:23-27)
     currency: str = "USD"
-    default_max_price: int = 3000
-    default_price_increment: int = 100
-    page_limit: int = 20
     items_per_grid: int = 20
     reviews_page_limit: int = 50  # PdpPlatformSections.py:161
 
@@ -76,10 +74,6 @@ class EngineConfig:
     bloom_num_hashes: int = 7
     # exact-confirm table bucketing (seen_store; 10^10-scale: 4096 buckets)
     seen_exact_buckets: int = 64
-    seen_compact_ratio: float = 0.25  # deltas/base ratio that triggers a fold
-    # frontier merge-on-read: fold status log + deltas into the base when
-    # the log outgrows this fraction of the base (crawler §frontier state)
-    frontier_compact_ratio: float = 0.25
 
     # scheduling
     salt_partitions: int = 8  # within-host salt fan-out for hot-host skew (X13)

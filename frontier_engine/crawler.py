@@ -8,7 +8,7 @@ Round r:
 2. "fetch" = join the batch against the stored pages table (fetch.J4)
 3. parse fetched pages by type (parse.py) → output rows + new candidates
 4. ingest candidates: canonicalize → within-round dedupe → EXACT unseen
-   filter via bloom shards + bucketed confirm store (seen.D1,
+   filter via the seen store's base bloom + bucketed confirm (seen.D1,
    seen_store) → assign discovered_seq → robots split (robots.F11)
 5. write metrics; commit the round's DELTAS atomically (snapshots.S8)
 
@@ -21,28 +21,27 @@ the frontier per round):
   (pending→fetched|missing; a url enters the log at most once ever);
 * pending view = (base ∪ deltas) ⋈ status_log (left; log side is
   O(fetched-so-far) and folds into the base when it outgrows
-  ``cfg.frontier_compact_ratio`` — Iceberg MERGE's copy-on-write,
+  ``_FrontierState.COMPACT_RATIO`` — Iceberg MERGE's copy-on-write,
   amortized).
 
-The seen-set shard blobs are a second merge-on-read chain
-(:class:`_ShardState`, folded at ``COMPACT_CHAIN`` deltas) and the exact
-seen table lives in seen_store (bucketed base + deltas), so per-round
-commit bytes scale with the BATCH, not the frontier.
+The seen set lives in seen_store (bucketed base + deltas, with the bloom
+shards as the base's index, rebuilt only when the base is), so per-round
+commit bytes scale with the BATCH, not the frontier or the seen set.
 
 One state machine, two drivers. :class:`_CrawlState` owns the state
-(frontier chain, shard chain, seen store, discovered_seq offset) and the
-only steps that touch it:
+(frontier chain, seen store, discovered_seq offset) and the only steps
+that touch it:
 
 * ``load(manifest)`` — adopt a published snapshot (both resumes);
 * ``ingest(cands, r)`` — seen-filter round r's discoveries, assign their
   sequence numbers, append them to the seen store;
 * ``schedule()`` — rank the pending view into the next batch;
-* ``commit(snap, meta, new_rows, shards_dirty, status)`` — the commit
-  policy: the first commit writes the frontier base; later ones write
-  deltas + status facts, or fold a chain into a fresh base once its
-  trigger fires; then advance both chains, stamp the ``frontier`` /
-  ``shards`` / ``seen_exact`` state and ``seq_offset`` into the
-  manifest meta and publish.
+* ``commit(snap, meta, new_rows, status)`` — the commit policy: the
+  first commit writes the frontier base; later ones write deltas +
+  status facts, or fold the chain into a fresh base once its trigger
+  fires; then advance the chain, stamp the ``frontier`` /
+  ``seen_exact`` state and ``seq_offset`` into the manifest meta and
+  publish.
 
 :func:`run_crawl` is a loop of ingest → schedule → fetch/parse/outputs →
 commit; ``streaming.run_crawl_stream`` calls the same steps from its
@@ -113,6 +112,10 @@ class CrawlResult:
 class _FrontierState:
     """Merge-on-read frontier over the snapshot store's immutable dirs."""
 
+    # fold status log + deltas into the base once the log outgrows this
+    # fraction of the base
+    COMPACT_RATIO = 0.25
+
     def __init__(self, spark: SparkSession, base_paths: list[str], delta_paths: list[str],
                  status_paths: list[str], base_rows: int, status_rows: int):
         self.spark = spark
@@ -151,68 +154,24 @@ class _FrontierState:
             )
         return fr
 
-    def should_compact(self, ratio: float) -> bool:
-        total = self.base_rows or 1
-        return self.status_rows > total * ratio or len(self.status_paths) > 16
-
-
-class _ShardState:
-    """Merge-on-read LSM over the bloom shard blobs (round-3
-    commit-bytes fix): per-round commits write ONLY the dirty shards;
-    untouched blobs carry forward by manifest reference. Folded into a
-    fresh base when the delta chain grows past ``COMPACT_CHAIN`` (same
-    amortized-rewrite discipline as seen_store / the frontier)."""
-
-    COMPACT_CHAIN = 8
-
-    def __init__(self, spark: SparkSession, base_path: str | None, delta_paths: list[str]):
-        self.spark = spark
-        self.base_path = base_path
-        self.delta_paths = delta_paths
-
-    def to_meta(self) -> dict:
-        return {"base_path": self.base_path, "delta_paths": self.delta_paths}
-
-    @classmethod
-    def from_meta(cls, spark: SparkSession, meta: dict, legacy_path: str | None = None):
-        if meta:
-            return cls(spark, meta.get("base_path"), list(meta.get("delta_paths", [])))
-        # manifests written before the dirty-shard mode: one full table
-        return cls(spark, legacy_path, [])
-
-    def view(self) -> DataFrame:
-        return S.resolve_shards(self.spark, self.base_path, self.delta_paths)
-
     def should_compact(self) -> bool:
-        return len(self.delta_paths) >= self.COMPACT_CHAIN
-
-    def advance(self, path: str, folded: bool) -> None:
-        """Record a written shard dir: a fold (or the first write) is the
-        new base, anything else the newest delta. A replayed write lands
-        on its own path again and is not chained twice."""
-        if folded or self.base_path is None:
-            self.base_path, self.delta_paths = path, []
-        elif path != self.base_path and path not in self.delta_paths:
-            self.delta_paths.append(path)
+        total = self.base_rows or 1
+        return self.status_rows > total * self.COMPACT_RATIO or len(self.status_paths) > 16
 
 
 def _ingest_candidates(
     cands: DataFrame,
-    shards: DataFrame,
-    seen_parts: list[DataFrame],
+    seen: SeenExactStore,
     rules: DataFrame,
     cfg: EngineConfig,
     seq_offset: int,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, int, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame, int, DataFrame]:
     """candidates (url, parent_url, depth, listing_score) →
-    (pending_rows, blocked_rows, new_shards, unseen, n_unseen, cache_handle).
+    (pending_rows, blocked_rows, unseen, n_unseen, cache_handle).
 
-    ``new_shards`` holds ONLY the dirty (touched) shard rows — the
-    caller commits it as a delta and resolves the full view via
-    _ShardState (round-3 commit-bytes fix). ``cache_handle`` is the
-    frame assign_discovered_seq_counted actually persisted; the caller
-    MUST unpersist it after the round's commit (unpersisting a derived
-    frame is a no-op — ADVICE r2 leak).
+    ``cache_handle`` is the frame assign_discovered_seq_counted actually
+    persisted; the caller MUST unpersist it after the round's commit
+    (unpersisting a derived frame is a no-op — ADVICE r2 leak).
 
     Mirrors simulator.enqueue exactly: within-round dedupe keeps the
     (depth, parent_url, url)-least row per canon url; discovered_seq is
@@ -237,15 +196,8 @@ def _ingest_candidates(
             deduped, cfg.trap_cap, order_cols=["depth", "parent_url"],
             url_col="canon_url",  # sorted-params form → stabler family keys
         )
-    unseen = S.filter_unseen(
-        deduped, shards, seen_parts, cfg.n_seen_shards, cfg.bloom_bits_per_shard,
-        cfg.bloom_num_hashes,
-    )
+    unseen = S.filter_unseen(deduped, seen.bloom(), seen.parts(), *seen.bloom_sizing)
     unseen, n_unseen, cache_handle = assign_discovered_seq_counted(unseen, seq_offset)
-    new_shards = S.update_shards(
-        unseen, shards, cfg.n_seen_shards, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
-        dirty_only=True,
-    )
 
     allowed, blocked = split_allowed(unseen, rules, cfg)
     mk = lambda df, status: df.select(
@@ -259,15 +211,12 @@ def _ingest_candidates(
         F.col("discovered_seq").cast("long").alias("discovered_seq"),
         F.lit(status).alias("status"),
     )
-    return (
-        mk(allowed, "pending"), mk(blocked, "robots_blocked"),
-        new_shards, unseen, n_unseen, cache_handle,
-    )
+    return mk(allowed, "pending"), mk(blocked, "robots_blocked"), unseen, n_unseen, cache_handle
 
 
 class _CrawlState:
-    """The crawl's durable state — merge-on-read frontier, shard chain,
-    exact-seen store and the discovered_seq offset — and the steps both
+    """The crawl's durable state — merge-on-read frontier, seen store
+    (with its bloom) and the discovered_seq offset — and the steps both
     drivers run on it: ``ingest`` → ``schedule`` → ``commit``."""
 
     def __init__(self, spark: SparkSession, store: SnapshotStore, pages: DataFrame,
@@ -278,39 +227,30 @@ class _CrawlState:
         self.seen_root = os.path.join(store.root, "seen_exact_store")
         self.seen = SeenExactStore(
             spark, self.seen_root, n_buckets=cfg.seen_exact_buckets,
-            compact_ratio=cfg.seen_compact_ratio,
+            bloom_sizing=(cfg.n_seen_shards, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes),
         )
         self.fstate: _FrontierState | None = None  # set by the first commit
-        self.sstate = _ShardState(spark, None, [])
-        self.shards = S.empty_shards(spark)
         self.seq = 0
 
     def load(self, man: dict) -> dict:
         """Adopt the state a published manifest records; returns its meta."""
         meta = man["meta"]
         self.seen = SeenExactStore.from_meta(self.spark, self.seen_root, meta["seen_exact"])
-        self.seen.compact_ratio = self.cfg.seen_compact_ratio
         self.fstate = _FrontierState.from_meta(self.spark, meta["frontier"])
-        self.sstate = _ShardState.from_meta(
-            self.spark, meta.get("shards", {}),
-            legacy_path=man["tables"].get("seen_shards", {}).get("path"),
-        )
-        self.shards = self.sstate.view()
         self.seq = int(meta["seq_offset"])
         return meta
 
-    def ingest(self, cands: DataFrame, rnd: int) -> tuple[DataFrame, DataFrame, DataFrame,
-                                                          DataFrame]:
+    def ingest(self, cands: DataFrame, rnd: int) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Ingest round *rnd*'s discoveries: seen-filter them, assign their
-        discovered_seq and record them in the exact-seen store. Returns
-        (new_rows, blocked, shards_dirty, cache_handle); the caller passes
-        the first three to ``commit`` and unpersists the handle after."""
-        pending, blocked, shards_dirty, unseen, n_new, cache_handle = _ingest_candidates(
-            cands, self.shards, self.seen.parts(), self.rules, self.cfg, self.seq
+        discovered_seq and record them in the seen store. Returns
+        (new_rows, blocked, cache_handle); the caller passes new_rows to
+        ``commit`` and unpersists the handle after."""
+        pending, blocked, unseen, n_new, cache_handle = _ingest_candidates(
+            cands, self.seen, self.rules, self.cfg, self.seq
         )
         self.seen.append(unseen, rnd, n_new=n_new)
         self.seq += n_new
-        return pending.unionByName(blocked), blocked, shards_dirty, cache_handle
+        return pending.unionByName(blocked), blocked, cache_handle
 
     def schedule(self) -> tuple[DataFrame, int]:
         """Rank the pending frontier into the next batch (cached; already
@@ -326,18 +266,17 @@ class _CrawlState:
         return batch, n_batch
 
     def commit(self, snap_id: int, meta: dict, new_rows: DataFrame | None = None,
-               shards_dirty: DataFrame | None = None,
                status: DataFrame | None = None) -> dict:
-        """Commit *new_rows* (frontier rows), *shards_dirty* (dirty shard
-        blobs) and *status* (url_hash → new_status facts) as snapshot
-        *snap_id*, folding each chain into a fresh base once its trigger
-        fires; then advance the states, stamp them into the manifest
-        meta and publish. The first commit writes the frontier base."""
+        """Commit *new_rows* (frontier rows) and *status* (url_hash →
+        new_status facts) as snapshot *snap_id*, folding the frontier
+        chain into a fresh base once its trigger fires; then advance it,
+        stamp it and the seen store into the manifest meta and publish.
+        The first commit writes the frontier base."""
         tables = {}
         if self.fstate is None:
             tables["frontier_base"] = new_rows
         elif new_rows is not None or status is not None:
-            if self.fstate.should_compact(self.cfg.frontier_compact_ratio):
+            if self.fstate.should_compact():
                 # fold log + deltas into a fresh base (bounded, amortized
                 # rewrite); THIS commit's status facts fold in too
                 base = self.fstate.view(status)
@@ -347,16 +286,6 @@ class _CrawlState:
                     tables["frontier_delta"] = new_rows
                 if status is not None:
                     tables["status_log"] = status
-        # dirty shards only (round-3): untouched blobs ride the manifest;
-        # the chain folds with the not-yet-written dirty frame as newest
-        sfold = shards_dirty is not None and self.sstate.should_compact()
-        if sfold:
-            tables["seen_shards"] = S.resolve_shards(
-                self.spark, self.sstate.base_path, self.sstate.delta_paths,
-                extra_df=shards_dirty,
-            )
-        elif shards_dirty is not None:
-            tables["seen_shards"] = shards_dirty
         entry = self.store.commit(
             snap_id, tables, meta=dict(meta, seq_offset=self.seq), finalize=False
         )
@@ -371,14 +300,9 @@ class _CrawlState:
         if "status_log" in written:
             self.fstate.status_paths.append(written["status_log"]["path"])
             self.fstate.status_rows += int(written["status_log"]["rows"])
-        if "seen_shards" in written:
-            self.sstate.advance(written["seen_shards"]["path"], sfold)
         entry["meta"]["frontier"] = self.fstate.to_meta()
-        entry["meta"]["shards"] = self.sstate.to_meta()
         entry["meta"]["seen_exact"] = self.seen.to_meta()
         self.store.publish(entry)
-        if "seen_shards" in written:
-            self.shards = self.sstate.view()
         return entry
 
 
@@ -461,8 +385,8 @@ def run_crawl(
     else:
         if seeds is None:
             raise ValueError("seeds required for a fresh crawl")
-        new_rows, _, shards_dirty, cache_handle = state.ingest(_seed_candidates(seeds), 0)
-        state.commit(0, {"round": 0}, new_rows=new_rows, shards_dirty=shards_dirty)
+        new_rows, _, cache_handle = state.ingest(_seed_candidates(seeds), 0)
+        state.commit(0, {"round": 0}, new_rows=new_rows)
         cache_handle.unpersist()
         start_round = 1
 
@@ -475,7 +399,7 @@ def run_crawl(
 
         append_output(out_dir, "batches", batch.select("host", "url", "rank"), rnd)
         fetched, missing, pround, status = _fetch_and_parse(batch, pages, args, cfg)
-        new_rows, new_blocked, shards_dirty, cache_handle = state.ingest(pround.candidates, rnd)
+        new_rows, new_blocked, cache_handle = state.ingest(pround.candidates, rnd)
 
         for name, df in pround.parts.items():
             append_output(out_dir, name, df, rnd)
@@ -484,8 +408,7 @@ def run_crawl(
             round_metrics(rnd, batch, fetched, missing, new_blocked, new_rows).drop("round"),
             rnd,
         )
-        state.commit(rnd, {"round": rnd}, new_rows=new_rows, shards_dirty=shards_dirty,
-                     status=status)
+        state.commit(rnd, {"round": rnd}, new_rows=new_rows, status=status)
 
         batch.unpersist()
         pround.unpersist()
@@ -498,7 +421,7 @@ def run_crawl(
         store=store,
         frontier=state.fstate.view(),
         seen_exact=state.seen.as_df(),
-        seen_shards=state.shards,
+        seen_shards=state.seen.bloom(),
         outputs=_read_outputs(spark, out_dir),
     )
 

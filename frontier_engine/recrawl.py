@@ -13,10 +13,12 @@ Two halves, both scale-shaped:
   timestamp filter. No shuffle beyond the (optional) broadcast join.
 * **mechanism** (`seen_store.SeenExactStore.expire`) — tombstone the due
   keys in the exact store (O(expired) delta write, folded at
-  compaction). The bloom shards cannot delete, so they keep reporting
-  expired keys as stale positives; the tombstoned exact confirm drops
-  them from the dup set, so ``seen.filter_unseen`` stays exact and only
-  pays confirm-join traffic for them.
+  compaction). The bloom is the store's base index and cannot delete, so
+  until the next compaction it keeps reporting expired keys as stale
+  positives; the tombstoned exact confirm drops them from the dup set, so
+  ``seen.filter_unseen`` stays exact and only pays confirm-join traffic
+  for them. The compaction rewrites the base without the expired keys and
+  rebuilds the bloom from it, so they leave the bloom there.
 """
 
 from __future__ import annotations

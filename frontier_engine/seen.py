@@ -6,7 +6,7 @@ The reference keeps an in-memory ``set`` of listing ids
 request-fingerprint dedup — both unbounded driver memory, the scalability
 wall (SURVEY §4 X14). The engine's replacement is EXACT at any scale:
 
-* ``seen_shards`` — ``(shard_id int, bits binary)``: one bloom bit-array
+* bloom shards — ``(shard_id int, bits binary)``: one bloom bit-array
   per shard, ``shard_id = pmod(url_hash, n_shards)``. Membership and merge
   run as cogrouped ``applyInPandas`` over shard_id, so each shard's bits
   meet exactly the candidate rows that could hit it — no broadcast of the
@@ -19,6 +19,12 @@ wall (SURVEY §4 X14). The engine's replacement is EXACT at any scale:
   entirely. Net semantics = exact set membership; the bloom only prunes
   join traffic, so crawl ordering matches the reference's exact dedup.
 
+In the crawl both live in ``seen_store.SeenExactStore``: the bloom is the
+index of the store's bucketed base, built whenever a base is written and
+served by ``SeenExactStore.bloom()``. ``filter_unseen`` confirms bloom
+positives against the base only and anti-joins the small deltas
+directly, so there is no per-round bloom write.
+
 Bit indexing uses Kirsch-Mitzenmacher double hashing from the single
 64-bit ``xxhash64(canon_url)`` the frontier already carries — no extra
 hashing pass.
@@ -26,8 +32,9 @@ hashing pass.
 Bloom shards are the only membership structure and the cogrouped probe
 the only probe path. A shard filled past its sizing loses precision, not
 correctness: more positives reach the confirm, which stays exact. Expiry
-(TTL re-crawl) tombstones ``seen_exact`` rows, so a deleting filter
-(cuckoo) would only save confirm traffic for expired keys.
+(TTL re-crawl) tombstones ``seen_exact`` rows and the next base rewrite
+drops them from the bloom, so a deleting filter (cuckoo) would only save
+confirm traffic for expired keys until then.
 """
 
 from __future__ import annotations
@@ -144,18 +151,11 @@ def update_shards(
     n_shards: int,
     n_bits: int,
     k: int,
-    dirty_only: bool = False,
 ) -> DataFrame:
     """OR the hashes of *new_urls* (url_hash column) into the shard blobs.
 
-    Cogrouped merge — associative + commutative (property-tested), which is
-    what makes snapshot/resume sound (SURVEY §7 risks).
-
-    ``dirty_only=True`` emits ONLY shards that received adds (round-3
-    commit-bytes fix): untouched blobs are carried forward by manifest
-    reference instead of being rewritten every round — at the 10^10
-    design point a sparse round's commit drops from ~12 GB (all 1024
-    shards) to touched-shards-only.
+    Cogrouped merge — associative + commutative (property-tested).
+    ``SeenExactStore`` builds its base's bloom with it from empty shards.
     """
     adds = new_urls.select("url_hash").withColumn(
         "shard_id", shard_id_col(F.col("url_hash"), n_shards)
@@ -163,8 +163,6 @@ def update_shards(
 
     def merge(key, adf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(key[0])
-        if dirty_only and adf.empty:
-            return pd.DataFrame({"shard_id": pd.Series([], dtype="int32"), "bits": []})
         if not sdf.empty and sdf["bits"].iloc[0] is not None:
             bits = np.frombuffer(sdf["bits"].iloc[0], dtype=np.uint8).copy()
         else:
@@ -178,41 +176,6 @@ def update_shards(
 
     return adds.groupBy("shard_id").cogroup(shards.groupBy("shard_id")).applyInPandas(
         merge, SHARD_SCHEMA
-    )
-
-
-def resolve_shards(
-    spark: SparkSession,
-    base_path: str | None,
-    delta_paths: list[str],
-    extra_df: DataFrame | None = None,
-) -> DataFrame:
-    """Merge-on-read view over a shard-blob LSM: the base dir plus
-    per-round dirty-shard delta dirs, LATEST version of each shard_id
-    winning. ``extra_df`` (optional) joins the chain as the NEWEST
-    version — the compaction path folds a not-yet-written dirty frame
-    this way. Row count is O(n_shards × chain length) with the blob as
-    payload, and the one exchange (by shard_id) is the same partitioning
-    every consumer of the shards needs anyway."""
-    from pyspark.sql import Window
-
-    frames = []
-    if base_path:
-        frames.append(spark.read.parquet(base_path).withColumn("_v", F.lit(0)))
-    for i, p in enumerate(delta_paths):
-        frames.append(spark.read.parquet(p).withColumn("_v", F.lit(i + 1)))
-    if extra_df is not None:
-        frames.append(extra_df.withColumn("_v", F.lit(len(delta_paths) + 1)))
-    if not frames:
-        return empty_shards(spark)
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
-    w = Window.partitionBy("shard_id").orderBy(F.desc("_v"))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_v")
     )
 
 

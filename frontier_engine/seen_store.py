@@ -19,8 +19,17 @@ The store is LSM-shaped, the same merge-on-read discipline Iceberg gives:
 * **confirm** = positives ⋈ base (bucket join) ∪ positives ⋈ deltas
   (deltas are O(recent rounds), AQE broadcasts them).
 * **compact** folds deltas into a new base directory when they exceed
-  ``compact_ratio`` of the base row count — amortized O(1) rewrites,
+  ``COMPACT_RATIO`` of the base row count — amortized O(1) rewrites,
   exactly Iceberg's rewrite_data_files maintenance action.
+* **bloom** — the base's index: partitioned bloom shards
+  (``seen.update_shards``) built from the base every time a base is
+  written, into ``bloom-snap-<n>`` beside it, with its sizing
+  ``(n_shards, n_bits, k)`` recorded in the store meta. The probe
+  (``seen.filter_unseen``) confirms bloom positives against the base
+  only and anti-joins the deltas directly, so delta keys never need
+  bloom bits. "Every base key is a bloom positive" is then local to
+  this class; a base rewrite rebuilds the bloom from scratch, so keys
+  expired or folded away leave it too (the LSM per-run filter).
 
 Crash safety matches snapshots.py: every write lands in a fresh
 ``snap-<n>`` directory and becomes visible only when the round's manifest
@@ -40,30 +49,40 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frontier_engine import seen as S
+
 SEEN_COLS = "url_hash BIGINT, canon_url STRING"
 
 
 class SeenExactStore:
-    """State = (base_path | None, [delta_path, ...]); both serializable
-    into the snapshot manifest (``to_meta``/``from_meta``)."""
+    """State = (base_path | None, [delta_path, ...], bloom_path | None);
+    all serializable into the snapshot manifest (``to_meta``/``from_meta``).
+    A store keeps the bucket count and bloom sizing it was created with."""
+
+    # deltas fold into the base once they exceed this fraction of it
+    # (and at least COMPACT_MIN_ROWS rows), or past 16 delta dirs
+    COMPACT_RATIO = 0.25
+    COMPACT_MIN_ROWS = 1000
 
     def __init__(
         self,
         spark: SparkSession,
         root: str,
         n_buckets: int = 64,
-        compact_ratio: float = 0.25,
+        bloom_sizing: tuple[int, int, int] = (64, 1 << 20, 7),
         table_name: str | None = None,
     ):
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
-        self.compact_ratio = compact_ratio
+        # (n_shards, n_bits per shard, k hashes) of the base's bloom
+        self.bloom_sizing = tuple(int(x) for x in bloom_sizing)
         # catalog identifiers must be unique per store instance in a session
         self.table_name = table_name or (
             "seen_base_" + hex(abs(hash(os.path.abspath(root))))[2:12]
         )
         self.base_path: str | None = None
+        self.bloom_path: str | None = None
         self.delta_paths: list[str] = []
         self.tomb_paths: list[str] = []  # TTL-expired keys (recrawl)
         self._base_rows: int = 0
@@ -84,12 +103,16 @@ class SeenExactStore:
             "delta_rows": self._delta_rows,
             "n_buckets": self.n_buckets,
             "needs_dedup": self._needs_dedup,
+            "bloom_path": self.bloom_path,
+            "bloom_sizing": list(self.bloom_sizing),
         }
 
     @classmethod
     def from_meta(cls, spark: SparkSession, root: str, meta: dict) -> "SeenExactStore":
-        st = cls(spark, root, n_buckets=int(meta.get("n_buckets", 64)))
+        st = cls(spark, root, n_buckets=int(meta["n_buckets"]),
+                 bloom_sizing=meta["bloom_sizing"])
         st.base_path = meta.get("base_path")
+        st.bloom_path = meta.get("bloom_path")
         st.delta_paths = list(meta.get("delta_paths", []))
         st.tomb_paths = list(meta.get("tomb_paths", []))
         st._base_rows = int(meta.get("base_rows", 0))
@@ -133,13 +156,19 @@ class SeenExactStore:
             out = [p.join(F.broadcast(tombs), "url_hash", "left_anti") for p in out]
         return out
 
+    def bloom(self) -> DataFrame:
+        """The base's bloom shards ``(shard_id, bits)``, sized by
+        ``bloom_sizing``; pass both to ``seen.filter_unseen`` with
+        ``parts()``. Empty while there is no base."""
+        if self.bloom_path is None:
+            return S.empty_shards(self.spark)
+        return self.spark.read.parquet(self.bloom_path)
+
     def as_df(self) -> DataFrame:
         """Single-DataFrame view (tests/metrics; joins should use parts())."""
         ps = self.parts()
         if not ps:
-            from frontier_engine.seen import empty_seen_exact
-
-            return empty_seen_exact(self.spark)
+            return S.empty_seen_exact(self.spark)
         df = ps[0]
         for p in ps[1:]:
             df = df.unionByName(p)
@@ -162,11 +191,18 @@ class SeenExactStore:
         self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")  # keep files, drop entry
         self.base_path = path
         self._register(path)
-        self._base_rows = self.spark.table(self.table_name).count()
+        base = self.spark.table(self.table_name)
+        self._base_rows = base.count()
+        # the base's index, rebuilt from the written base alone
+        bloom_path = os.path.join(self.root, f"bloom-snap-{snap_id}")
+        S.update_shards(base, S.empty_shards(self.spark), *self.bloom_sizing).write.mode(
+            "overwrite"
+        ).parquet(bloom_path)
+        self.bloom_path = bloom_path
 
     def append(self, new_rows: DataFrame, snap_id: int | str, n_new: int | None = None) -> None:
         """Record a round's newly-seen rows: O(batch) delta write, then
-        fold into the base only when deltas outgrow ``compact_ratio``."""
+        fold into the base only when deltas outgrow ``COMPACT_RATIO``."""
         path = os.path.join(self.root, f"delta-snap-{snap_id}")
         new_rows.select("url_hash", "canon_url").write.mode("overwrite").parquet(path)
         if self.tomb_paths:
@@ -194,16 +230,18 @@ class SeenExactStore:
             # first append: promote straight to a bucketed base
             self.compact(snap_id)
             return
-        if self._delta_rows > max(1000, self._base_rows * self.compact_ratio) or len(
-            self.delta_paths
-        ) > 16:
+        if self._delta_rows > max(
+            self.COMPACT_MIN_ROWS, self._base_rows * self.COMPACT_RATIO
+        ) or len(self.delta_paths) > 16:
             self.compact(snap_id)
 
     def expire(self, expired: DataFrame, snap_id: int | str) -> None:
         """TTL/recrawl expiry: record *expired* url_hash keys as tombstones
         so they read as NOT seen (an O(expired) delta write — the base is
-        untouched; Iceberg MERGE-delete analog). The next ``compact`` folds
-        them away physically."""
+        untouched; Iceberg MERGE-delete analog). Until the next ``compact``
+        the bloom still reports them as positives, which the tombstoned
+        confirm drops; the compaction folds them out of the base and its
+        rebuilt bloom."""
         path = os.path.join(self.root, f"tomb-snap-{snap_id}")
         expired.select("url_hash").write.mode("overwrite").parquet(path)
         self.tomb_paths.append(path)
@@ -220,7 +258,8 @@ class SeenExactStore:
         dedupe by url_hash then (any row wins: url_hash = xxhash64 of
         canon_url, so equal hashes carry equal payloads).
         Tombstoned keys fall out here (as_df reads through parts(), which
-        subtracts them) and the tombstone list resets."""
+        subtracts them) and the tombstone list resets; the bloom is
+        rebuilt from the new base (``_write_base``)."""
         df = self.as_df()
         if self._needs_dedup:
             df = df.dropDuplicates(["url_hash"])

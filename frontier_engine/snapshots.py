@@ -17,7 +17,9 @@ a thin, API-honest stand-in with the same semantics a real catalog gives:
 
 On a real cluster this module is swapped for Iceberg
 (``df.writeTo(...).createOrReplace()`` + snapshot ids) with no engine
-code changes — the crawler only calls ``commit``/``load_latest``.
+code changes — the crawler only calls ``latest_id``/``manifest`` (resume),
+``commit`` + ``publish`` (the two-step round commit) and ``rollback``
+(time-travel and streaming replay).
 """
 
 from __future__ import annotations
@@ -156,7 +158,7 @@ class SnapshotStore:
         keep = set(retained)
         # A retained manifest references data two ways: its own tables,
         # and — for the crawl store — the ``meta`` state blocks
-        # (frontier base/delta/status chains, shard chains) that point
+        # (frontier base/delta/status chains, the seen store) that point
         # at EARLIER snapshots' table dirs which the head state still
         # reads (crawler commits each round's delta as that round's
         # table; the live view is the union across rounds). Walk the

@@ -12,8 +12,8 @@ alternative for deployments that want micro-batch semantics end-to-end:
   are the batch driver's by construction; this file adds only the
   stream's own rules (two-phase manifests, replay skip, metrics stash,
   candidate-file feedback).
-* :func:`frontier_ingest_stream` — streaming seen-set ingest over the
-  crawl's shard chain (``crawler._ShardState``).
+* :func:`frontier_ingest_stream` — streaming seen-set ingest into a
+  ``seen_store.SeenExactStore`` (the crawl's seen store and its bloom).
 * :func:`stream_pages` — a ``readStream`` over a pages directory with
   ``foreachBatch`` running the shared parse stage per micro-batch.
 * :func:`windowed_fetch_metrics` — event-time tumbling windows with a
@@ -284,13 +284,13 @@ def frontier_ingest_stream(
     """Streaming frontier ingest (ST2's seen set as a live stream): a
     ``readStream`` of candidate-URL files with ``foreachBatch`` running
     the SAME dedupe discipline as the batch crawler — canonicalize →
-    within-batch dedupe → bloom-shard prefilter → exact confirm against
-    the persistent SeenExactStore → append the batch's unseen keys to the
-    store and OR them into the shard blobs.
+    within-batch dedupe → prefilter by the store's base bloom → exact
+    confirm against the persistent SeenExactStore → append the batch's
+    unseen keys to the store (which rebuilds its bloom when it folds).
 
     Exactly-once without Iceberg: every per-batch write is keyed by
-    ``batch_id`` (store delta ``delta-snap-s<id>``, shard blob dir
-    ``shards/b<id>``, output partition ``batch_id=<id>``), so a replayed
+    ``batch_id`` (store dirs ``*-snap-s<id>``, output partition
+    ``batch_id=<id>``), so a replayed
     micro-batch overwrites its own files instead of duplicating —
     idempotent under the streaming engine's at-least-once foreachBatch
     contract. Unseen rows land in ``<root>/unseen`` partitioned by
@@ -304,7 +304,6 @@ def frontier_ingest_stream(
 
     from frontier_engine import seen as S
     from frontier_engine.canon import with_canon_columns
-    from frontier_engine.crawler import _ShardState
     from frontier_engine.seen_store import SeenExactStore
 
     schema = "url string"
@@ -315,30 +314,22 @@ def frontier_ingest_stream(
     )
     # engine-state manifest (atomic os.replace, same discipline as
     # snapshots.py): the streaming checkpoint only remembers which FILES
-    # were read — the seen store + shard blobs must survive a restart too
+    # were read — the seen store must survive a restart too
     meta_path = os.path.join(root, "ingest_meta.json")
     seen_root = os.path.join(root, "seen")
     if os.path.exists(meta_path):
         with open(meta_path) as f:
-            meta = json.load(f)
-        store = SeenExactStore.from_meta(spark, seen_root, meta["seen"])
-        # legacy single-path manifests load as a one-element chain
-        chain = meta.get("shard_paths") or (
-            [meta["shards_path"]] if meta.get("shards_path") else []
-        )
+            store = SeenExactStore.from_meta(spark, seen_root, json.load(f)["seen"])
     else:
-        store = SeenExactStore(spark, seen_root, n_buckets=cfg.seen_exact_buckets)
-        chain = []
-    # the crawl's shard chain: chain[0] is the base, the rest its deltas
-    sstate = _ShardState(spark, chain[0] if chain else None, chain[1:])
-    shards_root = os.path.join(root, "shards")
+        store = SeenExactStore(
+            spark, seen_root, n_buckets=cfg.seen_exact_buckets,
+            bloom_sizing=(cfg.n_seen_shards, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes),
+        )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        shards = sstate.view()
         cands = with_canon_columns(batch_df).dropDuplicates(["canon_url"])
         unseen = S.filter_unseen(
-            cands, shards, store.parts(), cfg.n_seen_shards,
-            cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
+            cands, store.bloom(), store.parts(), *store.bloom_sizing
         ).cache()
         n = unseen.count()
         (
@@ -348,21 +339,9 @@ def frontier_ingest_stream(
         )
         if n:
             store.append(unseen, f"s{batch_id}", n_new=n)
-            # dirty-shard delta per micro-batch, folded into a fresh base
-            # on the crawl's trigger (_ShardState.should_compact)
-            fold = sstate.should_compact()
-            merged = S.update_shards(
-                unseen, shards, cfg.n_seen_shards,
-                cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
-                dirty_only=not fold,  # fold ⇒ full merge = the new base
-            )
-            spath = os.path.join(shards_root, f"b{batch_id}")
-            merged.write.mode("overwrite").parquet(spath)
-            sstate.advance(spath, fold)
             tmp = meta_path + ".tmp"
             with open(tmp, "w") as f:
-                json.dump({"seen": store.to_meta(),
-                           "shard_paths": [sstate.base_path, *sstate.delta_paths]}, f)
+                json.dump({"seen": store.to_meta()}, f)
             os.replace(tmp, meta_path)
         unseen.unpersist()
 
@@ -481,10 +460,10 @@ def run_crawl_stream(
         if batch_id <= st["last_batch"]:
             return  # replayed batch whose round already fully committed
         rnd = st["round"]  # commits for state as of THIS ingest
-        new_rows, blocked_new, shards_dirty, cache_handle = state.ingest(batch_df, rnd)
+        new_rows, blocked_new, cache_handle = state.ingest(batch_df, rnd)
         state.commit(
             _next_snap(), {"round": rnd, "phase": "ingest", "last_batch_id": st["last_batch"]},
-            new_rows=new_rows, shards_dirty=shards_dirty,
+            new_rows=new_rows,
         )
 
         # Complete the PREVIOUS round's metrics row: its fetch-side half

@@ -35,12 +35,12 @@ def main():
     )
     cand = with_canon_columns(fr)
 
-    store = SeenExactStore(spark, os.path.join(root, "seen"), n_buckets=16)
+    store = SeenExactStore(
+        spark, os.path.join(root, "seen"), n_buckets=16,
+        bloom_sizing=(cfg.n_seen_shards, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes),
+    )
     store.append(cand.where(F.col("url_hash") % 2 == 0), "seed", n_new=100_000)
     store.append(cand.where(F.col("url_hash") % 10 == 1).limit(100), "r1", n_new=100)
-    shards = S.update_shards(
-        store.as_df(), S.empty_shards(spark), 16, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes
-    )
 
     print("=" * 20, "1. bucketed confirm join (positives SEMI base)")
     positives = cand.select("url_hash")
@@ -51,8 +51,8 @@ def main():
     n_ex = p.count("Exchange")
     print(f"AUDIT exchanges={n_ex} (expect 1: probe side only — base never moves)")
 
-    print("=" * 20, "2. full filter_unseen over the store (cogrouped bloom probe + 2 semi joins)")
-    unseen = S.filter_unseen(cand, shards, store.parts(), 16, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes)
+    print("=" * 20, "2. full filter_unseen over the store (its base bloom, cogrouped probe + 2 semi joins)")
+    unseen = S.filter_unseen(cand, store.bloom(), store.parts(), *store.bloom_sizing)
     p = plan(unseen)
     print(p[:5000])
     print(f"AUDIT exchanges={p.count('Exchange')} pythonNodes={p.count('ArrowEvalPython') + p.count('MapInPandas') + p.count('FlatMapGroupsInPandas')}")

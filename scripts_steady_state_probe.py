@@ -4,6 +4,10 @@ per-round wall time and per-round COMMIT BYTES — the evidence that round
 cost scales with the batch, not the accumulated state (VERDICT r1 items
 #1/#6 at multi-round scale; bench.py measures a single round).
 
+The seen set is the crawler's: a ``SeenExactStore`` whose bloom is the
+index of its base (``store.bloom()``), so a round writes its delta only
+and the bloom is rewritten only when a compaction rewrites the base.
+
 Run: python scripts_steady_state_probe.py [rounds] [urls_per_round]
 Prints one JSON line per round + a summary line.
 """
@@ -42,20 +46,21 @@ def main():
         round_seconds=1000.0, concurrent_per_host=100,
     )
     root = tempfile.mkdtemp(prefix="steady-")
-    store = SeenExactStore(spark, os.path.join(root, "seen"), n_buckets=64)
-    shards = S.empty_shards(spark)
-    shard_base, shard_chain = None, []  # dirty-shard LSM (round-3 discipline)
+    store = SeenExactStore(
+        spark, os.path.join(root, "seen"), n_buckets=64,
+        bloom_sizing=(cfg.n_seen_shards, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes),
+    )
 
     summary = []
     for r in range(rounds + 1):
         # round r's candidates: urls [r*n/2, r*n/2 + n) — 50% seen before.
-        # The FINAL extra round is SPARSE (32 new urls): the dirty-shard
-        # commit must shrink to touched-shards-only there (r3 item #3).
+        # The FINAL extra round is SPARSE (64 new urls): its commit must
+        # shrink to that round's delta (no bloom bits are written).
         sparse = r == rounds
         n_r = 64 if sparse else n
         # sparse round uses ids far past every previous round so its
-        # candidates are genuinely NEW (otherwise 0 unseen ⇒ 0 dirty
-        # shards trivially, demonstrating nothing)
+        # candidates are genuinely NEW (otherwise 0 unseen ⇒ an empty
+        # delta trivially, demonstrating nothing)
         lo = (n * 100) if sparse else r * (n // 2)
         base = spark.range(lo, lo + n_r)
         host = F.concat(F.lit("www.h"), (F.col("id") % 2000).cast("string"), F.lit(".example"))
@@ -72,15 +77,12 @@ def main():
         cand = with_canon_columns(spark.read.parquet(in_path))
 
         t0 = time.time()
-        unseen = S.filter_unseen(
-            cand, shards, store.parts(),
-            cfg.n_seen_shards, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes,
-        )
+        unseen = S.filter_unseen(cand, store.bloom(), store.parts(), *store.bloom_sizing)
         batch = rank_batch(unseen, cfg)
         n_batch = batch.count()
         t_sched = time.time() - t0
 
-        # commit: append new keys to the store + rebuild shards
+        # commit: append new keys to the store (a fold rewrites base + bloom)
         t0 = time.time()
         unseen_path = os.path.join(root, f"unseen-{r}")
         unseen.select("url_hash", "canon_url").write.mode("overwrite").parquet(unseen_path)
@@ -89,36 +91,19 @@ def main():
         pre_base = store.base_path
         store.append(new_keys, r, n_new=None)
         compacted = store.base_path != pre_base
-        # dirty-shard delta commit + merge-on-read chain (as the crawler)
-        dirty = S.update_shards(
-            new_keys, shards, cfg.n_seen_shards, cfg.bloom_bits_per_shard,
-            cfg.bloom_num_hashes, dirty_only=True,
-        )
-        sp = os.path.join(root, f"shards-{r}")
-        if len(shard_chain) >= 8:
-            S.resolve_shards(spark, shard_base, shard_chain, extra_df=dirty).write.mode(
-                "overwrite").parquet(sp)
-            shard_base, shard_chain = sp, []
-        else:
-            dirty.write.mode("overwrite").parquet(sp)
-            if shard_base is None:
-                shard_base = sp
-            else:
-                shard_chain.append(sp)
-        shards = S.resolve_shards(spark, shard_base, shard_chain)
         t_commit = time.time() - t0
 
         new_paths = [p for p in store.delta_paths if p not in pre_deltas]
         if compacted:
-            new_paths = [store.base_path]
-        commit_bytes = dir_bytes(*new_paths) + dir_bytes(sp)
+            new_paths = [store.base_path, store.bloom_path]
+        commit_bytes = dir_bytes(*new_paths)
         row = {
             "round": r, "candidates": n_r, "batch": n_batch,
             "seen_total": store._base_rows + store._delta_rows,
             "t_schedule_s": round(t_sched, 2), "t_commit_s": round(t_commit, 2),
             "urls_per_sec": round(n_r / (t_sched + t_commit), 1),
             "commit_mb": round(commit_bytes / 1e6, 1),
-            "dirty_shards": dirty.count() if sparse else None,
+            "bloom_mb": round(dir_bytes(store.bloom_path) / 1e6, 1) if compacted else 0.0,
             "compacted": compacted,
             "cached_frames": spark.sparkContext._jsc.getPersistentRDDs().size(),
             "sparse": sparse,
@@ -132,7 +117,7 @@ def main():
         "steady_urls_per_sec_median": sorted(r["urls_per_sec"] for r in steady)[len(steady) // 2] if steady else None,
         "steady_commit_mb": [r["commit_mb"] for r in summary],
         "sparse_round_commit_mb": summary[-1]["commit_mb"],
-        "sparse_round_dirty_shards": summary[-1]["dirty_shards"],
+        "bloom_rewrites": sum(r["compacted"] for r in summary),
         "t_schedule_trend": [r["t_schedule_s"] for r in summary],
         "cached_frames_trend": [r["cached_frames"] for r in summary],
     }))

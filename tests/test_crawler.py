@@ -4,6 +4,8 @@ and resume == straight-through (SURVEY §5.4/§5.5 — the north-rule gates).
 Uses a small dedicated world so the full loop stays fast.
 """
 
+import os
+
 import pytest
 
 from frontier_engine.config import EngineConfig
@@ -116,9 +118,11 @@ def test_lineage_manifest(crawl):
     man = res.store.manifest(sid)
     assert man["snapshot_id"] == sid
     assert man["parent_id"] == sid - 1
-    # delta-shaped commits: each round writes ONLY its deltas (plus the
-    # shard blobs); full frontier/seen tables appear only at compactions
-    assert "seen_shards" in man["tables"]
+    # delta-shaped commits: each round writes ONLY its deltas; full
+    # frontier/seen tables appear only at compactions, and the bloom is
+    # the seen store's base index (no table or meta key of its own)
+    assert "seen_shards" not in man["tables"]
+    assert "shards" not in man["meta"]
     assert ("frontier_delta" in man["tables"]) or ("frontier_base" in man["tables"])
     for info in man["tables"].values():
         assert info["rows"] == sum(p["rows"] for p in info["partitions"])
@@ -128,6 +132,8 @@ def test_lineage_manifest(crawl):
     assert fmeta["base_paths"] and isinstance(fmeta["delta_paths"], list)
     smeta = man["meta"]["seen_exact"]
     assert smeta["base_path"] is not None
+    assert smeta["bloom_path"] is not None
+    assert os.path.isdir(smeta["bloom_path"])
     # commit bytes scale with the batch, not the frontier: a non-compaction
     # round's frontier_delta is strictly smaller than the full frontier
     if "frontier_delta" in man["tables"]:
@@ -187,12 +193,15 @@ def test_aggressive_compaction_matches_simulator(spark, small_spec, small_world,
     """Both drivers share one fold, so a fold bug would pass the
     stream-vs-batch comparison on both sides: check the folded crawl
     against the reference simulator instead, and that the final
-    manifest's chains stay bounded by the fold triggers."""
+    manifest's chains stay bounded by the fold triggers. The seen store
+    folds at every append, so its bloom must cover the whole seen set."""
     from frontier_engine import crawler as C
+    from frontier_engine.seen_store import SeenExactStore
 
-    monkeypatch.setattr(C._ShardState, "COMPACT_CHAIN", 2)
-    cfg = EngineConfig(n_seen_shards=4, bloom_bits_per_shard=1 << 14, salt_partitions=2,
-                       frontier_compact_ratio=0.01)
+    monkeypatch.setattr(C._FrontierState, "COMPACT_RATIO", 0.01)
+    monkeypatch.setattr(SeenExactStore, "COMPACT_RATIO", 0.0)
+    monkeypatch.setattr(SeenExactStore, "COMPACT_MIN_ROWS", 0)
+    cfg = EngineConfig(n_seen_shards=4, bloom_bits_per_shard=1 << 14, salt_partitions=2)
     args = CrawlArgs(small_spec.checkin, small_spec.checkout, small_spec.price_max)
     pages = spark.createDataFrame(small_world["pages"])
     seeds = spark.createDataFrame(small_world["seeds"][["url"]])
@@ -205,13 +214,44 @@ def test_aggressive_compaction_matches_simulator(spark, small_spec, small_world,
     eng = sorted((r["round"], r.host, r.url, r["rank"]) for r in res.outputs["batches"].collect())
     assert eng == sorted(sim.batches)
     assert {r.canon_url for r in res.seen_exact.collect()} == sim.seen
-    # the folded shard chain still holds every seen key (a bloom has no
-    # false negatives); the exact store alone cannot show a lost fold
+    # the rebuilt bloom still holds every seen key (a bloom has no false
+    # negatives); the exact store alone cannot show a lost bloom build
     from frontier_engine.seen import bloom_positive_hashes
 
+    meta = res.store.manifest(res.store.latest_id())["meta"]
+    assert meta["seen_exact"]["delta_rows"] == 0  # every non-empty append folded
     positives = bloom_positive_hashes(res.seen_exact, res.seen_shards, cfg.n_seen_shards,
                                       cfg.bloom_bits_per_shard, cfg.bloom_num_hashes)
     assert positives.count() == res.seen_exact.count()
-    meta = res.store.manifest(res.store.latest_id())["meta"]
-    assert len(meta["shards"]["delta_paths"]) <= 2
     assert len(meta["frontier"]["delta_paths"]) + len(meta["frontier"]["status_paths"]) < res.rounds
+
+
+def test_resume_with_changed_bloom_sizing(spark, crawl, small_spec, small_world, small_cfg,
+                                          tmp_path_factory, monkeypatch):
+    """The bloom's sizing is part of the seen store's state: a crawl
+    resumed under a config with a different sizing keeps probing the
+    stored bloom with the sizing it was built with. Seen-store folds are
+    forced at every append so the bloom carries every seen key; the
+    result must equal the straight-through crawl."""
+    from frontier_engine.seen_store import SeenExactStore
+
+    monkeypatch.setattr(SeenExactStore, "COMPACT_RATIO", 0.0)
+    monkeypatch.setattr(SeenExactStore, "COMPACT_MIN_ROWS", 0)
+    args = CrawlArgs(small_spec.checkin, small_spec.checkout, small_spec.price_max)
+    pages = spark.createDataFrame(small_world["pages"])
+    seeds = spark.createDataFrame(small_world["seeds"][["url"]])
+    resized = EngineConfig(n_seen_shards=8, bloom_bits_per_shard=1 << 16, salt_partitions=2)
+    full, _ = crawl
+    d2 = str(tmp_path_factory.mktemp("sizing-resumed"))
+    run_crawl(spark, pages, small_cfg, args, seeds=seeds, max_rounds=2, snapshot_dir=d2)
+    cont = run_crawl(spark, pages, resized, args, max_rounds=40, snapshot_dir=d2, resume=True)
+    assert cont.rounds == full.rounds
+    b1 = sorted((r["round"], r.host, r.url, r["rank"]) for r in full.outputs["batches"].collect())
+    b2 = sorted((r["round"], r.host, r.url, r["rank"]) for r in cont.outputs["batches"].collect())
+    assert b1 == b2
+    s1 = {r.canon_url for r in full.seen_exact.collect()}
+    s2 = {r.canon_url for r in cont.seen_exact.collect()}
+    assert s1 == s2
+    smeta = cont.store.manifest(cont.store.latest_id())["meta"]["seen_exact"]
+    assert smeta["bloom_sizing"] == [small_cfg.n_seen_shards, small_cfg.bloom_bits_per_shard,
+                                     small_cfg.bloom_num_hashes]

@@ -64,55 +64,18 @@ def test_bit_positions_in_range(hashes):
     assert (pos < N_BITS).all() and (pos >= 0).all()
 
 
-def test_update_shards_dirty_only_emits_touched_shards(spark):
-    """Round-3 commit-bytes fix: with dirty_only=True, a round that adds
-    keys hitting a subset of shards emits ONLY those shard rows; the
-    resolved LSM view (base + deltas, latest wins) must equal the full
-    eager merge."""
-    from pyspark.sql import functions as F
-
-    from frontier_engine import seen as S
-
-    n_shards, n_bits, k = 16, 1 << 12, 5
-    base_keys = spark.range(500).select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
-    base = S.update_shards(base_keys, S.empty_shards(spark), n_shards, n_bits, k)
-    # adds constrained to exactly 3 shards
-    adds = (
-        spark.range(5000)
-        .select(F.xxhash64((F.col("id") + 9999).cast("string")).alias("url_hash"))
-        .where(F.pmod(F.col("url_hash"), F.lit(n_shards)).isin(1, 5, 9))
-    )
-    dirty = S.update_shards(adds, base, n_shards, n_bits, k, dirty_only=True)
-    got_ids = sorted(r.shard_id for r in dirty.select("shard_id").collect())
-    assert got_ids == [1, 5, 9]
-
-    full = S.update_shards(adds, base, n_shards, n_bits, k)
-    resolved = S.resolve_shards(spark, None, [], extra_df=dirty).unionByName(
-        base.join(dirty.select("shard_id"), "shard_id", "left_anti")
-    )
-    want = {r.shard_id: bytes(r.bits) for r in full.collect()}
-    got = {r.shard_id: bytes(r.bits) for r in resolved.collect()}
-    assert got == want
-
-
-def test_resolve_shards_latest_version_wins(spark, tmp_path):
-    from frontier_engine import seen as S
-
-    b0 = spark.createDataFrame([(0, bytearray(b"old0")), (1, bytearray(b"old1"))], S.SHARD_SCHEMA)
-    d1 = spark.createDataFrame([(1, bytearray(b"new1"))], S.SHARD_SCHEMA)
-    d2 = spark.createDataFrame([(0, bytearray(b"new0")), (2, bytearray(b"new2"))], S.SHARD_SCHEMA)
-    p0, p1, p2 = (str(tmp_path / n) for n in ("b0", "d1", "d2"))
-    b0.write.parquet(p0); d1.write.parquet(p1); d2.write.parquet(p2)
-    out = {r.shard_id: bytes(r.bits) for r in S.resolve_shards(spark, p0, [p1, p2]).collect()}
-    assert out == {0: b"new0", 1: b"new1", 2: b"new2"}
-
-
-def test_growth_past_sizing_stays_exact(spark, tmp_path):
+def test_growth_past_sizing_stays_exact(spark, tmp_path, monkeypatch):
     """The seen set must grow past its sizing without failing: 4 shards ×
-    2^10 bits hold ~400 keys at 10 bits/key. Push ≥ 40× that through the
-    crawler's dirty-shard LSM (update_shards(dirty_only) + resolve_shards)
-    over several rounds; the saturated bloom only loses precision, and
-    filter_unseen over inserted ∪ fresh keys still equals the anti-join."""
+    2^10 bits hold ~400 keys at 10 bits/key. Push ≥ 40× that through
+    SeenExactStore.append with a fold forced at every append (each fold
+    rebuilds the base's bloom); the saturated bloom only loses precision,
+    filter_unseen over inserted ∪ fresh keys still equals the anti-join,
+    every base key stays a bloom positive, and keys expired by ``expire``
+    leave the bloom at the next compaction."""
+    from frontier_engine.seen_store import SeenExactStore
+
+    monkeypatch.setattr(SeenExactStore, "COMPACT_RATIO", 0.0)
+    monkeypatch.setattr(SeenExactStore, "COMPACT_MIN_ROWS", 0)
     n_shards, n_bits, k = 4, 1 << 10, 7
     rounds, per_round = 4, 4_500  # 18,000 keys ≈ 45× nominal capacity
     keys = spark.range(rounds * per_round + 3_000).select(
@@ -121,24 +84,42 @@ def test_growth_past_sizing_stays_exact(spark, tmp_path):
         F.concat(F.lit("u://"), F.col("id").cast("string")).alias("canon_url"),
     )
     inserted = keys.where(F.col("id") < rounds * per_round)
+    store = SeenExactStore(spark, str(tmp_path / "seen"), n_buckets=4,
+                           bloom_sizing=(n_shards, n_bits, k))
 
-    base, deltas = None, []
+    def assert_bloom_covers_base():
+        base = spark.read.parquet(store.base_path)
+        positives = S.bloom_positive_hashes(base, store.bloom(), *store.bloom_sizing)
+        assert positives.count() == base.count() == store._base_rows
+
     for r in range(rounds):
-        shards = S.resolve_shards(spark, base, deltas)
-        new = inserted.where((F.col("id") / per_round).cast("int") == r)
-        dirty = S.update_shards(new, shards, n_shards, n_bits, k, dirty_only=True)
-        path = str(tmp_path / f"shards-{r}")
-        dirty.write.parquet(path)
-        if base is None:
-            base = path
-        else:
-            deltas.append(path)
-    shards = S.resolve_shards(spark, base, deltas)
-    assert shards.count() == n_shards
+        store.append(inserted.where((F.col("id") / per_round).cast("int") == r), r)
+        assert store.delta_paths == [], "every append folds"
+        assert_bloom_covers_base()
+    assert store.bloom().count() == n_shards
 
     exact = inserted.select("url_hash", "canon_url")
-    unseen = S.filter_unseen(keys, shards, exact, n_shards, n_bits, k)
+    unseen = S.filter_unseen(keys, store.bloom(), store.parts(), *store.bloom_sizing)
     want = keys.join(exact.select("url_hash"), "url_hash", "left_anti")
     got = sorted(r.id for r in unseen.select("id").collect())
     assert got == sorted(r.id for r in want.select("id").collect())
     assert got == list(range(rounds * per_round, rounds * per_round + 3_000))
+
+    # expire all but 100 keys: until the fold the saturated bloom still
+    # reports them; the fold drops them from the base, and the rebuilt
+    # (now sparse) bloom reports only the false positives a bloom of the
+    # 100 kept keys has
+    expired = inserted.where(F.col("id") >= 100)
+    n_expired = expired.count()
+    store.expire(expired, rounds)
+    stale = lambda: S.bloom_positive_hashes(expired, store.bloom(), *store.bloom_sizing)
+    assert stale().count() == n_expired
+    store.compact(rounds + 1)
+    assert_bloom_covers_base()
+    assert store._base_rows == 100
+    kept_bloom = S.update_shards(inserted.where(F.col("id") < 100), S.empty_shards(spark),
+                                 n_shards, n_bits, k)
+    fps = S.bloom_positive_hashes(expired, kept_bloom, n_shards, n_bits, k)
+    got = sorted(r.url_hash for r in stale().collect())
+    assert got == sorted(r.url_hash for r in fps.collect())
+    assert len(got) < n_expired // 1000

@@ -172,16 +172,18 @@ def test_frontier_ingest_stream_matches_batch_dedup(spark, tmp_path, cfg):
         ("https://b.example/q", 1),
         ("https://c.example/r", 2),
     }
-    # the persistent store holds exactly the distinct canon set
+    # the persistent store, reloaded from the stream's meta (which holds
+    # the seen store and nothing else), has exactly the distinct canon set
+    import json
+
     from frontier_engine.seen_store import SeenExactStore
 
-    store = SeenExactStore(spark, os.path.join(root, "seen"), n_buckets=scfg.seen_exact_buckets)
-    # the stream's store instance appended deltas under the same root
-    import glob as g
-
-    parts = g.glob(os.path.join(root, "seen", "*snap-*"))
-    canon = {r.canon_url for r in spark.read.parquet(*parts).collect()}
-    assert len(canon) == 4
+    with open(os.path.join(root, "ingest_meta.json")) as f:
+        meta = json.load(f)
+    assert list(meta) == ["seen"]
+    store = SeenExactStore.from_meta(spark, os.path.join(root, "seen"), meta["seen"])
+    canon = [r.canon_url for r in store.as_df().collect()]
+    assert len(canon) == len(set(canon)) == 4
 
 
 def test_frontier_ingest_stream_resumes_from_checkpoint(spark, tmp_path):
@@ -283,25 +285,28 @@ def test_streaming_crawl_equals_batch_crawl(spark, tmp_path_factory):
 
 
 def test_streaming_crawl_compacts_state_chains(spark, tmp_path_factory, monkeypatch):
-    """ADVICE r3: the streaming face must fold its shard/frontier chains
-    like the batch driver — aggressive compaction settings both keep the
-    manifest chains bounded AND leave the crawl's results unchanged."""
+    """ADVICE r3: the streaming face must fold its frontier chain and
+    seen store like the batch driver — aggressive compaction settings
+    both keep the manifest chains bounded AND leave the crawl's results
+    unchanged; the seen store, folded at every append, keeps a bloom
+    that covers the whole seen set."""
     from frontier_engine import crawler as C
     from frontier_engine.config import EngineConfig
     from frontier_engine.crawler import run_crawl
     from frontier_engine.fixtures import WorldSpec, generate_world
     from frontier_engine.parse import CrawlArgs
+    from frontier_engine.seen import bloom_positive_hashes
+    from frontier_engine.seen_store import SeenExactStore
     from frontier_engine.snapshots import SnapshotStore
     from frontier_engine.streaming import run_crawl_stream
 
-    monkeypatch.setattr(C._ShardState, "COMPACT_CHAIN", 2)
+    monkeypatch.setattr(C._FrontierState, "COMPACT_RATIO", 0.01)
+    monkeypatch.setattr(SeenExactStore, "COMPACT_RATIO", 0.0)
+    monkeypatch.setattr(SeenExactStore, "COMPACT_MIN_ROWS", 0)
     spec = WorldSpec(n_hosts=2, listings_total=12, max_reviews=40)
     world = generate_world(spec)
     args = CrawlArgs(spec.checkin, spec.checkout, spec.price_max)
-    cfg = EngineConfig(
-        n_seen_shards=4, bloom_bits_per_shard=1 << 14, salt_partitions=2,
-        frontier_compact_ratio=0.01,
-    )
+    cfg = EngineConfig(n_seen_shards=4, bloom_bits_per_shard=1 << 14, salt_partitions=2)
     pages = spark.createDataFrame(world["pages"])
     seeds = spark.createDataFrame(world["seeds"][["url"]])
 
@@ -324,10 +329,15 @@ def test_streaming_crawl_compacts_state_chains(spark, tmp_path_factory, monkeypa
         == {r.canon_url for r in batch_res.seen_exact.collect()}
     )
     # chains in the final manifest are bounded by the fold triggers, not
-    # O(rounds): shard deltas ≤ COMPACT_CHAIN, frontier folded at ratio
+    # O(rounds); the seen store's bloom covers seen_exact
     store = SnapshotStore(sdir)
     meta = store.manifest(store.latest_id())["meta"]
-    assert len(meta["shards"].get("delta_paths", [])) <= 2
+    assert "shards" not in meta
+    seen = SeenExactStore.from_meta(spark, os.path.join(sdir, "seen_exact_store"),
+                                   meta["seen_exact"])
+    assert seen._delta_rows == 0  # every non-empty append folded
+    positives = bloom_positive_hashes(stream_res["seen_exact"], seen.bloom(), *seen.bloom_sizing)
+    assert positives.count() == stream_res["seen_exact"].count()
     assert len(meta["frontier"]["delta_paths"]) + len(
         meta["frontier"]["status_paths"]
     ) < stream_res["rounds"]

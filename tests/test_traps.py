@@ -124,13 +124,13 @@ def test_cap_plan_no_single_partition(spark):
     assert plan.count("Window") >= 2
 
 
-def test_crawler_ingest_applies_trap_cap(spark):
+def test_crawler_ingest_applies_trap_cap(spark, tmp_path):
     """cfg.trap_cap budgets candidate admission per (host, template)
     family inside _ingest_candidates (opt-in; None = reference parity)."""
-    from frontier_engine import seen as S
     from frontier_engine.config import EngineConfig
     from frontier_engine.crawler import _ingest_candidates
     from frontier_engine.robots import RULES_SCHEMA
+    from frontier_engine.seen_store import SeenExactStore
 
     cand = _families(spark).select(
         "url", "host",
@@ -142,9 +142,8 @@ def test_crawler_ingest_applies_trap_cap(spark):
     base = dict(n_seen_shards=4, bloom_bits_per_shard=1 << 14, salt_partitions=2)
 
     def admitted(cfg):
-        pending, blocked, _, _, n, handle = _ingest_candidates(
-            cand, S.empty_shards(spark), [], rules, cfg, 0
-        )
+        seen = SeenExactStore(spark, str(tmp_path / "seen"))  # empty: nothing seen yet
+        pending, blocked, _, n, handle = _ingest_candidates(cand, seen, rules, cfg, 0)
         rows = pending.collect()
         handle.unpersist()
         return rows
