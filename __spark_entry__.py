@@ -1159,8 +1159,8 @@ def q_pii_clean(spark, sf_dir):
 
 
 def q_pack_sequences(spark, sf_dir):
-    """GPT-style sequence packing (textops.pack_sequences, r4; r5 adds
-    the tokenizer='bpe' method): the corpus' tokens laid end-to-end in
+    """GPT-style sequence packing (textops.pack_sequences_counted, r4;
+    r5 adds the method='bpe' count): the corpus' tokens laid end-to-end in
     doc_id order and cut into 64-token training sequences; output is the
     method-tagged (seq_id, doc_id, tok_start, n_toks) assignment union —
     method='ws' packs whitespace tokens, method='bpe' first TRAINS an
@@ -1175,15 +1175,14 @@ def q_pack_sequences(spark, sf_dir):
     exchange, plan-guarded) must produce identical assignments at any
     parallelism."""
     from frontier_engine.bpe import bpe_token_count_col, bpe_train
-    from frontier_engine.textops import pack_sequences_multi
+    from frontier_engine.textops import pack_sequences_counted
 
     d = _spread(_t(spark, sf_dir, "documents"), "doc_id").select("doc_id", "text")
     merges = bpe_train(d, num_merges=_BPE_NUM_MERGES, min_count=2)
-    # r6 perf: both tokenizations pack over ONE range partitioning
-    # (pack_sequences_multi — per-method rows identical to two
-    # pack_sequences calls; the sampling/persist/totals-collect jobs are
-    # paid once)
-    return pack_sequences_multi(
+    # r6 perf: both tokenizations pack over ONE range partitioning (the
+    # sampling/persist/totals-collect jobs are paid once); checkpointed
+    # so the persisted range layout can be released
+    out, handle = pack_sequences_counted(
         d,
         seq_len=64,
         counts={
@@ -1191,6 +1190,9 @@ def q_pack_sequences(spark, sf_dir):
             "bpe": bpe_token_count_col(F.col("text"), merges),
         },
     )
+    out = out.localCheckpoint(eager=True)
+    handle.unpersist()
+    return out
 
 
 _BPE_NUM_MERGES = 16

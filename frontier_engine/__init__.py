@@ -6,7 +6,8 @@ Scrapy 2.6 crawler) as declarative Spark DataFrame jobs:
 
 * frontier scheduling (priority queue + LIFO/DFO ordering, per-host
   politeness budgets, robots.txt filtering) — ``schedule.py``,
-  ``politeness.py``, ``robots.py``
+  ``robots.py``; ``schedule.py`` also owns the salted per-group top-k
+  and the per-partition prefix-sum offsets the text operators reuse
 * URL-seen dedup at 10^10-URL design scale (an exact bucketed store
   whose base carries partitioned bloom shards as its index, probed by
   cogroup; TTL re-crawl expiry by tombstones) — ``seen.py``,

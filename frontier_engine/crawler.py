@@ -60,7 +60,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from frontier_engine import parse as P
 from frontier_engine import seen as S
@@ -72,29 +71,6 @@ from frontier_engine.robots import rules_from_pages, split_allowed
 from frontier_engine.schedule import assign_discovered_seq_counted, priority_expr, rank_batch
 from frontier_engine.seen_store import SeenExactStore
 from frontier_engine.snapshots import SnapshotStore
-
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("canon_url", T.StringType()),
-        T.StructField("url_hash", T.LongType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("depth", T.IntegerType()),
-        T.StructField("listing_score", T.DoubleType()),
-        T.StructField("priority", T.DoubleType()),
-        T.StructField("discovered_seq", T.LongType()),
-        T.StructField("status", T.StringType()),
-    ]
-)
-
-BATCH_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("round", T.IntegerType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("rank", T.IntegerType()),
-    ]
-)
 
 OUTPUT_TABLES = ("search_results", "pdp_rows", "review_rows", "batches", "metrics")
 

@@ -31,11 +31,6 @@ try:  # pragma: no cover - environment-dependent
 except ImportError:  # pragma: no cover
     _lxml_html = None
 
-# void elements never hold text; listed for parser robustness only
-_VOID = frozenset(
-    "area base br col embed hr img input link meta param source track wbr".split()
-)
-
 
 class _TextContent(HTMLParser):
     """Collect character data exactly as lxml's text_content() would."""

@@ -370,9 +370,6 @@ REVIEWS_REQUEST_SCHEMA = T.StructType(
 )
 REVIEWS_VARIABLES_SCHEMA = T.StructType([T.StructField("request", REVIEWS_REQUEST_SCHEMA)])
 
-PDP_REQUEST_SCHEMA = T.StructType([T.StructField("id", T.StringType())])
-PDP_VARIABLES_SCHEMA = T.StructType([T.StructField("request", PDP_REQUEST_SCHEMA)])
-
 
 # --------------------------------------------------------------------------
 # URL expressions (ApiBase.build_airbnb_url / _put_json_param_strings parity)

@@ -22,6 +22,12 @@ re-rank the ≤ n_salts × budget survivors per host. Phase 2 sees a
 bounded, tiny row count per host regardless of frontier size, so the
 final window is no longer skew-bound. Results are IDENTICAL to a naive
 single window (phase 1 never drops a row the global top-k needs).
+
+The module owns the two distributed primitives the engine shares:
+:func:`top_k_per_group` (the salted two-phase window, also behind
+``textops.stratified_sample`` and ``traps.cap_per_template``) and :func:`partition_offset_col` (the
+per-partition offsets of a range-partitioned prefix sum, behind
+:func:`assign_discovered_seq_counted` and ``textops.pack_sequences_counted``).
 """
 
 from __future__ import annotations
@@ -49,90 +55,93 @@ def host_budget_col(cfg: EngineConfig) -> Column:
     return F.greatest(F.lit(1), F.least(per_round, conc.cast("long"))).alias("host_budget")
 
 
+def top_k_per_group(
+    df: DataFrame, group_cols: list[str], order: list[Column], limit: Column, rank_col: str,
+    salt_hash: Column | None = None, fan_out: int = 1,
+) -> DataFrame:
+    """Rows of *df* whose ``row_number`` by *order* within *group_cols* is
+    at most *limit*, numbered in *rank_col*. With a *salt_hash* and
+    ``fan_out > 1`` a phase 1 first keeps the per-(group,
+    ``pmod(salt_hash, fan_out)``) top-*limit* rows: a salt can contribute
+    at most the whole limit, so phase 2 sees at most ``fan_out × limit``
+    rows per group and the result is identical to the single window.
+    Shared by :func:`rank_batch`, ``textops.stratified_sample`` and
+    ``traps.cap_per_template``."""
+    if salt_hash is not None and fan_out > 1:
+        # phase 1: per-(group, salt) pre-top-k — kills the hot-group straggler
+        w1 = Window.partitionBy(*group_cols, "salt").orderBy(*order)
+        df = (
+            df.withColumn("salt", F.pmod(salt_hash, F.lit(fan_out)))
+            .withColumn("_r1", F.row_number().over(w1))
+            .where(F.col("_r1") <= limit)
+            .drop("_r1", "salt")
+        )
+
+    # phase 2: exact per-group rank over the bounded survivors
+    w2 = Window.partitionBy(*group_cols).orderBy(*order)
+    return df.withColumn(rank_col, F.row_number().over(w2)).where(F.col(rank_col) <= limit)
+
+
 def rank_batch(pending: DataFrame, cfg: EngineConfig, salted: bool = True) -> DataFrame:
     """Top-``host_budget`` pending URLs per host by (priority DESC,
     discovered_seq DESC). Input must carry: host, url, priority,
     discovered_seq, crawl_delay_s (nullable). Output adds ``rank``.
     """
-    order = [F.desc("priority"), F.desc("discovered_seq")]
-    budget = host_budget_col(cfg)
-    df = pending.withColumn("host_budget", budget)
-
-    if salted and cfg.salt_partitions > 1:
-        # phase 1: per-(host, salt) pre-top-k — kills the hot-host straggler
-        salt = F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.salt_partitions))
-        w1 = Window.partitionBy("host", "salt").orderBy(*order)
-        df = (
-            df.withColumn("salt", salt)
-            .withColumn("_r1", F.row_number().over(w1))
-            .where(F.col("_r1") <= F.col("host_budget"))
-            .drop("_r1", "salt")
-        )
-
-    # phase 2: exact per-host rank over the bounded survivors
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        df.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= F.col("host_budget"))
-        .drop("host_budget")
-    )
+    return top_k_per_group(
+        pending.withColumn("host_budget", host_budget_col(cfg)),
+        ["host"], [F.desc("priority"), F.desc("discovered_seq")], F.col("host_budget"), "rank",
+        salt_hash=F.xxhash64(F.col("url")) if salted else None,
+        fan_out=cfg.salt_partitions,
+    ).drop("host_budget")
 
 
-def assign_discovered_seq(
-    candidates: DataFrame, seq_offset: int, n_parts: int | None = None
-) -> DataFrame:
-    """Deterministic global discovery sequence for a round's new candidates.
-
-    Within a round, candidates are ordered by (depth, parent_url, url) —
-    a stable, partition-independent total order (the triple is unique per
-    row: canon-dedupe keeps one row per canon_url and equal urls share a
-    canon) — and numbered from ``seq_offset``. Across rounds the offset
-    grows monotonically, so (priority DESC, discovered_seq DESC) pops
-    newest-round-first: the deterministic restatement of the framework's
-    LIFO/DFO (SURVEY §7 "Deterministic ordering parity"). The simulator
-    implements the identical rule, making round batches byte-comparable.
-
-    Scale shape (VERDICT round-1 item #5 — no single-task global sort):
-    global rank = range-partition on the key + sort within partitions +
-    per-partition offset. ``monotonically_increasing_id`` encodes
-    (partition_id << 33) + local position in iteration (= sorted) order,
-    so rank falls out of pure JVM expressions; the only extra job is a
-    map-side-aggregated per-partition count (``n_parts`` rows to the
-    driver). A 10^7-candidate round runs as ``n_parts`` parallel sorts.
-
-    RETENTION COST (ADVICE r3): this convenience wrapper eagerly
-    ``localCheckpoint``s the result — the offsets were computed against
-    the PERSISTED range partitioning, and a recompute after unpersist
-    could re-sample different RangePartitioner boundaries (seeded by rdd
-    id) and shift every seq. The checkpointed blocks stay resident in
-    executor storage until the returned DataFrame is garbage-collected
-    (callers get no release handle), and the truncated lineage is
-    unrecoverable on executor loss. Fine for one-shot callers; ANY loop
-    or long-lived caller must use :func:`assign_discovered_seq_counted`
-    instead (as the crawler does), which returns the persisted handle so
-    the caller controls exactly when storage is released — no
-    checkpoint, no pinned blocks.
-    """
-    out, _n, handle = assign_discovered_seq_counted(candidates, seq_offset, n_parts)
-    out = out.localCheckpoint(eager=True)
-    handle.unpersist()
-    return out
+def partition_offset_col(totals: dict[int, int | None], pid: Column) -> Column:
+    """Start offset of each row's partition in the global order: the sum
+    of *totals* (partition id → its row or token total, ``None`` read as
+    0) over all lower partition ids, looked up by *pid* in a literal map.
+    The driver sees one total per partition, never rows."""
+    kv, acc = [], 0
+    for p in sorted(totals):
+        kv += [F.lit(int(p)), F.lit(acc)]
+        acc += int(totals[p] or 0)
+    if not kv:
+        return F.lit(0).cast("long")
+    # try_element_at: ANSI mode makes plain element_at throw on a missing
+    # key (a partition with no rows has no total)
+    return F.coalesce(F.try_element_at(F.create_map(*kv), pid), F.lit(0)).cast("long")
 
 
 def assign_discovered_seq_counted(
     candidates: DataFrame, seq_offset: int, n_parts: int | None = None
 ) -> tuple[DataFrame, int, DataFrame]:
-    """assign_discovered_seq + the round's candidate count for free (the
-    per-partition count job already totals it — saves the crawler a
-    separate count pass).
+    """Deterministic global discovery sequence for a round's new
+    candidates, plus the round's candidate count.
 
-    Returns ``(out, total, persisted_handle)``. The THIRD element is the
-    actually-persisted DataFrame: derived frames (withColumn/drop plans)
-    do NOT uncache it — Spark's uncacheQuery matches the exact cached
-    plan — so the caller must call ``handle.unpersist()`` once the
-    round's outputs are materialized (ADVICE r2: the crawler's
-    ``unseen.unpersist()`` was a silent no-op, leaking one cached frame
-    per round)."""
+    Within a round, candidates are ordered by (depth, parent_url, url) —
+    a stable, partition-independent total order (the triple is unique per
+    row: canon-dedupe keeps one row per canon_url and equal urls share a
+    canon) — and numbered from ``seq_offset + 1``. Across rounds the
+    offset grows monotonically, so (priority DESC, discovered_seq DESC)
+    pops newest-round-first: the deterministic restatement of the
+    framework's LIFO/DFO (SURVEY §7 "Deterministic ordering parity"). The
+    simulator implements the identical rule, making round batches
+    byte-comparable.
+
+    Scale shape (no single-task global sort): range-partition on the key
+    + sort within partitions + per-partition offset
+    (:func:`partition_offset_col`). ``monotonically_increasing_id``
+    encodes (partition_id << 33) + local position in iteration (= sorted)
+    order, so rank falls out of pure JVM expressions; the only extra job
+    is a map-side-aggregated per-partition count (``n_parts`` rows to the
+    driver), which also gives the total. A 10^7-candidate round runs as
+    ``n_parts`` parallel sorts.
+
+    Returns ``(out, total, persisted_handle)``. The offsets were computed
+    against the PERSISTED range partitioning (a recompute could re-sample
+    different RangePartitioner boundaries and shift every seq), and
+    derived frames do NOT uncache it — Spark's uncacheQuery matches the
+    exact cached plan — so the caller must call ``handle.unpersist()``
+    once the round's outputs are materialized."""
     keys = ["depth", "parent_url", "url"]
     spark = candidates.sparkSession
     n_parts = n_parts or spark.sparkContext.defaultParallelism
@@ -143,37 +152,18 @@ def assign_discovered_seq_counted(
     )
     # persist: the counts job and the consumer must see ONE partitioning
     ranged = ranged.persist()
+    pid = F.shiftright(F.col("_mid"), 33)
     counts = {
         r["_pid"]: r["cnt"]
-        for r in ranged.groupBy(
-            F.shiftright(F.col("_mid"), 33).alias("_pid")
-        ).agg(F.count("*").alias("cnt")).collect()
+        for r in ranged.groupBy(pid.alias("_pid")).agg(F.count("*").alias("cnt")).collect()
     }
-    total = int(sum(counts.values()))
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if offsets:
-        kv = []
-        for pid, off in offsets.items():
-            kv += [F.lit(int(pid)), F.lit(int(off))]
-        # try_element_at: ANSI mode makes plain element_at throw on a
-        # missing key; every pid is present, but don't couple to that
-        off_expr = F.coalesce(
-            F.try_element_at(F.create_map(*kv), F.shiftright(F.col("_mid"), 33).cast("int")),
-            F.lit(0),
-        ).cast("long")
-    else:
-        off_expr = F.lit(0).cast("long")
     out = ranged.withColumn(
         "discovered_seq",
         (
             F.lit(seq_offset).cast("long")
-            + off_expr
+            + partition_offset_col(counts, pid.cast("int"))
             + F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
             + F.lit(1)
         ),
     ).drop("_mid")
-    return out, total, ranged
+    return out, int(sum(counts.values())), ranged

@@ -222,7 +222,7 @@ def write_cdx_index(
     The ranged frame is persisted across the write and the boundary
     aggregation (two jobs) — a recompute between them could re-sample
     RangePartitioner boundaries and desynchronize the manifest from the
-    files (same discipline as ``schedule.assign_discovered_seq``).
+    files (same discipline as ``schedule.assign_discovered_seq_counted``).
     Returns the manifest dict. Driver traffic: n_parts boundary rows."""
     import json
     import os

@@ -67,8 +67,6 @@ def stream_pages(
     Returns the started StreamingQuery. ``trigger_once`` processes all
     available input then stops (the testable mode); continuous deployments
     drop it."""
-    from frontier_engine.fixtures import WorldSpec  # schema donor only
-
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
     src = (
         spark.readStream.schema(schema)

@@ -13,16 +13,24 @@ Design notes for 100 TB:
   shingling/minhash use built-in hash/transform/aggregate, staying in
   whole-stage codegen;
 * minhash_signatures computes K hash functions per shingle via
-  ``xxhash64(concat(shingle, seed_i))`` then min-aggregates — one shuffle
+  ``xxhash64(shingle_hash, i)`` then min-aggregates — one shuffle
   (groupBy doc) regardless of K;
-* LSH banding turns all-pairs O(n²) into per-bucket joins; candidate
-  pairs are verified with exact Jaccard so output has no false positives.
+* LSH banding (``_band_buckets``, one implementation for the self-join
+  and the corpus join) turns all-pairs O(n²) into per-bucket joins;
+  candidate pairs are verified with exact Jaccard so output has no false
+  positives;
+* the distributed primitives are the crawl's own, from ``schedule``:
+  ``stratified_sample`` ranks with ``top_k_per_group`` and
+  ``pack_sequences_counted`` takes its prefix-sum offsets from
+  ``partition_offset_col``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from frontier_engine.schedule import partition_offset_col, top_k_per_group
 
 # --------------------------------------------------------------------------
 # deterministic shingles + exact dedup
@@ -94,42 +102,25 @@ def word_shingles(col: Column, n: int = 3) -> Column:
 def shingle_hash_rows(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
-    """(id, sh_h) — one row per DISTINCT word-n-gram hash, WITHOUT ever
-    materializing the n-gram strings (r4 perf): each word is hashed once
-    (its own projection, so the word-hash array is computed one time —
-    inlining it into the per-shingle lambda would re-evaluate the whole
-    transform per element access, an O(words²) blowup), then a shingle's
-    hash is xxhash64 over its n consecutive word hashes — constant cost
-    per shingle instead of an O(shingle-bytes) string build + hash.
-    Signature/banding consumers only ever hash the shingle anyway (the
-    exact-Jaccard verify still uses :func:`word_shingles` strings)."""
-    words = F.split(normalized_text(F.col(text_col)), " ")
-    step1 = docs.select(
-        F.col(id_col), F.transform(words, lambda w: F.xxhash64(w)).alias("_wh")
-    )
-    wh = F.col("_wh")
-    k = F.size(wh) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(k, F.lit(1)) - 1),
-        lambda i: F.xxhash64(*[F.get(wh, i + j) for j in range(n)]),
-    )
-    empty = F.array().cast("array<bigint>")
-    return step1.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(F.when(k > 0, grams).otherwise(empty))
-        ).alias("sh_h"),
+    """(id, sh_h) — one row per DISTINCT word-n-gram hash: the exploded
+    :func:`shingle_hash_array`. The n-gram strings are never materialized
+    (r4 perf); signature/banding consumers only ever hash the shingle
+    anyway (the exact-Jaccard verify still uses :func:`word_shingles`
+    strings)."""
+    return docs.select(
+        F.col(id_col), F.explode(shingle_hash_array(F.col(text_col), n)).alias("sh_h")
     )
 
 
 def shingle_hash_array(col: Column, n: int = 3) -> Column:
     """array<bigint> of DISTINCT word-n-gram chain hashes of the
-    normalized text — the per-row array form of :func:`shingle_hash_rows`
-    (same hashes: per-word xxhash64, then xxhash64 over each window of n
-    word hashes; the gram string is never built). Set cardinalities over
-    these arrays equal the string-set cardinalities modulo 64-bit
-    collisions — the same keying class every hash-verify in this module
-    already accepts. Word-hash array is lambda-bound (see word_shingles)
+    normalized text (:func:`shingle_hash_rows` explodes it): each word
+    is hashed once, then a shingle's hash is xxhash64 over its n
+    consecutive word hashes — constant cost per shingle instead of an
+    O(shingle-bytes) string build + hash; the gram string is never
+    built. Set cardinalities over these arrays equal the string-set
+    cardinalities modulo 64-bit collisions — the same keying class every
+    hash-verify in this module already accepts. Word-hash array is lambda-bound (see word_shingles)
     so it evaluates once per row."""
 
     def grams_of(wh: Column) -> Column:
@@ -180,17 +171,7 @@ def lsh_candidate_pairs(
     (id_a < id_b). Self-join per bucket — each bucket is tiny for
     non-pathological corpora; pathological buckets are exactly the
     near-dup clusters we're hunting."""
-    banded = sigs.select(
-        id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.concat_ws(",", F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)), b
-                ),
-            )
-        ).alias("band", "bucket"),
-    )
+    banded = _band_buckets(sigs, id_col, bands, rows_per_band)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -367,7 +348,8 @@ def stratified_sample(
     recomputes it verbatim) — and rank ≤ quota survives. Groups absent
     from *quotas* are dropped.
 
-    Skew shape (same two-phase trick as schedule.rank_batch): a group
+    Skew shape (the two-phase ``schedule.top_k_per_group`` that
+    ``rank_batch`` also runs): a group
     holding half the corpus would make one window partition the
     straggler, so phase 1 pre-top-ks within (group, salt) — each salt
     can contribute at most the full quota — and phase 2 ranks the
@@ -376,29 +358,16 @@ def stratified_sample(
     needs). For quotas so large the survivor set itself is huge, use a
     hash-threshold rate instead (keep iff pmod(hash, M) < rate·M —
     stateless, shuffle-free, approximate counts)."""
-    from pyspark.sql import Window
-
     kv = []
     for g, q in quotas.items():
         kv += [F.lit(g), F.lit(int(q))]
     quota_col = F.try_element_at(F.create_map(*kv), F.col(group_col))
     df = docs.withColumn("_quota", quota_col).where(F.col("_quota").isNotNull())
-    order = [F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc()]
-    if salt_partitions > 1:
-        salt = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(1)), F.lit(salt_partitions))
-        w1 = Window.partitionBy(group_col, "salt").orderBy(*order)
-        df = (
-            df.withColumn("salt", salt)
-            .withColumn("_r1", F.row_number().over(w1))
-            .where(F.col("_r1") <= F.col("_quota"))
-            .drop("_r1", "salt")
-        )
-    w2 = Window.partitionBy(group_col).orderBy(*order)
-    return (
-        df.withColumn("sample_rank", F.row_number().over(w2))
-        .where(F.col("sample_rank") <= F.col("_quota"))
-        .drop("_quota")
-    )
+    return top_k_per_group(
+        df, [group_col], [F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc()],
+        F.col("_quota"), "sample_rank",
+        salt_hash=F.xxhash64(F.col(id_col).cast("string"), F.lit(1)), fan_out=salt_partitions,
+    ).drop("_quota")
 
 
 # --------------------------------------------------------------------------
@@ -1334,133 +1303,48 @@ def repeated_line_dedup(
 def pack_sequences_counted(
     docs: DataFrame,
     seq_len: int = 2048,
-    text_col: str = "text",
+    counts: dict[str, Column] | None = None,
     id_col: str = "doc_id",
     n_parts: int | None = None,
-    tokenizer: str = "ws",
-    bpe_merges: list[tuple[str, str]] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """GPT-style concat-and-chunk sequence packing (Brown et al. 2020
     §2.2 pack-to-context; T5's denoiser batching): lay every document's
-    whitespace tokens end-to-end in *id_col* order and cut the stream
-    into fixed *seq_len* windows. Emits the ASSIGNMENT table —
-    ``(seq_id, doc_id, tok_start, n_toks)``, one row per (sequence,
-    document-slice) with ``tok_start`` 0-based within the doc — which is
-    what a training loader actually needs (it gathers the token slices;
-    materializing concatenated text would be pure write amplification).
-    A document longer than *seq_len* spans multiple sequences; every
-    sequence holds exactly *seq_len* tokens except the last.
+    tokens end-to-end in *id_col* order and cut the stream into fixed
+    *seq_len* windows. Emits the ASSIGNMENT table —
+    ``(seq_id, doc_id, tok_start, n_toks, method)``, one row per
+    (sequence, document-slice) with ``tok_start`` 0-based within the doc
+    — which is what a training loader actually needs (it gathers the
+    token slices; materializing concatenated text would be pure write
+    amplification). A document longer than *seq_len* spans multiple
+    sequences; every sequence holds exactly *seq_len* tokens except the
+    last.
+
+    *counts* maps a method name to its per-document token-count Column
+    and defaults to ``{"ws": <whitespace tokens of text>}``; a
+    tokenizer-accurate pack passes e.g.
+    ``{"bpe": bpe.bpe_token_count_col(text, merges)}`` (the merges enter
+    the plan as a literal JVM replace chain — no UDF before the
+    prefix-sum). Every method packs over ONE range partitioning: the
+    global cumsum depends only on id order and the counts, so each
+    method's rows equal a run with that method alone, while the range
+    sampling job, the persisted layout and the per-partition-totals
+    collect are paid once (r6 perf). Zero-count documents add nothing to
+    the prefix sums and are dropped per method before the span explode
+    (``sequence(a, b<a)`` descends and would emit phantom spans).
 
     Scale shape — the distributed prefix-sum, same discipline as
-    ``schedule.assign_discovered_seq``: range-partition by *id_col*,
-    per-partition token totals to the driver (``n_parts`` rows, never
-    data), partition start offsets broadcast back as a literal map, then
-    a WITHIN-partition cumsum window keyed on the physical partition id —
-    no SinglePartition exchange anywhere (plan-guarded). The one
-    exchange after the range partition carries three long columns per
-    doc, never text. Returns ``(assignments, persisted_handle)``; the
-    caller must ``handle.unpersist()`` after materializing (the offsets
-    were computed against the PERSISTED range partitioning — a recompute
-    could re-sample RangePartitioner boundaries and shift every seq)."""
-    from pyspark.sql import Window
-
-    spark = docs.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    if tokenizer == "bpe":
-        # tokenizer-accurate packing: the learned merges enter the plan
-        # as a literal JVM replace chain (frontier_engine.bpe) — the
-        # count column stays codegen'd, no UDF before the prefix-sum
-        if bpe_merges is None:
-            raise ValueError("tokenizer='bpe' requires bpe_merges (see bpe.bpe_train)")
-        from frontier_engine.bpe import bpe_token_count_col
-
-        tok_count = bpe_token_count_col(F.col(text_col), bpe_merges)
-    elif tokenizer == "ws":
-        tok_count = F.size(F.split(F.col(text_col), r"\s+")).cast("long")
-    else:
-        raise ValueError(f"unknown tokenizer {tokenizer!r} (expected 'ws' or 'bpe')")
-    # zero-token docs (possible under BPE; never under ws where split
-    # yields ['']) contribute nothing to the stream — and would trip
-    # sequence(a, b<a), which DESCENDS, into emitting phantom spans
-    toks = docs.select(F.col(id_col), tok_count.cast("long").alias("_toks")).where(
-        F.col("_toks") > 0
-    )
-    ranged = (
-        toks.repartitionByRange(n_parts, F.col(id_col))
-        .sortWithinPartitions(id_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    part_tot = {
-        r["_pid"]: r["t"]
-        for r in ranged.groupBy("_pid").agg(F.sum("_toks").alias("t")).collect()
-    }
-    offs, acc = {}, 0
-    for pid in sorted(part_tot):
-        offs[pid] = acc
-        acc += int(part_tot[pid])
-    if offs:
-        kv = []
-        for pid, off in offs.items():
-            kv += [F.lit(int(pid)), F.lit(int(off))]
-        off_expr = F.coalesce(
-            F.try_element_at(F.create_map(*kv), F.col("_pid")), F.lit(0)
-        ).cast("long")
-    else:
-        off_expr = F.lit(0).cast("long")
-    w = Window.partitionBy("_pid").orderBy(id_col)
-    s = F.lit(int(seq_len)).cast("long")
-    cum = (
-        ranged.withColumn("_end", F.sum("_toks").over(w))
-        .withColumn("_start", off_expr + F.col("_end") - F.col("_toks"))
-    )
-    out = cum.select(
-        F.col(id_col),
-        "_start",
-        "_toks",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("_start") / s),
-                F.floor((F.col("_start") + F.col("_toks") - F.lit(1)) / s),
-            )
-        ).alias("seq_id"),
-    ).select(
-        F.col("seq_id").cast("long").alias("seq_id"),
-        F.col(id_col),
-        F.greatest(F.lit(0).cast("long"), F.col("seq_id") * s - F.col("_start"))
-        .cast("long")
-        .alias("tok_start"),
-        (
-            F.least((F.col("seq_id") + 1) * s, F.col("_start") + F.col("_toks"))
-            - F.greatest(F.col("seq_id") * s, F.col("_start"))
-        )
-        .cast("long")
-        .alias("n_toks"),
-    )
-    return out, ranged
-
-
-def pack_sequences_multi(
-    docs: DataFrame,
-    seq_len: int,
-    counts: dict[str, Column],
-    id_col: str = "doc_id",
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Pack SEVERAL tokenizations over ONE range partitioning (r6 perf):
-    per-method output rows are identical to running
-    :func:`pack_sequences` once per method — the global cumsum depends
-    only on id order and the counts (zero-count rows add nothing to the
-    prefix sums and are filtered per method before the span explode,
-    exactly as the single-method form filters them up front; range
-    boundaries only place rows, never change offsets) — but the range
-    sampling job, the persisted layout, and the per-partition-totals
-    collect are paid once instead of once per method. *counts* maps
-    method name → token-count Column; output adds a ``method`` tag.
-    Result is eagerly localCheckpoint'ed (same re-sampling caveat as
-    :func:`pack_sequences`)."""
-    from pyspark.sql import Window
-
+    ``schedule.assign_discovered_seq_counted``: range-partition by
+    *id_col*, per-partition token totals to the driver (``n_parts`` rows,
+    never data), partition start offsets broadcast back as a literal map
+    (``schedule.partition_offset_col``), then a WITHIN-partition cumsum
+    window keyed on the physical partition id — no SinglePartition
+    exchange anywhere (plan-guarded). Returns ``(assignments,
+    persisted_handle)``; the caller must ``handle.unpersist()`` after
+    materializing (the offsets were computed against the PERSISTED range
+    partitioning — a recompute could re-sample RangePartitioner
+    boundaries and shift every seq)."""
+    if counts is None:
+        counts = {"ws": F.size(F.split(F.col("text"), r"\s+")).cast("long")}
     spark = docs.sparkSession
     n_parts = n_parts or spark.sparkContext.defaultParallelism
     ranged = (
@@ -1480,20 +1364,7 @@ def pack_sequences_multi(
     s = F.lit(int(seq_len)).cast("long")
     out = None
     for m in counts:
-        part_tot = {r["_pid"]: r[m] for r in tot}
-        offs, acc = {}, 0
-        for pid in sorted(part_tot):
-            offs[pid] = acc
-            acc += int(part_tot[pid] or 0)
-        if offs:
-            kv = []
-            for pid, off in offs.items():
-                kv += [F.lit(int(pid)), F.lit(int(off))]
-            off_expr = F.coalesce(
-                F.try_element_at(F.create_map(*kv), F.col("_pid")), F.lit(0)
-            ).cast("long")
-        else:
-            off_expr = F.lit(0).cast("long")
+        off_expr = partition_offset_col({r["_pid"]: r[m] for r in tot}, F.col("_pid"))
         tcol = F.col(f"_t_{m}")
         cum = (
             ranged.withColumn("_end", F.sum(f"_t_{m}").over(w))
@@ -1525,30 +1396,4 @@ def pack_sequences_multi(
             F.lit(m).alias("method"),
         )
         out = part if out is None else out.unionByName(part)
-    out = out.localCheckpoint(eager=True)
-    ranged.unpersist()
-    return out
-
-
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int = 2048,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_parts: int | None = None,
-    tokenizer: str = "ws",
-    bpe_merges: list[tuple[str, str]] | None = None,
-) -> DataFrame:
-    """One-shot convenience over :func:`pack_sequences_counted` — eagerly
-    ``localCheckpoint``s the assignment table so the range partitioning
-    cannot be re-sampled, then releases the persisted input. Same
-    retention caveat as ``schedule.assign_discovered_seq``: the
-    checkpointed blocks stay pinned until the result is garbage
-    collected; loop callers should use the ``_counted`` variant and
-    manage the handle themselves."""
-    out, handle = pack_sequences_counted(
-        docs, seq_len, text_col, id_col, n_parts, tokenizer, bpe_merges
-    )
-    out = out.localCheckpoint(eager=True)
-    handle.unpersist()
-    return out
+    return out, ranged

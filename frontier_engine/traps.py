@@ -24,10 +24,10 @@ Spark-first shapes:
   oracle-checked: DuckDB's RE2 has no backreferences).
 * :func:`cap_per_template` — admit at most *cap* URLs per
   (host, template) in a deterministic priority order, two-phase salted
-  (the ``schedule.rank_batch`` discipline): phase 1 ranks within
-  (host, template, salt) so a 10^7-URL trap family spreads over
-  ``n_salts`` tasks and never lands in one window partition; phase 2
-  re-ranks the ≤ n_salts × cap survivors. The admitted set is exactly
+  (``schedule.top_k_per_group``, shared with ``rank_batch``): phase 1
+  ranks within (host, template, salt) so a 10^7-URL trap family spreads
+  over ``n_salts`` tasks and never lands in one window partition; phase
+  2 re-ranks the ≤ n_salts × cap survivors. The admitted set is exactly
   the global per-family top-*cap* (the true top-cap of a family is a
   subset of the union of its per-salt top-caps).
 * :func:`template_report` — per-family (n_urls, n_admitted, n_blocked)
@@ -43,8 +43,10 @@ airbnb.py:149-175, bounded by DEPTH_LIMIT alone).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from frontier_engine.schedule import top_k_per_group
 
 # scheme://authority prefix (what url_template strips before shaping)
 _AUTHORITY_RE = r"^[a-z][a-z0-9+.\-]*://[^/?#]*"
@@ -118,20 +120,10 @@ def cap_per_template(
     tpl = "__tpl"
     df = candidates.withColumn(tpl, url_template(F.col(url_col)))
     order = [F.col(c) for c in order_cols] + [F.col(url_col)]
-    if n_salts > 1:
-        w1 = Window.partitionBy(host_col, tpl, "__salt").orderBy(*order)
-        df = (
-            df.withColumn("__salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts)))
-            .withColumn("__r1", F.row_number().over(w1))
-            .where(F.col("__r1") <= cap)
-            .drop("__r1", "__salt")
-        )
-    w2 = Window.partitionBy(host_col, tpl).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w2))
-        .where(F.col("__rn") <= cap)
-        .drop("__rn", tpl)
-    )
+    return top_k_per_group(
+        df, [host_col, tpl], order, F.lit(cap), "__rn",
+        salt_hash=F.xxhash64(F.col(url_col)), fan_out=n_salts,
+    ).drop("__rn", tpl)
 
 
 def template_report(

@@ -57,7 +57,7 @@ def main():
     print(p[:5000])
     print(f"AUDIT exchanges={p.count('Exchange')} pythonNodes={p.count('ArrowEvalPython') + p.count('MapInPandas') + p.count('FlatMapGroupsInPandas')}")
 
-    print("=" * 20, "3. assign_discovered_seq (no single-partition window)")
+    print("=" * 20, "3. assign_discovered_seq_counted (no single-partition window)")
     cand3 = cand.select("url", F.lit(0).alias("depth"), F.lit("").alias("parent_url"))
     out, n, _seq_handle = assign_discovered_seq_counted(cand3, 0)
     p = plan(out)

@@ -21,7 +21,7 @@ from frontier_engine.bpe import (
     bpe_train,
     merges_df,
 )
-from frontier_engine.textops import pack_sequences, token_counts
+from frontier_engine.textops import pack_sequences_counted, token_counts
 
 
 # --------------------------------------------------------------------------
@@ -153,10 +153,13 @@ def test_token_counts_bpe_column(docs, merges):
 
 
 def test_pack_sequences_bpe(docs, merges):
-    asg = pack_sequences(docs, seq_len=8, tokenizer="bpe", bpe_merges=merges, n_parts=4)
+    asg, handle = pack_sequences_counted(
+        docs, seq_len=8, counts={"bpe": bpe_token_count_col(F.col("text"), merges)}, n_parts=4
+    )
     rows = sorted(
         ((r.seq_id, r.doc_id, r.tok_start, r.n_toks) for r in asg.collect())
     )
+    handle.unpersist()
     # twin: global prefix layout over twin token counts in doc_id order
     want, off = [], 0
     for i, t in enumerate(CORPUS):
@@ -169,13 +172,6 @@ def test_pack_sequences_bpe(docs, merges):
             want.append((seq, i, lo - off, hi - lo))
         off += n
     assert rows == sorted(want)
-
-
-def test_pack_sequences_rejects_unknown_tokenizer(docs):
-    with pytest.raises(ValueError):
-        pack_sequences(docs, tokenizer="nope")
-    with pytest.raises(ValueError):
-        pack_sequences(docs, tokenizer="bpe")  # merges required
 
 
 def test_merges_df_roundtrip(spark, merges):

@@ -4,7 +4,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from frontier_engine.config import EngineConfig
-from frontier_engine.schedule import rank_batch
+from frontier_engine.schedule import assign_discovered_seq_counted, rank_batch
 
 
 def _pending(spark, n_hot=200, n_cold=20):
@@ -52,3 +52,22 @@ def test_budget_formula():
     assert cfg.host_budget(crawl_delay_s=20.0) == 5
     assert cfg.host_budget(crawl_delay_s=5.0) == 10  # clamped by concurrency
     assert cfg.host_budget(crawl_delay_s=1000.0) == 1  # floor 1
+
+
+def test_discovered_seq_independent_of_partitioning(spark):
+    """The per-partition offsets give every candidate seq_offset + 1 +
+    its (depth, parent_url, url) rank at any partition count; at 64
+    range partitions most are empty, so their ids are missing from the
+    offset map."""
+    rows = [
+        (i % 3, f"https://p{i % 4}.example/", f"https://h{i % 7}.example/u{i}")
+        for i in range(50)
+    ]
+    cands = spark.createDataFrame(rows, "depth int, parent_url string, url string")
+    want = {r[2]: 1000 + 1 + k for k, r in enumerate(sorted(rows))}
+    for n_parts in (1, 3, 64):
+        out, n, handle = assign_discovered_seq_counted(cands, 1000, n_parts=n_parts)
+        got = {r.url: r.discovered_seq for r in out.collect()}
+        handle.unpersist()
+        assert n == 50, n_parts
+        assert got == want, n_parts

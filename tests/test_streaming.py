@@ -343,13 +343,22 @@ def test_streaming_crawl_compacts_state_chains(spark, tmp_path_factory, monkeypa
     ) < stream_res["rounds"]
 
 
-def test_streaming_crawl_resume_equals_straight_through(spark, tmp_path_factory):
+@pytest.mark.parametrize("stop", ["cap", "crash"])
+def test_streaming_crawl_resume_equals_straight_through(
+    spark, tmp_path_factory, monkeypatch, stop
+):
     """Round-3: an interrupted streaming crawl resumed from its
     checkpoint + snapshot manifests must equal the uninterrupted run
-    (and therefore the batch crawler) — same batches, same seen set."""
+    (and therefore the batch crawler) — same batches, same seen set.
+    The first run stops either at the ``max_rounds=3`` cap (a clean
+    round boundary) or by crashing in round 3's fetch, after that
+    micro-batch's ingest commit: the resume must roll the ``ingest``
+    manifest back to its parent and replay the micro-batch."""
+    from frontier_engine import crawler as C
     from frontier_engine.config import EngineConfig
     from frontier_engine.fixtures import WorldSpec, generate_world
     from frontier_engine.parse import CrawlArgs
+    from frontier_engine.snapshots import SnapshotStore
     from frontier_engine.streaming import run_crawl_stream
 
     spec = WorldSpec(n_hosts=2, listings_total=12, max_reviews=40)
@@ -363,11 +372,30 @@ def test_streaming_crawl_resume_equals_straight_through(spark, tmp_path_factory)
         spark, pages, cfg, args, seeds,
         snapshot_dir=str(tmp_path_factory.mktemp("stream-full")), max_rounds=40,
     )
-    part_dir = str(tmp_path_factory.mktemp("stream-part"))
-    partial = run_crawl_stream(
-        spark, pages, cfg, args, seeds, snapshot_dir=part_dir, max_rounds=3,
-    )
-    assert partial["rounds"] == 3 < full["rounds"]
+    part_dir = str(tmp_path_factory.mktemp(f"stream-part-{stop}"))
+    if stop == "cap":
+        partial = run_crawl_stream(
+            spark, pages, cfg, args, seeds, snapshot_dir=part_dir, max_rounds=3,
+        )
+        assert partial["rounds"] == 3 < full["rounds"]
+    else:
+        real, calls = C._fetch_and_parse, []
+
+        def crash_on_third_fetch(*a, **kw):
+            calls.append(1)
+            if len(calls) == 3:
+                raise RuntimeError("injected crash in round 3's fetch")
+            return real(*a, **kw)
+
+        with monkeypatch.context() as m:
+            m.setattr(C, "_fetch_and_parse", crash_on_third_fetch)
+            with pytest.raises(Exception):
+                run_crawl_stream(
+                    spark, pages, cfg, args, seeds, snapshot_dir=part_dir, max_rounds=40,
+                )
+        assert len(calls) == 3 and full["rounds"] > 3
+        store = SnapshotStore(part_dir)
+        assert store.manifest(store.latest_id())["meta"]["phase"] == "ingest"
     resumed = run_crawl_stream(
         spark, pages, cfg, args, snapshot_dir=part_dir, max_rounds=40, resume=True,
     )
@@ -377,8 +405,9 @@ def test_streaming_crawl_resume_equals_straight_through(spark, tmp_path_factory)
 
     assert resumed["rounds"] == full["rounds"]
     assert batches(resumed["outputs"]["batches"]) == batches(full["outputs"]["batches"])
-    # the capped run leaves round-3's metrics row stashed; the resume's
-    # first ingest completes it — resumed metrics equal the full run's
+    # the stopped run leaves round-3's (cap) or round-2's (crash) metrics
+    # row stashed; the resume's first ingest completes it — resumed
+    # metrics equal the full run's
     def metric_rows(df):
         return sorted(
             (r["round"], r.host, r.scheduled, r.fetched, r.missing,

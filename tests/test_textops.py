@@ -508,9 +508,19 @@ def test_repeated_line_dedup_drops_corpus_boilerplate(clean_docs):
     assert r9.dedup_text == "" and r9.lines_dropped == 1
 
 
+def _pack_rows(docs, **kw):
+    """Collected pack_sequences_counted rows, collected before the range
+    layout is released."""
+    out, handle = X.pack_sequences_counted(docs, **kw)
+    rows = out.collect()
+    handle.unpersist()
+    return rows
+
+
 def test_pack_sequences_invariants(spark, clean_docs):
     S = 16
-    packed = X.pack_sequences(clean_docs, seq_len=S).collect()
+    packed = _pack_rows(clean_docs, seq_len=S)
+    assert {r.method for r in packed} == {"ws"}
     toks = {
         r.doc_id: r.n
         for r in clean_docs.select(
@@ -538,7 +548,7 @@ def test_pack_sequences_invariants(spark, clean_docs):
     for s, n in by_seq.items():
         assert n == S or (s == last and n == total - last * S)
     # deterministic at any parallelism: 1-partition result is identical
-    packed1 = X.pack_sequences(clean_docs.repartition(1), seq_len=S, n_parts=1).collect()
+    packed1 = _pack_rows(clean_docs.repartition(1), seq_len=S, n_parts=1)
     key = lambda r: (r.seq_id, r.doc_id, r.tok_start, r.n_toks)
     assert sorted(map(key, packed)) == sorted(map(key, packed1))
 
@@ -565,7 +575,7 @@ def test_text_profile_equals_joined_per_row_ops(spark):
 
 def test_pack_sequences_multi_equals_per_method_runs(spark):
     """r6: one range partitioning for N tokenizations must reproduce the
-    single-method pack_sequences rows exactly, per method."""
+    single-method pack rows exactly, per method."""
     docs = spark.range(40).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("tok "), F.col("id").cast("string"),
@@ -575,23 +585,20 @@ def test_pack_sequences_multi_equals_per_method_runs(spark):
         "ws": F.size(F.split(F.col("text"), r"\s+")).cast("long"),
         "chars": (F.length("text") % 7).cast("long"),  # exercises zero counts
     }
-    multi = X.pack_sequences_multi(docs, seq_len=8, counts=counts)
+    multi = _pack_rows(docs, seq_len=8, counts=counts)
     key = lambda r: (r["seq_id"], r["doc_id"], r["tok_start"], r["n_toks"])
     for m, c in counts.items():
-        got = sorted(map(key, multi.where(F.col("method") == m).collect()))
-        # single-method reference: rerun pack_sequences_multi with ONE
-        # method — an independent range sampling over the same ids and
-        # counts must yield identical assignments (offsets depend only on
-        # id order and counts, never on partition boundaries)
-        solo = X.pack_sequences_multi(docs, seq_len=8, counts={m: c})
-        want = sorted(map(key, solo.collect()))
-        assert got == want, m
-    # and the ws leg equals the real single-method pack_sequences
-    ws_rows = sorted(map(key, multi.where(F.col("method") == "ws").collect()))
-    ws_single = sorted(
-        map(key, X.pack_sequences(docs, seq_len=8, tokenizer="ws").collect())
-    )
-    assert ws_rows == ws_single
+        got = sorted(map(key, (r for r in multi if r["method"] == m)))
+        # single-method reference: an independent range sampling over the
+        # same ids and counts must yield identical assignments (offsets
+        # depend only on id order and counts, never on partition
+        # boundaries)
+        solo = _pack_rows(docs, seq_len=8, counts={m: c})
+        assert {r["method"] for r in solo} == {m}
+        assert got == sorted(map(key, solo)), m
+    # and the ws leg equals the default (whitespace) counts
+    ws_rows = sorted(map(key, (r for r in multi if r["method"] == "ws")))
+    assert ws_rows == sorted(map(key, _pack_rows(docs, seq_len=8)))
 
 
 def test_shingle_hash_array_matches_shingle_hash_rows(spark):
