@@ -671,10 +671,9 @@ def q_link_extract(spark, sf_dir):
     so ONE hash certifies extraction AND aggregation. The oracle's link
     rows come from an INDEPENDENT stdlib implementation — html.parser
     event stream + urllib.parse.urljoin (scripts_make_link_fixture.py);
-    its stats leg re-aggregates those golden rows in DuckDB SQL. Feeds
-    linkgraph.host_edges / apply_host_rank (crawl discovery + anchor
-    signal the reference delegates to Scrapy's JSON-API spider,
-    deepbnb/spiders/airbnb.py:149-175)."""
+    its stats leg re-aggregates those golden rows in DuckDB SQL. The
+    reference discovers URLs only through its JSON-API spider
+    (deepbnb/spiders/airbnb.py:149-175) and has no link signal."""
     from frontier_engine.links import anchor_stats, extract_links
 
     links = extract_links(spark.read.parquet(_FIXTURE_LINKS_PAGES))

@@ -20,7 +20,7 @@ own over the corpus, Spark-first:
   element), the argmax is a 1-row TakeOrderedAndProject collect
   (count DESC, then (left, right) ASC — deterministic tie-break), and
   the merge applies as a single JVM ``replace``. Lineage is truncated
-  by localCheckpoint every few rounds (the pagerank/components
+  by localCheckpoint every few rounds (the components
   discipline). Training stops early when the best pair's count drops
   below ``min_count`` (Sennrich's --min-frequency).
 * **Encoding** (:func:`bpe_segmented_col` / :func:`bpe_token_count_col`):
@@ -41,8 +41,8 @@ train+encode+pack path hash-checkable against an independent engine.
 
 Alphabet note: the initial symbol set is Unicode codepoints (both
 engines' ``split``/``substring`` are codepoint-based), which is exactly
-byte-level on ASCII corpora (the fixture world and the Common-Crawl WET
-majority). Full byte fidelity on arbitrary UTF-8 would compose GPT-2's
+byte-level on ASCII corpora (the fixture world and the bulk of
+Common-Crawl extracted text). Full byte fidelity on arbitrary UTF-8 would compose GPT-2's
 bytes↔printable-codepoint bijection in front; the three delimiter
 codepoints are stripped from text before segmentation either way.
 """
@@ -203,15 +203,6 @@ def bpe_train(
             ckpt = words
     ckpt.unpersist()  # training returns a plain list; nothing outlives it
     return merges
-
-
-def merges_df(spark, merges: list[tuple[str, str]]) -> DataFrame:
-    """The learned vocab as a (rank, left, right) table — the persisted
-    artifact a long-lived pipeline stores next to its corpus."""
-    return spark.createDataFrame(
-        [(i, l, r) for i, (l, r) in enumerate(merges)],
-        "rank int, left string, right string",
-    )
 
 
 def bpe_segmented_col(text: Column, merges: list[tuple[str, str]]) -> Column:

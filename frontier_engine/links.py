@@ -5,9 +5,8 @@ discovers URLs only from JSON API payloads (its spider yields requests
 from parsed ExploreSearch responses, /root/reference/deepbnb/api.py +
 deepbnb/spiders/airbnb.py:149-175 — it never walks ``<a href>``), but a
 generic web frontier is FED by the link graph of fetched pages. This
-module turns stored page HTML into frontier candidates and
-``linkgraph.host_edges`` input without a byte of Python in the hot
-path:
+module turns stored page HTML into resolved link rows and per-target
+anchor statistics without a byte of Python in the hot path:
 
 * :func:`anchor_elements` — ``<a ...>...</a>`` elements via one
   ``regexp_extract_all`` after stripping ``<script>``/``<style>``
@@ -29,13 +28,13 @@ path:
   anchor text de-tagged + whitespace-collapsed, ``rel=nofollow``
   flagged (what a polite rank pipeline excludes from endorsement
   edges, Google 2005 rel-nofollow convention).
+* :func:`anchor_stats` — per-target in-link rollup (in-degree,
+  referring-host breadth, nofollow count, dominant anchor text).
 
 Scale shape: the whole operator is ``explode`` over per-row regex
 extraction — narrow, shuffle-free, whole-stage-codegen'd; cost is
 O(bytes of html) per page exactly like the html→text stage it rides
-next to. Output feeds ``linkgraph.host_edges`` (rename src_url →
-parent_url) and, through ``canon.canonicalize_expr``, the frontier
-ingest dedupe.
+next to.
 
 Correctness: the committed fixture's golden rows are produced by an
 INDEPENDENT stdlib implementation (``html.parser.HTMLParser`` event
@@ -57,9 +56,7 @@ __all__ = [
     "resolve_href_expr",
     "resolve_href_py",
     "extract_links",
-    "link_candidates",
     "anchor_stats",
-    "apply_anchor_signal",
 ]
 
 # scheme://authority prefix (host[:port]; stops at /, ?, #)
@@ -227,8 +224,8 @@ def extract_links(
     ``(src_url, href_raw, url, anchor, nofollow)``. Resolved URL is
     http(s)-absolute; empty / fragment-only / non-web-scheme hrefs are
     dropped. ``nofollow`` marks ``rel`` values containing the nofollow
-    token (callers exclude those rows from ``linkgraph.host_edges``
-    endorsement; the URL itself may still be crawled).
+    token (callers exclude those rows from endorsement counts; the URL
+    itself may still be crawled).
 
     Narrow plan: decode (when the column is binary) → strip/extract →
     one struct per anchor built INSIDE a transform lambda (the element
@@ -263,41 +260,6 @@ def extract_links(
     return out
 
 
-def link_candidates(
-    pages: DataFrame,
-    base_depth: int = 1,
-    link_score: float = 0.0,
-    include_nofollow: bool = True,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
-    """Fetched pages → frontier candidates discovered via ``<a href>``
-    (the ``sitemap.candidates_from_sitemaps`` shape: url, parent_url,
-    depth, listing_score), distinct per (url, parent_url) within the
-    batch — the crawler's ingest dedupe/seen/robots stages do the rest.
-
-    OPT-IN by design: the default crawl's ordering parity with the
-    reference is defined over JSON-API discovery only, so href
-    candidates must be unioned in explicitly by the caller (same
-    contract as sitemap candidates). ``include_nofollow=True`` keeps
-    rel=nofollow URLs crawlable (Scrapy/Heritrix default — nofollow is
-    an ENDORSEMENT signal, which is why ``host_edges`` callers filter
-    it, not a crawl prohibition)."""
-    links = extract_links(pages, url_col=url_col, html_col=html_col)
-    if not include_nofollow:
-        links = links.where(~F.col("nofollow"))
-    return (
-        links.where(F.col("url") != F.col("src_url"))
-        .select(
-            "url",
-            F.col("src_url").alias("parent_url"),
-            F.lit(int(base_depth)).alias("depth"),
-            F.lit(float(link_score)).alias("listing_score"),
-        )
-        .dropDuplicates(["url", "parent_url"])
-    )
-
-
 def anchor_stats(links: DataFrame, url_col: str = "url") -> DataFrame:
     """Per-target anchor/endorsement aggregation over
     :func:`extract_links` output — the classic link-signal rollup a
@@ -311,11 +273,9 @@ def anchor_stats(links: DataFrame, url_col: str = "url") -> DataFrame:
 
     * ``n_refs``     — total in-links (rows in ``links``),
     * ``n_hosts``    — distinct referring hosts (``canon.host_expr`` of
-      ``src_url``, the same expression ``linkgraph.host_edges`` keys
-      on, so breadth here and edges there agree),
-    * ``n_nofollow`` — in-links carrying rel=nofollow (excluded from
-      endorsement by ``host_edges`` callers; counted here so the share
-      is visible),
+      ``src_url``, the host key the frontier uses),
+    * ``n_nofollow`` — in-links carrying rel=nofollow (not endorsements;
+      counted here so the share is visible),
     * ``top_anchor`` — the most frequent NON-EMPTY anchor string among
       follow links, ties broken by the lexicographically greatest
       anchor ('' when every follow in-link has empty anchor text) —
@@ -367,50 +327,3 @@ def anchor_stats(links: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def apply_anchor_signal(
-    pending: DataFrame,
-    stats: DataFrame,
-    weight: float = 5.0,
-    url_col: str = "url",
-) -> DataFrame:
-    """Fold :func:`anchor_stats` endorsement into the frontier's
-    priority column — the per-URL twin of
-    :func:`frontier_engine.linkgraph.apply_host_rank` (which boosts by
-    host; this boosts the exact target URL by how broadly it is linked,
-    the OPIC/in-degree prioritization a Scrapy DFO queue has no signal
-    for — the reference templates its JSON API and never sees links,
-    deepbnb/spiders/airbnb.py:149-175).
-
-    ``priority += weight * (1 - 1 / (1 + ln(1 + h)))`` where ``h`` is
-    the referring-host breadth (``n_hosts``), zeroed when EVERY in-link
-    is rel=nofollow (``n_nofollow == n_refs`` — nofollow'd links are
-    explicitly not endorsements). The saturating transform needs no
-    corpus-wide max (unlike apply_host_rank's normalization there is no
-    small rank table to take a max over — stats are per-URL, frontier-
-    sized), is monotone in breadth, and is bounded in [0, weight): with
-    the default weight the boost stays below one depth step
-    (priority = depth*100 + score, schedule.py:36), so like the host
-    rank it breaks ties WITHIN a depth level and never overrides DFO.
-
-    Scale shape: a plain left join on the url key — BOTH sides are
-    corpus-sized so no broadcast (contrast apply_host_rank, where the
-    host table is small by construction); the url key is the same one
-    frontier dedup shuffles on, so the exchange is reusable, and the
-    join carries only (url, boost) from the stats side. No window, no
-    driver state."""
-    h = F.col("n_hosts").cast("double")
-    endorsed = F.col("n_refs") > F.col("n_nofollow")
-    boost = F.when(
-        endorsed,
-        F.lit(float(weight))
-        * (F.lit(1.0) - F.lit(1.0) / (F.lit(1.0) + F.log1p(h))),
-    ).otherwise(F.lit(0.0))
-    side = stats.select(F.col(url_col), boost.alias("_anchor_boost"))
-    return (
-        pending.join(side, url_col, "left")
-        .withColumn(
-            "priority",
-            F.col("priority") + F.coalesce(F.col("_anchor_boost"), F.lit(0.0)),
-        )
-        .drop("_anchor_boost")
-    )

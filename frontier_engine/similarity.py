@@ -267,32 +267,19 @@ def kmeans_centroids(
     return cents
 
 
-def _argmax_cos(cent_array: Column, vec: Column, k: int) -> Column:
-    """Index of the centroid with max cosine to *vec* (JVM expressions)."""
-    scored = F.transform(
-        cent_array, lambda c, i: F.struct(cosine(c, vec).alias("cos"), i.alias("i"))
-    )
-    best = F.aggregate(
-        scored,
-        F.struct(F.lit(-2.0).alias("cos"), F.lit(-1).alias("i")),
-        lambda acc, s: F.when(s["cos"] > acc["cos"], s).otherwise(acc),
-    )
-    return best["i"]
-
-
 def _argmax_cos_lit(cents: list[list[float]], v: Column, nv: Column) -> Column:
-    """Hoisted-norms twin of :func:`_argmax_cos` for a driver-side
-    codebook: cosine per centroid is the same HOF dot(c, v) divided by
-    (literal ‖c‖ · *nv*) — the codebook norms are computed driver-side
-    with the same left fold (:func:`norm_py`, bit-identical doubles) and
-    the per-row norm *nv* is a materialized column, so neither is
-    re-evaluated per centroid as in the fold form. The fold-with-`>`
-    argmax becomes greatest(struct(cos, -i)), which matches it case for
-    case: ties keep the lowest index (larger -i wins), NaN cosines win
-    over everything (Spark orders NaN largest, and in the fold `NaN > x`
-    is true while `x > NaN` is false — first NaN kept either way), and
-    the (-2.0, i=-1) init survives only all-NULL rows, exactly as
-    before."""
+    """Index of the centroid with max cosine to *v* for a driver-side
+    codebook, with hoisted norms: cosine per centroid is the HOF
+    dot(c, v) divided by (literal ‖c‖ · *nv*) — the codebook norms are
+    computed driver-side with the same left fold (:func:`norm_py`,
+    bit-identical doubles) and the per-row norm *nv* is a materialized
+    column, so neither is re-evaluated per centroid. The argmax is
+    greatest(struct(cos, -i)), which matches a left fold that replaces
+    the running best when `cos > best` case for case: ties keep the
+    lowest index (larger -i wins), NaN cosines win over everything
+    (Spark orders NaN largest, and in the fold `NaN > x` is true while
+    `x > NaN` is false — first NaN kept either way), and the
+    (-2.0, i=-1) init survives only all-NULL rows."""
     if not cents:
         return F.lit(-1)
     structs = [F.struct(F.lit(-2.0).alias("cos"), F.lit(1).alias("negi"))]

@@ -1043,22 +1043,12 @@ def _fingerprint_blocks(text_col: Column) -> Column:
     return F.get(F.transform(F.array(normalized_text(text_col)), blocks_of), 0)
 
 
-def doc_fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Order-sensitive document fingerprint: xxhash64 chained over 64-char
-    blocks (rolling-hash flavor, expression-only via aggregate)."""
-    fp = F.aggregate(
-        _fingerprint_blocks(F.col(text_col)),
-        F.lit(0).cast("long"),
-        lambda acc, b: F.xxhash64(F.concat(acc.cast("string"), F.lit("|"), b)),
-    )
-    return docs.select(F.col(id_col), fp.alias("fingerprint"))
-
-
 def doc_fingerprint_md5(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Same chained-block fingerprint with md5 as the chain hash — md5 is
-    bit-identical across engines, which makes this variant independently
-    recomputable in ANSI SQL (the DuckDB oracle twin); the xxhash64
-    variant above stays the engine-internal fast path."""
+    """Order-sensitive document fingerprint: md5 chained over the
+    normalized text's 64-char blocks (rolling-hash flavor,
+    expression-only via aggregate). md5 is bit-identical across engines,
+    which makes it independently recomputable in ANSI SQL (the DuckDB
+    oracle twin); the per-row reference for ``text_profile``."""
     fp = F.aggregate(
         _fingerprint_blocks(F.col(text_col)),
         F.lit("0"),

@@ -36,6 +36,20 @@ def main() -> None:
     ap.add_argument("--demo-world", help="generate a fixture world here and crawl it")
     args = ap.parse_args()
 
+    if args.checkin and args.checkout and not args.demo_world:
+        from datetime import date
+
+        from frontier_engine.dates import split_spec, validate_dates
+
+        # the reference's start-up check (airbnb.py:355-361), on the base
+        # dates of any range spec
+        try:
+            validate_dates(
+                split_spec(args.checkin)[0], split_spec(args.checkout)[0], date.today()
+            )
+        except ValueError as e:
+            ap.error(str(e))
+
     from frontier_engine.config import EngineConfig
     from frontier_engine.crawler import run_crawl
     from frontier_engine.parse import CrawlArgs

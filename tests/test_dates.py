@@ -1,7 +1,9 @@
 """M1-M3: ranged-date expansion parity with the reference's four cases
-(ExploreSearch.py:96-160) + validation errors (airbnb.py:355-361)."""
+(ExploreSearch.py:96-160) + validation errors (airbnb.py:355-361), also
+at the CLI boundary."""
 
-from datetime import date
+import sys
+from datetime import date, timedelta
 
 import pytest
 
@@ -30,6 +32,38 @@ def test_validate_dates_raises():
         validate_dates("2026-08-15", "2026-09-01", today)
     with pytest.raises(ValueError, match="Checkout must be tomorrow or later"):
         validate_dates("2026-08-16", "2026-08-16", today)
+
+
+class _SparkReached(Exception):
+    pass
+
+
+def test_cli_validates_stay_dates_before_spark(monkeypatch, capsys):
+    """run_crawl_cli rejects a past check-in (range spec stripped first)
+    through argparse before any Spark session starts; a future pair
+    passes the check and goes on to start Spark."""
+    import run_crawl_cli
+    from frontier_engine import session
+
+    def no_spark(*a, **k):
+        raise _SparkReached
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    today = date.today()
+
+    def run(checkin, checkout):
+        monkeypatch.setattr(sys, "argv", [
+            "run_crawl_cli.py", "--pages", "p", "--seeds", "s",
+            "--checkin", checkin, "--checkout", checkout,
+        ])
+        run_crawl_cli.main()
+
+    past = f"{today - timedelta(days=1)}+2-1"
+    with pytest.raises(SystemExit):
+        run(past, str(today + timedelta(days=7)))
+    assert "Checkin cannot be in past" in capsys.readouterr().err
+    with pytest.raises(_SparkReached):
+        run(f"{today + timedelta(days=1)}+1-1", f"{today + timedelta(days=8)}+-2")
 
 
 def test_expand_cartesian(spark):

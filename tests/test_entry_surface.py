@@ -257,3 +257,79 @@ def test_run_pair_falls_back_when_fewer_than_two_pairs(monkeypatch):
         hi_reps=[rep(340.0, 8), rep(336.0, 9)],
     )
     assert "_fail" in out
+
+
+# Top-level engine defs that no crawl, ingest, oracle or harness path
+# reaches, each kept on purpose. Anything else unreached is dead code.
+KEPT = {
+    "assemble.aggregate_reviews": "reference J1-J3 listing assembly; no product path assembles listings yet, so it needs routing, not deletion",
+    "assemble.assemble_listings": "reference J1-J3 listing assembly; no product path assembles listings yet, so it needs routing, not deletion",
+    "sinks.write_csv": "the reference's S6 exporter",
+    "sinks.write_xlsx": "the reference's S6 exporter",
+    "sinks._xml_escape": "the reference's S6 exporter (xlsx cell escaping)",
+    "parse.find_component_last": "reference P3",
+    "streaming.windowed_fetch_metrics": "ST4 AutoThrottle windows",
+    "streaming.document_ingest_stream": "the streaming ingest face; rebuilt over one engine ingest round (ROADMAP direction 3)",
+    "bpe.bpe_encode": "token-sequence view of the live bpe_segmented_col, pinned by the exactness tests",
+    "bpe.bpe_tokens_col": "token-sequence view of the live bpe_segmented_col, pinned by the exactness tests",
+    "links.resolve_href_py": "Python twin of resolve_href_expr, the test reference",
+    "links._remove_dot_segments_py": "Python twin of resolve_href_expr, the test reference",
+    "textops.token_counts": "per-row reference for text_profile",
+    "textops.doc_fingerprint_md5": "per-row reference for text_profile",
+    "textops._fingerprint_blocks": "per-row reference for text_profile",
+    "html_text.html_bytes_to_text_udf": "row-wise UDF face of html_to_text, used by the documented byte-parity drive",
+}
+
+
+def _engine_reach():
+    """(unreached, all) qualified names of the top-level defs and classes
+    in frontier_engine/. Roots are the names referenced by module-level
+    code of frontier_engine/*.py and anywhere in the non-test .py files
+    at the repo root and under perfbench/; reach is closed over the
+    bodies of reached defs. Names match by identifier (a Name or an
+    attribute), so a shared name over-approximates reach, never under."""
+    import ast
+    import glob
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def refs(node):
+        return {
+            n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        }
+
+    defs, roots = {}, set()
+    for path in sorted(glob.glob(os.path.join(root, "frontier_engine", "*.py"))):
+        mod = os.path.basename(path)[:-3]
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for st in tree.body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(st.name, []).append((f"{mod}.{st.name}", st))
+            else:
+                roots |= refs(st)
+    for path in glob.glob(os.path.join(root, "*.py")) + glob.glob(
+        os.path.join(root, "perfbench", "*.py")
+    ):
+        if not os.path.basename(path).startswith("test_"):
+            with open(path) as f:
+                roots |= refs(ast.parse(f.read()))
+    reached, todo = set(), list(roots & set(defs))
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            for _, node in defs[name]:
+                todo.extend(refs(node) & set(defs) - reached)
+    every = {q for lst in defs.values() for q, _ in lst}
+    unreached = {q for name, lst in defs.items() if name not in reached for q, _ in lst}
+    return unreached, every
+
+
+def test_every_engine_def_is_reached():
+    unreached, every = _engine_reach()
+    assert unreached - set(KEPT) == set(), "unreached engine defs: route or delete them"
+    assert set(KEPT) - every == set(), "KEPT names that no longer exist"
+    assert set(KEPT) - unreached == set(), "KEPT names that now have a caller"

@@ -105,7 +105,7 @@ def test_fingerprint_order_sensitive(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": [0, 1], "text": ["alpha beta gamma", "gamma beta alpha"]})
     )
-    fp = {r.doc_id: r.fingerprint for r in X.doc_fingerprint(df).collect()}
+    fp = {r.doc_id: r.fingerprint for r in X.doc_fingerprint_md5(df).collect()}
     assert fp[0] != fp[1]
 
 
