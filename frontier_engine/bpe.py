@@ -205,6 +205,15 @@ def bpe_train(
     return merges
 
 
+def merges_df(spark, merges: list[tuple[str, str]]) -> DataFrame:
+    """The learned vocab as a (rank, left, right) table — the persisted
+    artifact a long-lived pipeline stores next to its corpus."""
+    return spark.createDataFrame(
+        [(i, l, r) for i, (l, r) in enumerate(merges)],
+        "rank int, left string, right string",
+    )
+
+
 def bpe_segmented_col(text: Column, merges: list[tuple[str, str]]) -> Column:
     """Delimited token-stream string of *text* after applying *merges*
     in rank order — a chain of literal JVM ``replace``s (the broadcast

@@ -5,8 +5,8 @@ discovers URLs only from JSON API payloads (its spider yields requests
 from parsed ExploreSearch responses, /root/reference/deepbnb/api.py +
 deepbnb/spiders/airbnb.py:149-175 — it never walks ``<a href>``), but a
 generic web frontier is FED by the link graph of fetched pages. This
-module turns stored page HTML into resolved link rows and per-target
-anchor statistics without a byte of Python in the hot path:
+module turns stored page HTML into frontier candidates and
+per-target anchor statistics without a byte of Python in the hot path:
 
 * :func:`anchor_elements` — ``<a ...>...</a>`` elements via one
   ``regexp_extract_all`` after stripping ``<script>``/``<style>``
@@ -28,13 +28,16 @@ anchor statistics without a byte of Python in the hot path:
   anchor text de-tagged + whitespace-collapsed, ``rel=nofollow``
   flagged (what a polite rank pipeline excludes from endorsement
   edges, Google 2005 rel-nofollow convention).
+* :func:`link_candidates` — extracted links as frontier candidate rows.
 * :func:`anchor_stats` — per-target in-link rollup (in-degree,
-  referring-host breadth, nofollow count, dominant anchor text).
+  referring-host breadth, nofollow count, dominant anchor text);
+  :func:`apply_anchor_signal` folds it into the frontier priority.
 
 Scale shape: the whole operator is ``explode`` over per-row regex
 extraction — narrow, shuffle-free, whole-stage-codegen'd; cost is
 O(bytes of html) per page exactly like the html→text stage it rides
-next to.
+next to. Output feeds, through ``canon.canonicalize_expr``, the
+frontier ingest dedupe.
 
 Correctness: the committed fixture's golden rows are produced by an
 INDEPENDENT stdlib implementation (``html.parser.HTMLParser`` event
@@ -56,7 +59,9 @@ __all__ = [
     "resolve_href_expr",
     "resolve_href_py",
     "extract_links",
+    "link_candidates",
     "anchor_stats",
+    "apply_anchor_signal",
 ]
 
 # scheme://authority prefix (host[:port]; stops at /, ?, #)
@@ -260,6 +265,39 @@ def extract_links(
     return out
 
 
+def link_candidates(
+    pages: DataFrame,
+    base_depth: int = 1,
+    link_score: float = 0.0,
+    include_nofollow: bool = True,
+    url_col: str = "url",
+    html_col: str = "html",
+) -> DataFrame:
+    """Fetched pages → frontier candidates discovered via ``<a href>``
+    (the frontier candidate shape: url, parent_url, depth,
+    listing_score), distinct per (url, parent_url) within the
+    batch — the crawler's ingest dedupe/seen/robots stages do the rest.
+
+    OPT-IN by design: the default crawl's ordering parity with the
+    reference is defined over JSON-API discovery only, so href
+    candidates must be unioned in explicitly by the caller. ``include_nofollow=True`` keeps
+    rel=nofollow URLs crawlable (Scrapy/Heritrix default — nofollow is
+    an ENDORSEMENT signal, not a crawl prohibition)."""
+    links = extract_links(pages, url_col=url_col, html_col=html_col)
+    if not include_nofollow:
+        links = links.where(~F.col("nofollow"))
+    return (
+        links.where(F.col("url") != F.col("src_url"))
+        .select(
+            "url",
+            F.col("src_url").alias("parent_url"),
+            F.lit(int(base_depth)).alias("depth"),
+            F.lit(float(link_score)).alias("listing_score"),
+        )
+        .dropDuplicates(["url", "parent_url"])
+    )
+
+
 def anchor_stats(links: DataFrame, url_col: str = "url") -> DataFrame:
     """Per-target anchor/endorsement aggregation over
     :func:`extract_links` output — the classic link-signal rollup a
@@ -327,3 +365,46 @@ def anchor_stats(links: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
+def apply_anchor_signal(
+    pending: DataFrame,
+    stats: DataFrame,
+    weight: float = 5.0,
+    url_col: str = "url",
+) -> DataFrame:
+    """Fold :func:`anchor_stats` endorsement into the frontier's
+    priority column: the exact target URL is boosted by how broadly it
+    is linked, the OPIC/in-degree prioritization a Scrapy DFO queue has
+    no signal for — the reference templates its JSON API and never sees
+    links, deepbnb/spiders/airbnb.py:149-175.
+
+    ``priority += weight * (1 - 1 / (1 + ln(1 + h)))`` where ``h`` is
+    the referring-host breadth (``n_hosts``), zeroed when EVERY in-link
+    is rel=nofollow (``n_nofollow == n_refs`` — nofollow'd links are
+    explicitly not endorsements). The saturating transform needs no
+    corpus-wide max (stats are per-URL, frontier-sized), is monotone in
+    breadth, and is bounded in [0, weight): with the default weight the
+    boost stays below one depth step (priority = depth*100 + score,
+    schedule.py:36), so it breaks ties WITHIN a depth level and never
+    overrides DFO.
+
+    Scale shape: a plain left join on the url key — BOTH sides are
+    corpus-sized so no broadcast; the url key is the same one
+    frontier dedup shuffles on, so the exchange is reusable, and the
+    join carries only (url, boost) from the stats side. No window, no
+    driver state."""
+    h = F.col("n_hosts").cast("double")
+    endorsed = F.col("n_refs") > F.col("n_nofollow")
+    boost = F.when(
+        endorsed,
+        F.lit(float(weight))
+        * (F.lit(1.0) - F.lit(1.0) / (F.lit(1.0) + F.log1p(h))),
+    ).otherwise(F.lit(0.0))
+    side = stats.select(F.col(url_col), boost.alias("_anchor_boost"))
+    return (
+        pending.join(side, url_col, "left")
+        .withColumn(
+            "priority",
+            F.col("priority") + F.coalesce(F.col("_anchor_boost"), F.lit(0.0)),
+        )
+        .drop("_anchor_boost")
+    )

@@ -1,12 +1,12 @@
 """Pure-stdlib ISO-BMFF (MP4) container codec — real box-structure
-parsing under ``multimodal``'s video perceptual hash, companion to
+parsing under ``multimodal``'s video stages, companion to
 :mod:`frontier_engine.png` / :mod:`frontier_engine.jpeg` /
 :mod:`frontier_engine.wav`.
 
 H.264/H.265 bitstream decoding is out of scope for a stdlib codec, but
 the MP4 CONTAINER is pure struct parsing (ISO/IEC 14496-12 box
-grammar), and that is what the video perceptual-hash stage actually
-needs:
+grammar), and that is what the pipeline's metadata + frame-sampling
+stages actually need:
 
 * ``parse_mp4``  — recursive box walk (unknown boxes skipped by
   declared size, 64-bit largesize supported), extracting mvhd
@@ -19,8 +19,8 @@ needs:
   from a list of sample payloads, with configurable samples-per-chunk
   (so multi-chunk stsc/stco resolution is exercised) and per-sample
   durations (multi-run stts).
-* ``extract_sample`` — the byte range of sample k (the first-frame
-  decode behind the video perceptual hash).
+* ``sample_at_time`` — the seek primitive: last sample whose start
+  time ≤ t.
 
 The *codec* payload inside each sample stays opaque — honestly fake in
 the synthetic table (the pyav drop-in point decodes real samples to
@@ -279,6 +279,18 @@ def parse_mp4(data: bytes) -> dict:
     meta["n_samples"] = n
     meta["duration_s"] = meta.get("duration", 0) / meta.get("timescale", 1000)
     return meta
+
+
+def sample_at_time(samples: list[tuple[int, int, float]], t: float) -> int:
+    """Index of the last sample whose start time ≤ t (the seek rule);
+    clamped to [0, n-1]."""
+    idx = 0
+    for i, (_o, _s, st) in enumerate(samples):
+        if st <= t:
+            idx = i
+        else:
+            break
+    return idx
 
 
 def extract_sample(data: bytes, samples: list[tuple[int, int, float]], idx: int) -> bytes:

@@ -6,13 +6,16 @@ DataFrame job, snapshot-committed). This module provides the streaming
 alternative for deployments that want micro-batch semantics end-to-end:
 
 * :func:`run_crawl_stream` — the full crawl as a self-feeding candidate
-  stream (ST1), its seen set persisted in the crawl's seen store (ST2).
-  Its ``foreachBatch`` runs the crawl state machine of
+  stream. Its ``foreachBatch`` runs the crawl state machine of
   ``crawler._CrawlState`` (ingest → schedule → commit, the same fetch/
   parse step and output sinks), so its commit, fold and manifest rules
   are the batch driver's by construction; this file adds only the
   stream's own rules (two-phase manifests, replay skip, metrics stash,
   candidate-file feedback).
+* :func:`frontier_ingest_stream` — streaming seen-set ingest into a
+  ``seen_store.SeenExactStore`` (the crawl's seen store and its bloom).
+* :func:`stream_pages` — a ``readStream`` over a pages directory with
+  ``foreachBatch`` running the shared parse stage per micro-batch.
 * :func:`windowed_fetch_metrics` — event-time tumbling windows with a
   watermark over the fetch-metrics stream (late fetch completions are
   the reference's retry stragglers, ST3); feeds the ST4 adaptive-delay
@@ -29,6 +32,61 @@ from pyspark.sql import functions as F
 
 from frontier_engine import parse as P
 from frontier_engine.config import EngineConfig
+
+
+def parse_micro_batch(
+    batch_df: DataFrame, args: P.CrawlArgs, cfg: EngineConfig
+) -> tuple[dict[str, DataFrame], P.ParseRound]:
+    """The shared per-micro-batch parse (same one-tokenization
+    ``parse_round`` as the batch crawl loop). Returns the output dict
+    plus the ParseRound whose persisted intermediates the caller MUST
+    unpersist after materializing the outputs. Candidates keep this
+    sink's historical surface: API-page follow-ups only (no landing
+    fan-out — stream_pages is a parse sink, not a frontier feeder)."""
+    pr = P.parse_round(batch_df, args, cfg)
+    out = dict(pr.parts)
+    out["candidates"] = (
+        pr.by_type["search"][1]
+        .unionByName(pr.by_type["pdp"][1])
+        .unionByName(pr.by_type["reviews"][1])
+    )
+    return out, pr
+
+
+def stream_pages(
+    spark: SparkSession,
+    pages_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    args: P.CrawlArgs,
+    cfg: EngineConfig,
+    trigger_once: bool = True,
+):
+    """readStream(pages) → foreachBatch(parse) → append outputs.
+
+    Returns the started StreamingQuery. ``trigger_once`` processes all
+    available input then stops (the testable mode); continuous deployments
+    drop it."""
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    src = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 8)
+        .parquet(pages_dir)
+        .withColumn("host", F.regexp_extract("url", r"^https?://([^/]+)/", 1))
+    )
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        outs, pround = parse_micro_batch(batch_df, args, cfg)
+        for name, df in outs.items():
+            df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
+                f"{out_dir}/{name}"
+            )
+        pround.unpersist()
+
+    writer = src.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def windowed_fetch_metrics(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -211,6 +269,86 @@ def run_stream_to_parquet(stream_df: DataFrame, out_dir: str, checkpoint_dir: st
         .start()
     )
     q.awaitTermination()
+
+
+def frontier_ingest_stream(
+    spark: SparkSession,
+    cands_dir: str,
+    root: str,
+    checkpoint_dir: str,
+    cfg: EngineConfig,
+    max_files_per_trigger: int = 1,
+):
+    """Streaming frontier ingest (ST2's seen set as a live stream): a
+    ``readStream`` of candidate-URL files with ``foreachBatch`` running
+    the SAME dedupe discipline as the batch crawler — canonicalize →
+    within-batch dedupe → prefilter by the store's base bloom → exact
+    confirm against the persistent SeenExactStore → append the batch's
+    unseen keys to the store (which rebuilds its bloom when it folds).
+
+    Exactly-once without Iceberg: every per-batch write is keyed by
+    ``batch_id`` (store dirs ``*-snap-s<id>``, output partition
+    ``batch_id=<id>``), so a replayed
+    micro-batch overwrites its own files instead of duplicating —
+    idempotent under the streaming engine's at-least-once foreachBatch
+    contract. Unseen rows land in ``<root>/unseen`` partitioned by
+    batch_id.
+
+    Returns the started StreamingQuery; state lives under *root*
+    (resumable: pass the same root + checkpoint to continue).
+    """
+    import json
+    import os
+
+    from frontier_engine import seen as S
+    from frontier_engine.canon import with_canon_columns
+    from frontier_engine.seen_store import SeenExactStore
+
+    schema = "url string"
+    src = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(cands_dir)
+    )
+    # engine-state manifest (atomic os.replace, same discipline as
+    # snapshots.py): the streaming checkpoint only remembers which FILES
+    # were read — the seen store must survive a restart too
+    meta_path = os.path.join(root, "ingest_meta.json")
+    seen_root = os.path.join(root, "seen")
+    if os.path.exists(meta_path):
+        with open(meta_path) as f:
+            store = SeenExactStore.from_meta(spark, seen_root, json.load(f)["seen"])
+    else:
+        store = SeenExactStore(
+            spark, seen_root, n_buckets=cfg.seen_exact_buckets,
+            bloom_sizing=(cfg.n_seen_shards, cfg.bloom_bits_per_shard, cfg.bloom_num_hashes),
+        )
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        cands = with_canon_columns(batch_df).dropDuplicates(["canon_url"])
+        unseen = S.filter_unseen(
+            cands, store.bloom(), store.parts(), *store.bloom_sizing
+        ).cache()
+        n = unseen.count()
+        (
+            unseen.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id").parquet(os.path.join(root, "unseen"))
+        )
+        if n:
+            store.append(unseen, f"s{batch_id}", n_new=n)
+            tmp = meta_path + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump({"seen": store.to_meta()}, f)
+            os.replace(tmp, meta_path)
+        unseen.unpersist()
+
+    return (
+        src.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def run_crawl_stream(
@@ -451,7 +589,8 @@ def document_ingest_stream(
     identical text ⇒ identical bands ⇒ a jaccard-1.0 candidate the
     verify drops.
 
-    Exactly-once without Iceberg: both state tables are partitioned
+    Exactly-once without Iceberg (same discipline as
+    :func:`frontier_ingest_stream`): both state tables are partitioned
     by ``batch_id`` and written with dynamic partition overwrite, and a
     micro-batch reads the corpus/bands WITHOUT its own partition
     (``batch_id != this``) — so a replayed batch recomputes against

@@ -18,6 +18,10 @@ Spark-first shapes:
   four JVM ``regexp_replace`` calls (whole-stage codegen, no Python);
   the identical chain is ANSI-SQL-expressible, which is what makes the
   cap oracle-checkable in DuckDB.
+* :func:`path_trap_flags` — Heritrix-style structural guards: path
+  depth cap and the consecutive-repeated-segment rule
+  (``(/[^/]+)\\1{k,}`` — Java regex backreference; pytest-pinned, not
+  oracle-checked: DuckDB's RE2 has no backreferences).
 * :func:`cap_per_template` — admit at most *cap* URLs per
   (host, template) in a deterministic priority order, two-phase salted
   (``schedule.top_k_per_group``, shared with ``rank_batch``): phase 1
@@ -58,6 +62,40 @@ def url_template(url: Column) -> Column:
     t = F.regexp_replace(pq, r"[0-9a-fA-F]{8,}", "H")
     t = F.regexp_replace(t, r"[0-9]+", "D")
     return F.regexp_replace(t, r"=[^&#]*", "=V")
+
+
+def path_trap_flags(
+    url: Column, max_segments: int = 16, max_repeats: int = 3
+) -> Column:
+    """struct<too_deep, repeated_path>: structural trap signals on the
+    PATH only (query excluded). ``repeated_path`` is Heritrix's
+    pathological-path rule — the same segment *max_repeats*+ times in a
+    row (``/a/b/b/b`` at the default 3). Pure JVM; the backreference
+    keeps it out of the DuckDB oracle (RE2), pytest pins it instead."""
+    if max_repeats < 2:
+        raise ValueError("max_repeats must be >= 2")
+    path = F.regexp_replace(F.regexp_replace(url, _AUTHORITY_RE, ""), r"[?#].*$", "")
+    n_seg = F.size(F.split(path, "/")) - 1
+    repeated = F.regexp_like(
+        path, F.lit(r"(/[^/]+)\1{" + str(max_repeats - 1) + r",}")
+    )
+    return F.struct(
+        (n_seg > F.lit(max_segments)).alias("too_deep"),
+        repeated.alias("repeated_path"),
+    )
+
+
+def split_path_traps(
+    candidates: DataFrame,
+    url_col: str = "url",
+    max_segments: int = 16,
+    max_repeats: int = 3,
+) -> tuple[DataFrame, DataFrame]:
+    """(clean, trapped) split by :func:`path_trap_flags` — a pure
+    narrow filter, no shuffle."""
+    flags = path_trap_flags(F.col(url_col), max_segments, max_repeats)
+    trapped = flags["too_deep"] | flags["repeated_path"]
+    return candidates.where(~trapped), candidates.where(trapped)
 
 
 def cap_per_template(

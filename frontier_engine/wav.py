@@ -15,11 +15,12 @@ little-endian PCM in a ``data`` chunk. Implemented here:
   build byte-different containers that decode to identical samples.
 * ``spectrogram_grid`` — deterministic (n_time × n_bands) log-energy
   spectrogram (mono mix → equal time frames → Hann window → rFFT →
-  band-pooled log energies). This is the audio analog of the image
-  grid: it feeds the same dHash fingerprint path,
+  band-pooled log energies). This is the audio analog of the 8×8 image
+  grid: it feeds the same pooled-feature and dHash fingerprint paths,
   and because the grid is log-energy, the fingerprint's adjacent-cell
   comparisons are GAIN-INVARIANT (scaling every sample by c shifts all
   cells by log c², preserving every comparison).
+* ``slice_window`` — sample-accurate PCM window for frame sampling.
 
 Scope note: correctness-grade, like the PNG codec — numpy rFFT per
 frame is plenty for the decode stage's per-row work; at 100 TB the
@@ -178,8 +179,8 @@ def spectrogram_grid(
     Mono mix → n_time equal frames (tail truncated) → Hann window →
     rFFT → DC-excluded bins pooled into n_bands equal slices → log10 of
     summed power (+eps). float64 throughout, returned as float32 — the
-    audio analog of the image path's grayscale plane, consumed by the
-    same dHash fingerprint code.
+    audio analog of the image path's 8×8 grayscale grid, consumed by the
+    same pooled-feature and dHash fingerprint code.
     """
     arr = np.asarray(samples, dtype=np.float64)
     if arr.ndim == 2:
@@ -203,3 +204,11 @@ def spectrogram_grid(
     return grid.astype(np.float32)
 
 
+def slice_window(
+    samples: np.ndarray, sample_rate: int, start_s: float, dur_s: float
+) -> np.ndarray:
+    """Sample-accurate window [start_s, start_s + dur_s) — empty-safe
+    (clamped to the signal length)."""
+    lo = min(int(round(start_s * sample_rate)), len(samples))
+    hi = min(int(round((start_s + dur_s) * sample_rate)), len(samples))
+    return samples[lo:hi]

@@ -19,6 +19,7 @@ from frontier_engine.bpe import (
     bpe_token_count_col,
     bpe_tokens_col,
     bpe_train,
+    merges_df,
 )
 from frontier_engine.textops import pack_sequences_counted, token_counts
 
@@ -171,6 +172,11 @@ def test_pack_sequences_bpe(docs, merges):
             want.append((seq, i, lo - off, hi - lo))
         off += n
     assert rows == sorted(want)
+
+
+def test_merges_df_roundtrip(spark, merges):
+    rows = merges_df(spark, merges).orderBy("rank").collect()
+    assert [(r.left, r.right) for r in rows] == merges
 
 
 def test_encode_plan_pure_jvm(spark, merges):

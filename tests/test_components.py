@@ -9,7 +9,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from frontier_engine.components import connected_components
+from frontier_engine.components import connected_components, near_dup_clusters
 
 
 def _union_find(n_nodes, edges):
@@ -132,6 +132,34 @@ def test_cc_matches_duckdb_recursive_cte(spark):
     assert got == want
 
 
+def test_near_dup_clusters_transitive_chain(spark):
+    # B overlaps A and C heavily; A vs C fall below the 0.8 Jaccard bar.
+    # Pairwise survivor logic keeps {A, C}; cluster logic keeps {A}.
+    base = [f"tok{i}" for i in range(40)]
+    a = " ".join(base)
+    b = " ".join(base[4:] + [f"btail{i}" for i in range(4)])
+    c = " ".join(base[8:] + [f"btail{i}" for i in range(4)] + [f"ctail{i}" for i in range(4)])
+    other = " ".join(f"zz{i}" for i in range(40))
+    docs = spark.createDataFrame(
+        [(1, a), (2, b), (3, c), (9, other)], "doc_id long, text string"
+    )
+    out = {
+        r["doc_id"]: (r["component"], r["keep"])
+        for r in near_dup_clusters(docs, threshold=0.8).collect()
+    }
+    assert out[9] == (9, True)  # singleton untouched
+    assert out[1] == (1, True)
+    assert out[2] == (1, False)
+    # the chain case: 3 is near 2 but NOT near 1 — still dropped
+    from frontier_engine.textops import minhash_dedup_pairs
+
+    direct = minhash_dedup_pairs(docs, threshold=0.8)
+    direct_pairs = {(r["id_a"], r["id_b"]) for r in direct.collect()}
+    assert (1, 3) not in direct_pairs, "fixture must keep A-C below threshold"
+    assert (1, 2) in direct_pairs and (2, 3) in direct_pairs
+    assert out[3] == (1, False)
+
+
 def test_cc_round_plan_has_no_cartesian_and_partial_aggregates(spark):
     # the returned labeling is checkpointed (plan = RDD scan), so guard
     # the per-round plan: one large-star + small-star composition.
@@ -148,3 +176,35 @@ def test_cc_round_plan_has_no_cartesian_and_partial_aggregates(spark):
     assert "partial_min" in plan
 
 
+def test_near_dup_clusters_quality_survivor(spark):
+    # same chain fixture: cluster {1,2,3} plus singleton 9. With a
+    # quality frame ranking doc 3 highest, the survivor flips from the
+    # min-id default (1) to the best-quality member (3); ties keep the
+    # lowest id; unscored docs rank below scored ones.
+    base = [f"tok{i}" for i in range(40)]
+    a = " ".join(base)
+    b = " ".join(base[4:] + [f"btail{i}" for i in range(4)])
+    c = " ".join(base[8:] + [f"btail{i}" for i in range(4)] + [f"ctail{i}" for i in range(4)])
+    other = " ".join(f"zz{i}" for i in range(40))
+    docs = spark.createDataFrame(
+        [(1, a), (2, b), (3, c), (9, other)], "doc_id long, text string"
+    )
+    quality = spark.createDataFrame(
+        [(1, 0.2), (2, 0.5), (3, 0.9)], "doc_id long, quality double"
+    )
+    out = {
+        r["doc_id"]: (r["component"], r["keep"])
+        for r in near_dup_clusters(docs, threshold=0.8, quality=quality).collect()
+    }
+    assert out[3][1] is True and out[1][1] is False and out[2][1] is False
+    assert out[9][1] is True  # singleton survives regardless of score
+    assert out[1][0] == out[2][0] == out[3][0]  # same component label
+    # tie on quality -> lowest id wins
+    tie = spark.createDataFrame(
+        [(1, 0.9), (2, 0.9), (3, 0.9)], "doc_id long, quality double"
+    )
+    out2 = {
+        r["doc_id"]: r["keep"]
+        for r in near_dup_clusters(docs, threshold=0.8, quality=tie).collect()
+    }
+    assert out2[1] is True and not out2[2] and not out2[3]

@@ -279,6 +279,41 @@ KEPT = {
     "textops._fingerprint_blocks": "per-row reference for text_profile",
     "html_text.html_bytes_to_text_udf": "row-wise UDF face of html_to_text, used by the documented byte-parity drive",
 }
+# Tested capabilities with no product caller whose deletion is deferred
+# (ROADMAP direction 5): each either gets routed onto a crawl or ingest
+# path or goes, with its tests, in a later change.
+_DEFERRED = "tested capability without a product caller; route or delete later (ROADMAP direction 5)"
+KEPT.update(
+    dict.fromkeys(
+        [
+            "bpe.merges_df",
+            "components.near_dup_clusters",
+            "links.link_candidates",
+            "links.apply_anchor_signal",
+            "traps.path_trap_flags",
+            "traps.split_path_traps",
+            "sinks.surt_expr",
+            "sinks.cdx_rows",
+            "sinks.write_cdx_index",
+            "sinks.read_cdx_prefix",
+            "streaming.stream_pages",
+            "streaming.parse_micro_batch",
+            "streaming.frontier_ingest_stream",
+            "multimodal.synth_media",
+            "multimodal._gradient_image",
+            "multimodal._tone_signal",
+            "multimodal.extract_features",
+            "multimodal._decode_impl",
+            "multimodal.sample_frames",
+            "multimodal.resize_images",
+            "multimodal.probe_media",
+            "jpeg.probe_jpeg",
+            "mp4.sample_at_time",
+            "wav.slice_window",
+        ],
+        _DEFERRED,
+    )
+)
 
 
 def _engine_reach():

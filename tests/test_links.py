@@ -168,6 +168,27 @@ def test_extract_links_plan_is_jvm_only(spark):
     assert len(plan) < 12_000, f"expression blowup: plan is {len(plan)} chars"
 
 
+def test_link_candidates_shape_and_dedup(spark):
+    from frontier_engine.links import link_candidates
+
+    pages = spark.read.parquet(os.path.join(FIX, "pages.parquet"))
+    cand = link_candidates(pages, base_depth=2, link_score=1.5)
+    assert cand.columns == ["url", "parent_url", "depth", "listing_score"]
+    rows = cand.collect()
+    assert rows and all(r.depth == 2 and r.listing_score == 1.5 for r in rows)
+    # distinct per (url, parent_url): the edge page's duplicated
+    # dup.html anchor collapses to one candidate
+    dup = [r for r in rows if r.url.endswith("/dir/sub/dup.html")]
+    assert len(dup) == 1
+    # self-links dropped; all candidates are absolute http(s)
+    assert all(r.url != r.parent_url for r in rows)
+    assert all(re.match(r"^https?://", r.url) for r in rows)
+    # nofollow URLs remain crawlable by default, excluded on request
+    n_all = len(rows)
+    n_follow = link_candidates(pages, include_nofollow=False).count()
+    assert n_follow < n_all
+
+
 def test_anchor_stats_matches_python_recount(spark):
     """anchor_stats vs an independent pure-Python recount (Counter over
     the GOLDEN links parquet — the stdlib-twin-certified link set), so
@@ -250,3 +271,48 @@ def test_anchor_stats_plan_shape(spark):
     assert "HashAggregate" in plan
 
 
+def test_apply_anchor_signal_semantics(spark):
+    """Boost is monotone in host breadth, bounded below one depth step,
+    zero for nofollow-only targets, and absent URLs pass unchanged."""
+    import math
+
+    from frontier_engine.links import apply_anchor_signal
+
+    stats = spark.createDataFrame(
+        [
+            ("u1", 4, 1, 0, "a"),    # 1 host
+            ("u2", 9, 5, 0, "b"),    # 5 hosts — must outrank u1
+            ("u3", 3, 3, 3, ""),     # nofollow-only → zero boost
+        ],
+        ["url", "n_refs", "n_hosts", "n_nofollow", "top_anchor"],
+    )
+    pending = spark.createDataFrame(
+        [("u1", 100.0), ("u2", 100.0), ("u3", 100.0), ("u4", 100.0)],
+        ["url", "priority"],
+    )
+    got = {r.url: r.priority for r in apply_anchor_signal(pending, stats).collect()}
+    def expect(h):
+        return 100.0 + 5.0 * (1.0 - 1.0 / (1.0 + math.log(1.0 + h)))
+    assert abs(got["u1"] - expect(1)) < 1e-12
+    assert abs(got["u2"] - expect(5)) < 1e-12
+    assert got["u3"] == 100.0          # nofollow-only: not an endorsement
+    assert got["u4"] == 100.0          # no stats row: unchanged
+    assert got["u2"] > got["u1"] > got["u3"]
+    # bounded below one depth step (priority = depth*100 + score)
+    assert all(100.0 <= v < 200.0 for v in got.values())
+
+
+def test_apply_anchor_signal_plan_shape(spark):
+    """Plain url-keyed join + projection: no cartesian, no Python
+    stage, no window — and the stats side carries only (url, boost)."""
+    from frontier_engine.links import anchor_stats, apply_anchor_signal, extract_links
+
+    links = extract_links(spark.read.parquet(os.path.join(FIX, "pages.parquet")))
+    pending = links.select("url").distinct().withColumn("priority", F.lit(100.0))
+    out = apply_anchor_signal(pending, anchor_stats(links))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                "CartesianProduct", "Window"):
+        assert bad not in plan, f"{bad} leaked into the anchor-signal plan"
+    # every boosted priority still within one depth step of its base
+    assert out.where((F.col("priority") < 100.0) | (F.col("priority") >= 200.0)).count() == 0

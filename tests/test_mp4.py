@@ -45,6 +45,16 @@ def test_variable_durations_multirun_stts():
     assert meta["duration_s"] == 11.5
 
 
+def test_sample_at_time_seek_rule():
+    samples = mk_samples(6)
+    meta = V.parse_mp4(V.encode_mp4(samples, sample_deltas=2000))  # 2 s/sample
+    tbl = meta["samples"]
+    assert V.sample_at_time(tbl, 0.0) == 0
+    assert V.sample_at_time(tbl, 1.9) == 0
+    assert V.sample_at_time(tbl, 2.0) == 1
+    assert V.sample_at_time(tbl, 99.0) == 5
+
+
 def test_unknown_boxes_skipped_and_largesize():
     samples = mk_samples(4)
     data = V.encode_mp4(samples)

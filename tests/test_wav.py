@@ -15,17 +15,6 @@ def tone(freq: float, dur_s: float = 0.5, rate: int = 4000) -> np.ndarray:
     return 0.5 * np.sin(2 * np.pi * freq * t)
 
 
-def _tone_signal(i: int, duration_s: float, rate: int = 4000) -> np.ndarray:
-    """Two sines (frequencies keyed off ``i``, below Nyquist) + a seeded
-    noise floor — band energies differ clearly, so spectrogram
-    fingerprints are stable under re-encode."""
-    t = np.arange(int(round(duration_s * rate)), dtype=np.float64) / rate
-    f1 = 150.0 + (i * 37) % 800
-    f2 = 300.0 + (i * 53) % 1100
-    noise = np.random.default_rng(1000 + i).normal(0.0, 0.05, len(t))
-    return 0.4 * np.sin(2 * np.pi * f1 * t) + 0.25 * np.sin(2 * np.pi * f2 * t) + noise
-
-
 def test_roundtrip_pcm16_exact():
     x = tone(440)
     data = W.encode_wav(x, 4000)
@@ -103,7 +92,7 @@ def test_spectrogram_tone_lands_in_expected_band():
 
 
 def test_fingerprint_gain_invariant_and_reencode_stable():
-    from frontier_engine.multimodal import _decode_gray, dhash64
+    from frontier_engine.multimodal import _decode_gray, dhash64, _tone_signal
 
     x = _tone_signal(7, 2.0)
     h = dhash64(W.spectrogram_grid(x, 9, 8).T)
@@ -121,3 +110,8 @@ def test_fingerprint_gain_invariant_and_reencode_stable():
     assert bin((h1 ^ other) & ((1 << 64) - 1)).count("1") > 10
 
 
+def test_slice_window_sample_accurate():
+    x = np.arange(100, dtype=np.float64) / 200.0
+    assert (W.slice_window(x, 10, 2.0, 3.0) == x[20:50]).all()
+    assert (W.slice_window(x, 10, 8.0, 5.0) == x[80:]).all()  # clamped
+    assert len(W.slice_window(x, 10, 20.0, 5.0)) == 0
