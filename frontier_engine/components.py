@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["connected_components", "near_dup_clusters"]
+__all__ = ["connected_components"]
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -121,8 +121,7 @@ def connected_components(
     ``(id: long, component: long)`` — one row per distinct node that
     appears in the edge list; ``component`` is the smallest id in that
     node's connected component (roots map to themselves). Nodes with no
-    edges never appear; callers left-join and ``coalesce`` to their own
-    id (as :func:`near_dup_clusters` does).
+    edges never appear; callers left-join and ``coalesce`` to their own id.
 
     The labeling is one row per node IN the edge list — for dedup
     workloads that is the duplicate rows only, a small fraction of the
@@ -210,72 +209,3 @@ def connected_components(
         ).localCheckpoint(eager=True)
     finally:
         cur.unpersist()
-
-
-def near_dup_clusters(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-    quality: DataFrame | None = None,
-    quality_col: str = "quality",
-) -> DataFrame:
-    """Cluster-level MinHash dedup: verified near-dup pairs → connected
-    components → one survivor per duplicate cluster.
-
-    Returns ``(id_col, component, keep)`` for EVERY input doc:
-    singletons are their own component and kept; inside a multi-doc
-    cluster exactly one doc survives. This is the transitive policy: a
-    chain A~B~C (A≁C directly) collapses to one survivor here, where
-    pairwise survivor-picking would keep {A, C}.
-
-    Survivor rule: minimum id by default. When *quality* is given — a
-    ``(id_col, quality_col)`` frame, e.g. ``textops.lm_score`` output or
-    a quality_score column — the survivor is the HIGHEST-quality member
-    (ties broken by minimum id), the FineWeb/SemDeDup-practice refinement
-    of keep-any: dedup should discard the boilerplate-laden mirror, not
-    whichever copy happened to sort first. Docs missing from *quality*
-    rank below any scored doc (quality -inf), deterministically.
-
-    Scale shape: the quality path adds one ``max_by`` aggregation on
-    component (map-side partial) and one join of the per-component
-    survivor row back onto members — both keyed on component, no window,
-    no SinglePartition."""
-    from frontier_engine.textops import minhash_dedup_pairs
-
-    pairs = minhash_dedup_pairs(
-        docs, text_col, id_col, num_hashes, bands, shingle_n, threshold
-    )
-    comp = connected_components(pairs, "id_a", "id_b").withColumnRenamed(
-        "id", id_col
-    )
-    members = (
-        docs.select(F.col(id_col).cast("long").alias(id_col))
-        .join(comp, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("component"),
-        )
-    )
-    if quality is None:
-        return members.withColumn("keep", F.col("component") == F.col(id_col))
-    q = quality.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(quality_col).cast("double").alias("_q"),
-    )
-    scored = members.join(q, id_col, "left").withColumn(
-        "_q", F.coalesce("_q", F.lit(float("-inf")))
-    )
-    # survivor = argmax (quality, -id): highest quality, lowest id on ties
-    best = scored.groupBy("component").agg(
-        F.max_by(id_col, F.struct(F.col("_q"), (-F.col(id_col)).alias("_nid")))
-        .alias("_survivor")
-    )
-    return scored.join(best, "component").select(
-        id_col,
-        "component",
-        (F.col(id_col) == F.col("_survivor")).alias("keep"),
-    )

@@ -20,7 +20,7 @@ pipelines.py:76; the bytes-repr regex matching, pipelines.py:88,98).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)

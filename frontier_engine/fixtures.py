@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import html as html_mod
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 from hashlib import blake2b
 from urllib.parse import urlencode, urlunparse

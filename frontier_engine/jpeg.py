@@ -294,28 +294,6 @@ def _category(v: int) -> int:
 # ----------------------------- decoder ---------------------------------
 
 
-def probe_jpeg(data: bytes) -> dict:
-    """Header-only probe: marker walk to SOF → width/height/components
-    without entropy-decoding (the metadata-ingest fast path)."""
-    if data[:2] != SOI:
-        raise ValueError("not a JPEG: bad SOI")
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"JPEG: expected marker at {pos}")
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD9, 0xDA):
-            break
-        (seglen,) = struct.unpack(">H", data[pos : pos + 2])
-        if marker in (0xC0, 0xC1, 0xC2):
-            h, w = struct.unpack(">HH", data[pos + 3 : pos + 7])
-            return {"width": w, "height": h, "components": data[pos + 7],
-                    "progressive": marker == 0xC2}
-        pos += seglen
-    raise ValueError("JPEG: no SOF segment")
-
-
 def decode_jpeg(data: bytes) -> tuple[np.ndarray, dict]:
     """→ (uint8 array (H, W, 3) RGB — or (H, W, 1) for grayscale —,
     meta dict with width/height/components/sampling/restart_interval)."""

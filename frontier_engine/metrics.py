@@ -11,20 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("round", T.IntegerType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("scheduled", T.LongType()),
-        T.StructField("fetched", T.LongType()),
-        T.StructField("missing", T.LongType()),
-        T.StructField("robots_blocked", T.LongType()),
-        T.StructField("bytes_fetched", T.LongType()),
-        T.StructField("new_candidates", T.LongType()),
-    ]
-)
 
 
 def _per_host(df: DataFrame, name: str, extra=None) -> DataFrame:
@@ -62,7 +48,10 @@ def ingest_side_metrics(blocked: DataFrame, new_candidates: DataFrame) -> DataFr
 
 
 def combine_metrics(round_no: int, fetch_side: DataFrame, ingest_side: DataFrame) -> DataFrame:
-    """Join the two halves into the final METRICS_SCHEMA row set."""
+    """Join the two halves into the final per-(round, host) row set:
+    round int, host string, and the long counts scheduled, fetched,
+    missing, robots_blocked, bytes_fetched and new_candidates (a host
+    absent from one half reads 0 there)."""
     m = fetch_side.join(ingest_side, "host", "full")
     zero = F.lit(0).cast("long")
     return m.select(

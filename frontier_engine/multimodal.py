@@ -1,32 +1,24 @@
 """Multimodal columns for training-data pipelines: image/audio/video as
-opaque ``binary`` payloads + typed metadata, with decode / feature-extract
-/ resize / frame-sample as Arrow-batched ``mapInPandas`` stages.
+opaque ``binary`` payloads + typed metadata (``MEDIA_SCHEMA``), and the
+perceptual-hash near-dup stage over them as one Arrow-batched
+``mapInPandas`` stage.
 
-The Spark-side plumbing (schemas, partitioning, UDF signatures, batch
-shapes) is real and tested. The codec layer: PNG payloads run a REAL
-byte-level decode/resize/re-encode via the pure-stdlib codec in
+The codec layer is real and stdlib-only: PNG payloads decode through
 ``frontier_engine.png`` (zlib inflate + scanline filter reversal), WAV
-payloads a REAL RIFF/PCM decode + log-spectrogram via
-``frontier_engine.wav``, JPEG payloads a REAL baseline-JPEG decode
-(Huffman + dequant + IDCT) via ``frontier_engine.jpeg``, and MP4
-payloads a REAL ISO-BMFF container parse (box walk + stts/stsz/stsc/
-stco sample-table resolution) via ``frontier_engine.mp4`` — all
-round-4, no image/audio library needed. Round-5 composes the two:
-MJPEG-in-MP4 videos decode REAL frame pixels (mp4 sample-range
-resolution → baseline-JPEG decode), removing the last multimodal fake.
-Only non-MJPEG video codecs (H.264 is out of stdlib scope) keep a
-deterministic fallback at the annotated pyav drop-in point — the byte
-ranges, timing and seek math handed to it are real either way.
+payloads through ``frontier_engine.wav`` (RIFF/PCM → log-spectrogram),
+JPEG payloads through ``frontier_engine.jpeg`` (baseline Huffman +
+dequant + IDCT), and MJPEG-in-MP4 videos through ``frontier_engine.mp4``
+(ISO-BMFF sample-table resolution) composed with the JPEG decoder. Only
+non-MJPEG video codecs (H.264 is out of stdlib scope) keep a
+deterministic fallback at the annotated pyav drop-in point.
 
 Design for 100 TB of media:
 * payloads never leave the JVM except inside the one mapInPandas stage
   that needs the bytes (Arrow zero-copy binary columns);
-* metadata (mime, width/height, duration, codec) is extracted once at
-  ingest and stored as plain columns, so downstream filters/joins prune
-  the binary column entirely (columnar projection — the scan never reads
-  bytes unless the stage needs them);
-* frame sampling emits (media_id, frame_idx, frame binary) rows —
-  explode-shaped, so per-frame work parallelizes past per-file skew.
+* metadata (mime, width/height, duration, codec) is stored as plain
+  columns, so downstream filters/joins prune the binary column entirely
+  (columnar projection — the scan never reads bytes unless the stage
+  needs them).
 """
 
 from __future__ import annotations
@@ -37,7 +29,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -56,24 +47,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha_prefix", T.StringType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
 def _to_gray(arr: np.ndarray) -> np.ndarray:
     """(H, W, C) uint8 → (H, W) float32 luminance-ish plane (mean of the
     color channels; alpha ignored)."""
@@ -82,39 +55,6 @@ def _to_gray(arr: np.ndarray) -> np.ndarray:
     if arr.shape[2] <= 2:  # gray / gray+alpha
         return arr[:, :, 0].astype(np.float32)
     return arr[:, :, :3].mean(axis=2).astype(np.float32)
-
-
-def _decode_impl(payload: bytes, mime: str) -> np.ndarray:
-    """Decode to a stable 8×8 feature grid.
-
-    PNG: REAL decode (frontier_engine.png — zlib inflate + filter
-    reversal on the actual payload bytes), grayscale, nearest-resampled
-    to 8×8. JPEG: REAL baseline decode (frontier_engine.jpeg — Huffman
-    + dequant + IDCT), same grayscale grid. WAV: REAL decode
-    (frontier_engine.wav — RIFF/PCM) → 8×8 log-energy spectrogram
-    (8 time frames × 8 frequency bands), the audio analog of the image
-    grid. Video: deterministic fake (no stdlib codec exists; replace
-    with pyav here, and ONLY here).
-    """
-    from frontier_engine import jpeg as J
-    from frontier_engine import png as P
-    from frontier_engine import wav as W
-
-    if mime == "image/png" and payload[:8] == P.SIGNATURE:
-        arr, _meta = P.decode_png(payload)
-        return P.resize_nearest(_to_gray(arr), 8, 8).astype(np.float32)
-    if mime == "image/jpeg" and payload[:2] == J.SOI:
-        arr, _meta = J.decode_jpeg(payload)
-        return P.resize_nearest(_to_gray(arr), 8, 8).astype(np.float32)
-    if mime.startswith("audio/") and W.is_wav(payload):
-        samples, _meta = W.decode_wav(payload)
-        return W.spectrogram_grid(samples, n_time=8, n_bands=8)
-    if mime == "video/mp4":
-        frame = _first_video_frame(payload)
-        if frame is not None:
-            return P.resize_nearest(_to_gray(frame), 8, 8).astype(np.float32)
-    h = blake2b(payload, digest_size=64).digest()
-    return np.frombuffer(h, dtype=np.uint8).reshape(8, 8).astype(np.float32)
 
 
 def _first_video_frame(payload: bytes) -> np.ndarray | None:
@@ -140,298 +80,6 @@ def _first_video_frame(payload: bytes) -> np.ndarray | None:
         return arr
     except Exception:
         return None
-
-
-def _gradient_image(i: int, w: int = 24, h: int = 16) -> np.ndarray:
-    """Deterministic RGB test image (formula pixels — the golden values
-    the codec tests assert against)."""
-    y, x = np.mgrid[0:h, 0:w]
-    return np.stack(
-        [(x * 7 + i) % 256, (y * 5 + i) % 256, (x + y + i * 3) % 256], axis=2
-    ).astype(np.uint8)
-
-
-SYNTH_SAMPLE_RATE = 4000
-
-
-def _tone_signal(i: int, duration_s: float, rate: int = SYNTH_SAMPLE_RATE) -> np.ndarray:
-    """Deterministic audio test signal: two sines (frequencies keyed off
-    ``i``, below Nyquist) + seeded noise floor — band energies differ
-    clearly, so spectrogram fingerprints are stable under re-encode."""
-    t = np.arange(int(round(duration_s * rate)), dtype=np.float64) / rate
-    f1 = 150.0 + (i * 37) % 800
-    f2 = 300.0 + (i * 53) % 1100
-    noise = np.random.default_rng(1000 + i).normal(0.0, 0.05, len(t))
-    return 0.4 * np.sin(2 * np.pi * f1 * t) + 0.25 * np.sin(2 * np.pi * f2 * t) + noise
-
-
-def synth_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic synthetic media table (test/bench input). The
-    ``image/png`` rows carry REAL PNG payloads (encoded with cycling
-    scanline filters), the ``image/jpeg`` rows REAL baseline-JPEG
-    payloads (optimized Huffman, 4:2:0 on odd rows), and the
-    ``audio/wav`` rows REAL RIFF/PCM16 payloads (synthesized tone+noise
-    signals), and the ``video/mp4`` rows REAL MJPEG-in-MP4 (every codec
-    sample a baseline JPEG of a formula frame), so every decode stage
-    exercises genuine bytes end-to-end."""
-    from frontier_engine import jpeg as J
-    from frontier_engine import png as P
-    from frontier_engine import wav as W
-
-    rows = []
-    for i in range(n):
-        mime = ["image/jpeg", "image/png", "audio/wav", "video/mp4"][i % 4]
-        if mime == "image/png":
-            img = _gradient_image(i)
-            payload = P.encode_png(img, filter_strategy="cycle")
-            meta = {"width": img.shape[1], "height": img.shape[0],
-                    "duration_s": None, "codec": "png"}
-        elif mime == "image/jpeg":
-            img = _gradient_image(i)
-            payload = J.encode_jpeg(img, quality=90, subsample=bool(i % 8))
-            meta = {"width": img.shape[1], "height": img.shape[0],
-                    "duration_s": None, "codec": "jpeg"}
-        elif mime == "audio/wav":
-            dur = float(1 + i % 30)
-            payload = W.encode_wav(_tone_signal(i, dur), SYNTH_SAMPLE_RATE)
-            meta = {"width": None, "height": None, "duration_s": dur,
-                    "codec": "pcm_s16le"}
-        else:  # video/mp4 (r5): REAL ISO-BMFF container, REAL MJPEG
-            # samples — every frame is a baseline JPEG of a formula
-            # image, so the sample/decode stages exercise genuine
-            # pixels end to end (mp4 demux + jpeg decode compose)
-            from frontier_engine import mp4 as V
-
-            dur = 1 + i % 30
-            samples = [
-                bytes(J.encode_jpeg(_gradient_image(i * 31 + k), quality=90))
-                for k in range(dur)
-            ]
-            img0 = _gradient_image(i * 31)
-            payload = V.encode_mp4(
-                samples, timescale=1000, sample_deltas=1000,
-                width=img0.shape[1], height=img0.shape[0], samples_per_chunk=4,
-            )
-            meta = {"width": img0.shape[1], "height": img0.shape[0],
-                    "duration_s": float(dur), "codec": "mjpeg"}
-        rows.append({"media_id": i, "mime": mime, "payload": payload, "meta": meta})
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def extract_features(media: DataFrame, feat_dim: int = 16) -> DataFrame:
-    """Decode (stub) + pooled feature vector per media row, Arrow-batched.
-
-    The UDF sees pandas batches of (media_id, mime, payload) ONLY — the
-    meta struct and any other columns are pruned before the Python stage.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, mime, payload in zip(pdf["media_id"], pdf["mime"], pdf["payload"]):
-                raw = bytes(payload)
-                grid = _decode_impl(raw, mime)  # ← real codec goes here
-                pooled = grid.mean(axis=0)  # 8 dims
-                feats = np.concatenate([pooled, grid.std(axis=1)])[:feat_dim]
-                out.append(
-                    {
-                        "media_id": mid,
-                        "n_bytes": len(raw),
-                        "sha_prefix": blake2b(raw, digest_size=8).hexdigest(),
-                        "features": feats.astype(np.float32).tolist(),
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in FEATURES_SCHEMA.fields])
-
-    return media.select("media_id", "mime", "payload").mapInPandas(run, FEATURES_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_s: float = 5.0) -> DataFrame:
-    """Frame-sample video/audio rows: one output row per sampled frame.
-
-    Frame count derives from metadata (duration/every_s) WITHOUT touching
-    payload bytes — the explode is pure JVM; only the per-frame decode
-    stage reads bytes. WAV rows (round-4): REAL extraction — the frame
-    is the ``[idx·every_s, (idx+1)·every_s)`` PCM window re-encoded as a
-    standalone WAV (decoded once per media row per Arrow batch via a
-    local cache, since the explode duplicates the payload). MP4 rows
-    (round-4): REAL container-level extraction — the frame is the exact
-    mdat byte range of the sample whose start time ≤ idx·every_s,
-    resolved through the parsed stts/stsz/stsc/stco tables (the seek
-    math a demuxer does). MJPEG-in-MP4 samples (r5) additionally decode
-    to REAL pixels and emit a standalone PNG frame; other video codecs
-    keep the container-level sample bytes (pyav drop-in point). Other
-    mimes keep the deterministic fake.
-    """
-    from frontier_engine import jpeg as J
-    from frontier_engine import mp4 as V
-    from frontier_engine import png as P
-    from frontier_engine import wav as W
-
-    timed = media.where(F.col("meta")["duration_s"].isNotNull()).withColumn(
-        "n_frames",
-        F.greatest(F.lit(1), F.floor(F.col("meta")["duration_s"] / F.lit(every_s))).cast("int"),
-    )
-    exploded = timed.select(
-        "media_id",
-        "mime",
-        "payload",
-        F.explode(F.sequence(F.lit(0), F.col("n_frames") - 1)).alias("frame_idx"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decoded: dict[int, tuple] = {}
-        for pdf in batches:
-            out = []
-            for mid, mime, payload, idx in zip(
-                pdf["media_id"], pdf["mime"], pdf["payload"], pdf["frame_idx"]
-            ):
-                raw = bytes(payload)
-                if str(mime).startswith("audio/") and W.is_wav(raw):
-                    if mid not in decoded:
-                        decoded[mid] = W.decode_wav(raw)
-                    samples, meta = decoded[mid]
-                    win = W.slice_window(
-                        samples, meta["sample_rate"], int(idx) * every_s, every_s
-                    )
-                    frame = W.encode_wav(win, meta["sample_rate"])
-                elif mime == "video/mp4" and V.is_mp4(raw):
-                    if mid not in decoded:
-                        decoded[mid] = V.parse_mp4(raw)["samples"]
-                    table = decoded[mid]
-                    si = V.sample_at_time(table, int(idx) * every_s)
-                    frame = V.extract_sample(raw, table, si)
-                    if frame[:2] == J.SOI:
-                        # MJPEG-in-MP4 (r5): REAL pixel decode of the
-                        # sample; the emitted frame is a standalone PNG
-                        # of the decoded pixels (the ffmpeg-frame-dump
-                        # shape). Other codecs keep the container-level
-                        # sample bytes (pyav drop-in point).
-                        arr, _jm = J.decode_jpeg(frame)
-                        frame = P.encode_png(arr, filter_strategy="none")
-                else:
-                    # ← real frame extraction (pyav seek+decode) goes here
-                    frame = blake2b(
-                        raw + int(idx).to_bytes(4, "big"), digest_size=48
-                    ).digest()
-                out.append({"media_id": mid, "frame_idx": int(idx), "frame": frame})
-            yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    return exploded.mapInPandas(run, FRAME_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Resize stage: image rows → resized payload + updated meta.
-
-    PNG and JPEG rows run the REAL pipeline — decode → nearest-neighbor
-    resample → re-encode — on the actual bytes; the output payload is
-    itself a valid PNG/JPEG of the requested dimensions. Unrecognized
-    image mimes keep the deterministic fake (PIL drop-in point)."""
-    from frontier_engine import jpeg as J
-    from frontier_engine import png as P
-
-    imgs = media.where(F.col("mime").startswith("image/"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, mime, payload in zip(pdf["media_id"], pdf["mime"], pdf["payload"]):
-                raw = bytes(payload)
-                if mime == "image/png" and raw[:8] == P.SIGNATURE:
-                    arr, _meta = P.decode_png(raw)
-                    resized = P.encode_png(
-                        P.resize_nearest(arr, width, height), filter_strategy="none"
-                    )
-                elif mime == "image/jpeg" and raw[:2] == J.SOI:
-                    arr, _meta = J.decode_jpeg(raw)
-                    resized = J.encode_jpeg(
-                        P.resize_nearest(arr, width, height), quality=90
-                    )
-                else:
-                    # ← real resize (PIL thumbnail + re-encode) goes here
-                    resized = blake2b(
-                        raw + f"{width}x{height}".encode(), digest_size=32
-                    ).digest()
-                out.append(
-                    {
-                        "media_id": mid,
-                        "mime": mime,
-                        "payload": resized,
-                        "meta": {"width": width, "height": height, "duration_s": None, "codec": mime.split("/")[1]},
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return imgs.select("media_id", "mime", "payload").mapInPandas(run, MEDIA_SCHEMA)
-
-
-PROBE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("format_ok", T.BooleanType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("n_samples", T.IntegerType()),
-    ]
-)
-
-
-def probe_media(media: DataFrame) -> DataFrame:
-    """Metadata ingest from REAL bytes (round-4): the stage that
-    populates the typed meta columns once at ingest, so every
-    downstream filter/join prunes the binary column. All four mimes
-    probe actual container structure — PNG IHDR, JPEG SOF (header-only,
-    no entropy decode), WAV fmt/data, MP4 moov/sample tables;
-    unrecognized payloads come back format_ok=false rather than
-    erroring (crawled media is dirty by nature)."""
-    import struct as _struct
-
-    from frontier_engine import jpeg as J
-    from frontier_engine import mp4 as V
-    from frontier_engine import png as P
-    from frontier_engine import wav as W
-
-    def probe_one(mime: str, raw: bytes) -> dict:
-        if mime == "image/png" and raw[:8] == P.SIGNATURE:
-            w, h = _struct.unpack(">II", raw[16:24])  # IHDR is always first
-            return {"format_ok": True, "width": w, "height": h,
-                    "duration_s": None, "codec": "png", "n_samples": None}
-        if mime == "image/jpeg" and raw[:2] == J.SOI:
-            m = J.probe_jpeg(raw)
-            return {"format_ok": True, "width": m["width"], "height": m["height"],
-                    "duration_s": None,
-                    "codec": "jpeg-progressive" if m["progressive"] else "jpeg",
-                    "n_samples": None}
-        if mime.startswith("audio/") and W.is_wav(raw):
-            _samples, m = W.decode_wav(raw)
-            return {"format_ok": True, "width": None, "height": None,
-                    "duration_s": m["duration_s"],
-                    "codec": f"pcm_{'f' if m['format'] == 'float' else 's'}{m['bits']}le",
-                    "n_samples": None}
-        if mime == "video/mp4" and V.is_mp4(raw):
-            m = V.parse_mp4(raw)
-            return {"format_ok": True, "width": m["width"], "height": m["height"],
-                    "duration_s": m["duration_s"], "codec": "mp4",
-                    "n_samples": m["n_samples"]}
-        return {"format_ok": False, "width": None, "height": None,
-                "duration_s": None, "codec": None, "n_samples": None}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, mime, payload in zip(pdf["media_id"], pdf["mime"], pdf["payload"]):
-                try:
-                    rec = probe_one(str(mime), bytes(payload))
-                except (ValueError, _struct.error, IndexError):
-                    rec = {"format_ok": False, "width": None, "height": None,
-                           "duration_s": None, "codec": None, "n_samples": None}
-                out.append({"media_id": mid, "mime": mime, **rec})
-            yield pd.DataFrame(out, columns=[f.name for f in PROBE_SCHEMA.fields])
-
-    return media.select("media_id", "mime", "payload").mapInPandas(run, PROBE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -502,9 +150,9 @@ def phash_media(media: DataFrame) -> DataFrame:
     """Per-media 64-bit perceptual hash, Arrow-batched (media_id, phash):
     images get pixel dHash, WAV audio the band-energy-delta fingerprint
     (see _decode_gray) — both land in the same LongType column so ONE
-    banded join dedups a mixed media table. Like extract_features, the
-    UDF stage sees ONLY (media_id, mime, payload) — metadata and other
-    columns never cross the Arrow boundary."""
+    banded join dedups a mixed media table. The UDF stage sees ONLY
+    (media_id, mime, payload) — metadata and other columns never cross
+    the Arrow boundary."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -22,7 +22,7 @@ PDPs} → PDP → reviews offset 0 → reviews offsets limit..total.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from frontier_engine.canon import canonicalize, host_of
 from frontier_engine.config import EngineConfig

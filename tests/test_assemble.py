@@ -4,7 +4,6 @@ field-for-field on every listing (SURVEY §5.2)."""
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from frontier_engine import parse as P
 from frontier_engine.assemble import LISTING_COLUMNS, assemble_listings

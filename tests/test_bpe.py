@@ -17,9 +17,7 @@ from frontier_engine.bpe import (
     PRETOKEN_RE,
     bpe_encode,
     bpe_token_count_col,
-    bpe_tokens_col,
     bpe_train,
-    merges_df,
 )
 from frontier_engine.textops import pack_sequences_counted, token_counts
 
@@ -172,11 +170,6 @@ def test_pack_sequences_bpe(docs, merges):
             want.append((seq, i, lo - off, hi - lo))
         off += n
     assert rows == sorted(want)
-
-
-def test_merges_df_roundtrip(spark, merges):
-    rows = merges_df(spark, merges).orderBy("rank").collect()
-    assert [(r.left, r.right) for r in rows] == merges
 
 
 def test_encode_plan_pure_jvm(spark, merges):

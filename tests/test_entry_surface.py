@@ -259,8 +259,9 @@ def test_run_pair_falls_back_when_fewer_than_two_pairs(monkeypatch):
     assert "_fail" in out
 
 
-# Top-level engine defs that no crawl, ingest, oracle or harness path
-# reaches, each kept on purpose. Anything else unreached is dead code.
+# Top-level engine defs and constants that no crawl, ingest, oracle or
+# harness path reaches, each kept on purpose. Anything else unreached is
+# dead code.
 KEPT = {
     "assemble.aggregate_reviews": "reference J1-J3 listing assembly; no product path assembles listings yet, so it needs routing, not deletion",
     "assemble.assemble_listings": "reference J1-J3 listing assembly; no product path assembles listings yet, so it needs routing, not deletion",
@@ -278,51 +279,23 @@ KEPT = {
     "textops.doc_fingerprint_md5": "per-row reference for text_profile",
     "textops._fingerprint_blocks": "per-row reference for text_profile",
     "html_text.html_bytes_to_text_udf": "row-wise UDF face of html_to_text, used by the documented byte-parity drive",
+    "config.DEFAULT_CONFIG": "the default EngineConfig that the documented end-to-end drive imports",
+    "assemble.LISTING_COLUMNS": "reference J1-J3 listing assembly's column list, same reason as assemble_listings",
+    "multimodal.MEDIA_SCHEMA": "the media-table layout whose payload pruning test_metadata_filter_prunes_payload pins",
 }
-# Tested capabilities with no product caller whose deletion is deferred
-# (ROADMAP direction 5): each either gets routed onto a crawl or ingest
-# path or goes, with its tests, in a later change.
-_DEFERRED = "tested capability without a product caller; route or delete later (ROADMAP direction 5)"
-KEPT.update(
-    dict.fromkeys(
-        [
-            "bpe.merges_df",
-            "components.near_dup_clusters",
-            "links.link_candidates",
-            "links.apply_anchor_signal",
-            "traps.path_trap_flags",
-            "traps.split_path_traps",
-            "sinks.surt_expr",
-            "sinks.cdx_rows",
-            "sinks.write_cdx_index",
-            "sinks.read_cdx_prefix",
-            "streaming.stream_pages",
-            "streaming.parse_micro_batch",
-            "streaming.frontier_ingest_stream",
-            "multimodal.synth_media",
-            "multimodal._gradient_image",
-            "multimodal._tone_signal",
-            "multimodal.extract_features",
-            "multimodal._decode_impl",
-            "multimodal.sample_frames",
-            "multimodal.resize_images",
-            "multimodal.probe_media",
-            "jpeg.probe_jpeg",
-            "mp4.sample_at_time",
-            "wav.slice_window",
-        ],
-        _DEFERRED,
-    )
-)
 
 
 def _engine_reach():
-    """(unreached, all) qualified names of the top-level defs and classes
-    in frontier_engine/. Roots are the names referenced by module-level
-    code of frontier_engine/*.py and anywhere in the non-test .py files
-    at the repo root and under perfbench/; reach is closed over the
-    bodies of reached defs. Names match by identifier (a Name or an
-    attribute), so a shared name over-approximates reach, never under."""
+    """(unreached, all) qualified names of the top-level defs, classes
+    and non-dunder constants (plain-name assignments) in
+    frontier_engine/. Roots are the names referenced by the rest of the
+    module-level code of frontier_engine/*.py (imports, dunders, other
+    statements) and anywhere in the non-test .py files at the repo root
+    and under perfbench/; reach is closed over the bodies of reached
+    defs and the right-hand sides of reached constants. An assignment
+    is not a reference to its own target (Store-context names are
+    skipped). Names match by identifier (a Name or an attribute), so a
+    shared name over-approximates reach, never under."""
     import ast
     import glob
 
@@ -332,8 +305,16 @@ def _engine_reach():
         return {
             n.id if isinstance(n, ast.Name) else n.attr
             for n in ast.walk(node)
-            if isinstance(n, (ast.Name, ast.Attribute))
+            if isinstance(n, ast.Attribute)
+            or (isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store))
         }
+
+    def constant_names(st):
+        if isinstance(st, (ast.Assign, ast.AnnAssign)):
+            targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+            if all(isinstance(t, ast.Name) and not t.id.startswith("__") for t in targets):
+                return [t.id for t in targets]
+        return []
 
     defs, roots = {}, set()
     for path in sorted(glob.glob(os.path.join(root, "frontier_engine", "*.py"))):
@@ -342,8 +323,12 @@ def _engine_reach():
             tree = ast.parse(f.read())
         for st in tree.body:
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defs.setdefault(st.name, []).append((f"{mod}.{st.name}", st))
+                names = [st.name]
             else:
+                names = constant_names(st)
+            for name in names:
+                defs.setdefault(name, []).append((f"{mod}.{name}", st))
+            if not names:
                 roots |= refs(st)
     for path in glob.glob(os.path.join(root, "*.py")) + glob.glob(
         os.path.join(root, "perfbench", "*.py")
@@ -365,6 +350,47 @@ def _engine_reach():
 
 def test_every_engine_def_is_reached():
     unreached, every = _engine_reach()
-    assert unreached - set(KEPT) == set(), "unreached engine defs: route or delete them"
+    assert unreached - set(KEPT) == set(), "unreached engine defs or constants: route or delete them"
     assert set(KEPT) - every == set(), "KEPT names that no longer exist"
     assert set(KEPT) - unreached == set(), "KEPT names that now have a caller"
+
+
+def _unused_imports(path):
+    """(lineno, name) of every name that *path* imports and never uses.
+    A name is used if it appears as a Name anywhere in the file (the
+    base of an attribute access is a Name) or as a string in
+    ``__all__``; ``from __future__`` imports are exempt. Scope-blind, so
+    a shadowing use over-approximates use, never under."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    imported, used = [], set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            imported += [(n.lineno, (a.asname or a.name).split(".")[0]) for a in n.names]
+        elif isinstance(n, ast.ImportFrom) and n.module != "__future__":
+            imported += [(n.lineno, a.asname or a.name) for a in n.names if a.name != "*"]
+        elif isinstance(n, ast.Name):
+            used.add(n.id)
+        elif isinstance(n, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in n.targets
+        ):
+            used |= {
+                c.value for c in ast.walk(n.value)
+                if isinstance(c, ast.Constant) and isinstance(c.value, str)
+            }
+    return [(ln, name) for ln, name in imported if name not in used]
+
+
+def test_no_unused_imports():
+    import glob
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    found = [
+        f"{os.path.relpath(path, root)}:{ln} {name}"
+        for pattern in ("frontier_engine/*.py", "tests/*.py")
+        for path in sorted(glob.glob(os.path.join(root, pattern)))
+        for ln, name in _unused_imports(path)
+    ]
+    assert found == [], "unused imports: " + ", ".join(found)

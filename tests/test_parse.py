@@ -3,7 +3,6 @@ frames + candidates-resolve e2e on the fixture world."""
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
 from frontier_engine import parse as P

@@ -11,7 +11,6 @@ outputs scan the cache, they don't re-tokenize — and (c) handle
 hygiene."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from frontier_engine import parse as P
 

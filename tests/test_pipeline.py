@@ -1,8 +1,6 @@
 """F1-F7 + D2 quirk parity (SURVEY §2.3; pipelines.py:62-109,187-201)."""
 
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from frontier_engine.config import EngineConfig
 from frontier_engine.pipeline import apply_pipeline, ascii_repr

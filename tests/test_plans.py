@@ -3,12 +3,9 @@ invariants, asserted on executed plans (the pytest twin of
 scripts_plan_audit.py — if one of these trips, a scale-killer crept in).
 """
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
-from frontier_engine import seen as S
 from frontier_engine.canon import with_canon_columns
 from frontier_engine.config import EngineConfig
 from frontier_engine.schedule import assign_discovered_seq_counted, rank_batch

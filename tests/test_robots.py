@@ -291,7 +291,7 @@ def test_simulator_selects_ua_group_like_engine(spark):
     simulator parsed with the '*' default — masked only because the
     fixture worlds never declare UA-specific groups.)"""
     from frontier_engine.simulator import robots_rules_for_world
-    from frontier_engine.robots import match_path, RULES_SCHEMA
+    from frontier_engine.robots import match_path
 
     cfg = EngineConfig()
     body = (

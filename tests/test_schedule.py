@@ -1,7 +1,6 @@
 """O1/O5/X13: ranking + politeness budgets; salted == unsalted (SURVEY §5)."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from frontier_engine.config import EngineConfig
 from frontier_engine.schedule import assign_discovered_seq_counted, rank_batch

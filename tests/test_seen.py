@@ -2,7 +2,6 @@
 table, merge commutativity (SURVEY §5.5)."""
 
 import pandas as pd
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F

@@ -1,37 +1,11 @@
-"""ST1-ST4: Structured-Streaming face — micro-batch parse over a pages
-stream equals the batch parse; windowed metrics feed adaptive delay."""
+"""ST1-ST4: Structured-Streaming face — the streaming crawl equals the
+batch crawl (and resumes to the same state), stateful operators, the
+document ingest stream, and windowed metrics that feed adaptive delay."""
 
 import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
-
-
-def test_stream_pages_equals_batch(spark, world, spec, args, cfg, tmp_path):
-    from frontier_engine import parse as P
-    from frontier_engine.streaming import stream_pages
-
-    pages_dir = str(tmp_path / "pages")
-    pdf = world["pages"].copy()
-    pdf["warc_ts"] = pdf["warc_ts"].astype("datetime64[us]")
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(pages_dir)
-
-    out_dir = str(tmp_path / "out")
-    q = stream_pages(
-        spark, pages_dir, out_dir, str(tmp_path / "ckpt"), args, cfg, trigger_once=True
-    )
-    q.awaitTermination(300)
-
-    got_pdp = spark.read.parquet(os.path.join(out_dir, "pdp_rows"))
-    batch_pages = spark.read.parquet(pages_dir).withColumn(
-        "host", F.regexp_extract("url", r"^https?://([^/]+)/", 1)
-    )
-    want_pdp, _ = P.parse_pdp(batch_pages.where(P.page_type_col() == "pdp"), cfg)
-    assert got_pdp.count() == want_pdp.count()
-    got_ids = {r.listing_id for r in got_pdp.select("listing_id").collect()}
-    want_ids = {r.listing_id for r in want_pdp.select("listing_id").collect()}
-    assert got_ids == want_ids
 
 
 def test_windowed_fetch_metrics_batch_mode(spark):
@@ -122,104 +96,6 @@ class TestStatefulOps:
         run_stream_to_parquet(dedup_stateful(stream), out_dir, ck)
         urls = sorted(r.url for r in spark.read.parquet(out_dir).collect())
         assert urls == ["u1", "u2", "u3"]
-
-
-def _mk_url_slices(spark, tmp_path, slices):
-    import glob
-    import os
-    import shutil
-    import time
-
-    src = os.path.join(str(tmp_path), "cands")
-    os.makedirs(src, exist_ok=True)
-    for i, urls in enumerate(slices):
-        df = spark.createDataFrame([(u,) for u in urls], "url string")
-        d = os.path.join(str(tmp_path), f"cw{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        dst = os.path.join(src, f"slice-{i}.parquet")
-        shutil.move(glob.glob(os.path.join(d, "part-*.parquet"))[0], dst)
-        os.utime(dst, (time.time() + i, time.time() + i))  # mtime order = batch order
-    return src
-
-
-def test_frontier_ingest_stream_matches_batch_dedup(spark, tmp_path, cfg):
-    """Streaming frontier ingest: in-batch dups, cross-batch dups and
-    canonicalization-equivalent urls all collapse; the persistent store
-    ends with exactly the distinct canon set, first batch wins."""
-    import os
-
-    from frontier_engine.config import EngineConfig
-    from frontier_engine.streaming import frontier_ingest_stream
-
-    scfg = EngineConfig(n_seen_shards=4, bloom_bits_per_shard=1 << 14)
-    slices = [
-        ["https://a.example/p/1?x=1&y=2", "https://a.example/p/2", "https://a.example/p/1?x=1&y=2"],
-        ["https://a.example/p/1?y=2&x=1", "https://b.example/q"],   # canon dup of slice-0 + new
-        ["https://b.example/q", "https://c.example/r"],             # cross-batch dup + new
-    ]
-    src = _mk_url_slices(spark, tmp_path, slices)
-    root = os.path.join(str(tmp_path), "ingest")
-    q = frontier_ingest_stream(
-        spark, src, root, os.path.join(str(tmp_path), "ck"), scfg
-    )
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(os.path.join(root, "unseen"))
-    got = {(r.url, r.batch_id) for r in out.select("url", "batch_id").collect()}
-    assert got == {
-        ("https://a.example/p/1?x=1&y=2", 0),
-        ("https://a.example/p/2", 0),
-        ("https://b.example/q", 1),
-        ("https://c.example/r", 2),
-    }
-    # the persistent store, reloaded from the stream's meta (which holds
-    # the seen store and nothing else), has exactly the distinct canon set
-    import json
-
-    from frontier_engine.seen_store import SeenExactStore
-
-    with open(os.path.join(root, "ingest_meta.json")) as f:
-        meta = json.load(f)
-    assert list(meta) == ["seen"]
-    store = SeenExactStore.from_meta(spark, os.path.join(root, "seen"), meta["seen"])
-    canon = [r.canon_url for r in store.as_df().collect()]
-    assert len(canon) == len(set(canon)) == 4
-
-
-def test_frontier_ingest_stream_resumes_from_checkpoint(spark, tmp_path):
-    """Stop after the first batch set, drop MORE files, restart with the
-    same checkpoint: only the new files process, the store keeps its
-    earlier state, and cross-restart dups still collapse."""
-    import os
-    import time
-
-    from frontier_engine.config import EngineConfig
-    from frontier_engine.streaming import frontier_ingest_stream
-
-    scfg = EngineConfig(n_seen_shards=4, bloom_bits_per_shard=1 << 14)
-    src = _mk_url_slices(spark, tmp_path, [["https://a.example/1", "https://a.example/2"]])
-    root = os.path.join(str(tmp_path), "ingest")
-    ck = os.path.join(str(tmp_path), "ck")
-    q = frontier_ingest_stream(spark, src, root, ck, scfg)
-    q.awaitTermination(120)
-
-    # second wave: one dup of wave 1, one new
-    import glob, shutil
-    df = spark.createDataFrame([("https://a.example/2",), ("https://b.example/3",)], "url string")
-    d = os.path.join(str(tmp_path), "w-extra")
-    df.coalesce(1).write.mode("overwrite").parquet(d)
-    dst = os.path.join(src, "slice-9.parquet")
-    shutil.move(glob.glob(os.path.join(d, "part-*.parquet"))[0], dst)
-    os.utime(dst, (time.time() + 60, time.time() + 60))
-
-    q2 = frontier_ingest_stream(spark, src, root, ck, scfg)
-    q2.awaitTermination(120)
-
-    out = spark.read.parquet(os.path.join(root, "unseen"))
-    urls = sorted(r.url for r in out.select("url").collect())
-    assert urls == ["https://a.example/1", "https://a.example/2", "https://b.example/3"]
-    # the dup url appears exactly once, from the FIRST run's batch
-    assert out.where("url = 'https://a.example/2'").select("batch_id").first()[0] == 0
 
 
 def test_streaming_crawl_equals_batch_crawl(spark, tmp_path_factory):

@@ -1,12 +1,10 @@
-"""Crawl-trap guards (traps.py): template shaping, structural flags,
-salted per-family admission cap."""
+"""Crawl-trap guards (traps.py): template shaping and the salted
+per-family admission cap."""
 
 from pyspark.sql import functions as F
 
 from frontier_engine.traps import (
     cap_per_template,
-    path_trap_flags,
-    split_path_traps,
     template_report,
     url_template,
 )
@@ -31,32 +29,6 @@ def test_url_template_shapes(spark):
     assert _tpl(spark, "https://a.example/p/17/x") != _tpl(spark, "https://a.example/p/17")
     # no path at all
     assert _tpl(spark, "https://h.example") == ""
-
-
-def test_path_trap_flags(spark):
-    rows = spark.createDataFrame(
-        [
-            ("https://h/a/b/b/b", True),       # 3 consecutive repeats
-            ("https://h/a/b/b/c?x=/y/y/y", False),  # query ignored; 2 repeats pass
-            ("https://h/a/b/a/b", False),      # alternation is not repetition
-            ("https://h/" + "/".join(["s"] * 20), True),  # also too_deep
-        ],
-        "url string, want boolean",
-    ).select("url", "want", path_trap_flags(F.col("url")).alias("f"))
-    for r in rows.collect():
-        assert (r["f"]["too_deep"] or r["f"]["repeated_path"]) == r["want"], r["url"]
-    deep = spark.range(1).select(
-        path_trap_flags(F.lit("https://h/" + "/".join(f"s{i}" for i in range(17)))).alias("f")
-    ).collect()[0]["f"]
-    assert deep["too_deep"] and not deep["repeated_path"]
-
-
-def test_split_path_traps_counts(spark):
-    df = spark.createDataFrame(
-        [("https://h/a/b",), ("https://h/x/x/x",), ("https://h/ok/1/2",)], "url string"
-    )
-    ok, trapped = split_path_traps(df)
-    assert ok.count() == 2 and trapped.count() == 1
 
 
 def _families(spark):
