@@ -1462,6 +1462,19 @@ def _write_slice(df, src_dir: str, name: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _state_dir(prefix: str) -> str:
+    """A stream query's state root (input slices, checkpoint, output). The
+    returned frame still reads its output, so the root is removed at
+    interpreter exit rather than when the query returns."""
+    import atexit
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
 def q_stream_sessionize(spark, sf_dir):
     """ST2: gap-sessionization as a CUSTOM STATEFUL streaming operator
     (applyInPandasWithState + event-time timeout), fed as four
@@ -1469,7 +1482,6 @@ def q_stream_sessionize(spark, sf_dir):
     per-user aggregate must equal the batch lag+cumsum twin
     (events_sessionize — same oracle SQL)."""
     import datetime
-    import tempfile
 
     from frontier_engine.streaming import run_stream_to_parquet, sessionize_stateful
 
@@ -1479,7 +1491,7 @@ def q_stream_sessionize(spark, sf_dir):
         F.col("ts").cast("timestamp").alias("ts"),
     )
     mn, mx = e.agg(F.min("ts"), F.max("ts")).first()
-    root = tempfile.mkdtemp(prefix="stream-sess-")
+    root = _state_dir("stream-sess-")
     src = os.path.join(root, "in")
     os.makedirs(src)
     span = (mx - mn).total_seconds() or 1.0
@@ -1514,12 +1526,10 @@ def q_stream_dedup(spark, sf_dir):
     """ST2/D1: first-seen-wins URL dedup as a stateful streaming operator —
     two overlapping frontier batches arrive as separate micro-batches; the
     emitted set must be exactly the distinct union (SQL oracle)."""
-    import tempfile
-
     from frontier_engine.streaming import dedup_stateful, run_stream_to_parquet
 
     fr = _frontier(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream-dedup-")
+    root = _state_dir("stream-dedup-")
     src = os.path.join(root, "in")
     os.makedirs(src)
     a = fr.where(F.col("discovered_seq") % 2 == 0)

@@ -3,7 +3,6 @@ analyzed plans for the scale-critical paths and grep them for the
 anti-patterns the 100 TB story forbids (unexpected Exchanges, Python
 nodes in the frontier path, single-partition windows)."""
 import os
-import sys
 import tempfile
 
 from pyspark.sql import functions as F

@@ -6,6 +6,7 @@
 set -euo pipefail
 cd "$(dirname "$0")"
 WORK=$(mktemp -d)
+trap 'rm -rf "$WORK"' EXIT
 zip -qr "$WORK/frontier_engine.zip" frontier_engine
 cp run_crawl_cli.py "$WORK/"
 cd "$WORK"   # ensure imports come from the zip, not the repo checkout
@@ -14,4 +15,5 @@ cd "$WORK"   # ensure imports come from the zip, not the repo checkout
   --conf spark.ui.enabled=false \
   --conf spark.sql.shuffle.partitions=16 \
   --py-files "$WORK/frontier_engine.zip" \
-  "$WORK/run_crawl_cli.py" --demo-world "$WORK/world" --max-rounds 4
+  "$WORK/run_crawl_cli.py" --demo-world "$WORK/world" \
+  --snapshot-dir "$WORK/snap" --max-rounds 4

@@ -1,6 +1,6 @@
 """Steady-state frontier scheduling probe: N rounds of 1M candidate URLs
 against a GROWING bucketed seen store (50% dups per round), measuring
-per-round wall time and per-round COMMIT BYTES — the evidence that round
+per-round wall time, CPU and COMMIT BYTES — the evidence that round
 cost scales with the batch, not the accumulated state (VERDICT r1 items
 #1/#6 at multi-round scale; bench.py measures a single round).
 
@@ -9,7 +9,10 @@ index of its base (``store.bloom()``), so a round writes its delta only
 and the bloom is rewritten only when a compaction rewrites the base.
 
 Run: python scripts_steady_state_probe.py [rounds] [urls_per_round]
-Prints one JSON line per round + a summary line.
+Prints one JSON line per round + a summary line. A round line's
+``cpu_s`` is the CPU seconds the whole process tree (this Python, the JVM,
+the Python workers) used since the previous line; the first round's is
+counted from the end of set-up (session and store creation).
 """
 import json
 import os
@@ -26,6 +29,7 @@ from frontier_engine.config import EngineConfig
 from frontier_engine.schedule import rank_batch
 from frontier_engine.seen_store import SeenExactStore
 from frontier_engine.session import get_spark
+from perfbench.tracing import tree_cpu_s
 
 
 def dir_bytes(*paths) -> int:
@@ -52,6 +56,7 @@ def main():
     )
 
     summary = []
+    cpu_prev = tree_cpu_s()
     for r in range(rounds + 1):
         # round r's candidates: urls [r*n/2, r*n/2 + n) — 50% seen before.
         # The FINAL extra round is SPARSE (64 new urls): its commit must
@@ -97,11 +102,13 @@ def main():
         if compacted:
             new_paths = [store.base_path, store.bloom_path]
         commit_bytes = dir_bytes(*new_paths)
+        cpu_now = tree_cpu_s()
         row = {
             "round": r, "candidates": n_r, "batch": n_batch,
             "seen_total": store._base_rows + store._delta_rows,
             "t_schedule_s": round(t_sched, 2), "t_commit_s": round(t_commit, 2),
             "urls_per_sec": round(n_r / (t_sched + t_commit), 1),
+            "cpu_s": round(cpu_now - cpu_prev, 2),
             "commit_mb": round(commit_bytes / 1e6, 1),
             "bloom_mb": round(dir_bytes(store.bloom_path) / 1e6, 1) if compacted else 0.0,
             "compacted": compacted,
@@ -110,6 +117,7 @@ def main():
         }
         summary.append(row)
         print(json.dumps(row), flush=True)
+        cpu_prev = cpu_now
 
     steady = [r for r in summary[1:] if not r["compacted"] and not r["sparse"]]
     print(json.dumps({

@@ -389,7 +389,7 @@ def test_no_unused_imports():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     found = [
         f"{os.path.relpath(path, root)}:{ln} {name}"
-        for pattern in ("frontier_engine/*.py", "tests/*.py")
+        for pattern in ("*.py", "frontier_engine/*.py", "tests/*.py")
         for path in sorted(glob.glob(os.path.join(root, pattern)))
         for ln, name in _unused_imports(path)
     ]
